@@ -41,31 +41,68 @@ object Tables {
     "embeddings" -> Seq("vec_id"),
     "events"     -> Seq("event_id"))
 
-  /** (row groups, bytes) per parquet path, memoized per application —
-    * an O(#files) footer read, the same metadata a planner touches.
+  /** Footer metadata of one parquet path: row groups and bytes summed
+    * over its data files, and the file metadata (parquet schema plus
+    * key-value metadata) of the first data file — the file Spark's
+    * non-merging schema inference reads.
     */
-  private val layoutMemo =
-    new scala.collection.concurrent.TrieMap[(String, String), (Int, Long)]
+  private final case class ParquetMeta(groups: Int, bytes: Long,
+      fileMeta: org.apache.parquet.hadoop.metadata.FileMetaData)
 
-  private def parquetLayout(s: SparkSession, path: String): (Int, Long) =
-    layoutMemo.getOrElseUpdate((s.sparkContext.applicationId, path), {
-      val conf = s.sessionState.newHadoopConf()
-      val p    = new org.apache.hadoop.fs.Path(path)
-      val fs   = p.getFileSystem(conf)
-      val files: Seq[org.apache.hadoop.fs.FileStatus] =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).toSeq.filter(f =>
-            f.isFile && f.getPath.getName.endsWith(".parquet"))
-        else Seq(fs.getFileStatus(p))
-      var groups = 0
-      files.foreach { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(f.getPath, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try groups += r.getRowGroups.size finally r.close()
-      }
-      (groups, files.map(_.getLen).sum)
-    })
+  /** path → (every data file's (name, length, mtime), its metadata): an
+    * O(#files) footer read on the driver, no Spark job. A rewritten file
+    * changes the stamp and is read again. This is planner metadata, not
+    * cached data — scans still read the files.
+    */
+  private val metaMemo = new scala.collection.concurrent.TrieMap[
+    String, (Seq[(String, Long, Long)], ParquetMeta)]
+
+  private def parquetMeta(s: SparkSession, path: String): ParquetMeta = {
+    val conf = s.sessionState.newHadoopConf()
+    val p    = new org.apache.hadoop.fs.Path(path)
+    val fs   = p.getFileSystem(conf)
+    val files: Seq[org.apache.hadoop.fs.FileStatus] =
+      if (fs.getFileStatus(p).isDirectory)
+        fs.listStatus(p).toSeq.filter(f =>
+          f.isFile && f.getPath.getName.endsWith(".parquet"))
+          .sortBy(_.getPath.getName)
+      else Seq(fs.getFileStatus(p))
+    require(files.nonEmpty, s"no parquet data files under $path")
+    val stamp = files.map(f =>
+      (f.getPath.getName, f.getLen, f.getModificationTime))
+    metaMemo.get(path) match {
+      case Some((st, meta)) if st == stamp => meta
+      case _ =>
+        val footers = files.map { f =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+          try (r.getRowGroups.size, r.getFooter.getFileMetaData)
+          finally r.close()
+        }
+        val meta = ParquetMeta(footers.map(_._1).sum,
+          files.map(_.getLen).sum, footers.head._2)
+        metaMemo.put(path, (stamp, meta))
+        meta
+    }
+  }
+
+  /** `path`'s Spark schema, converted from the memoized footer under the
+    * CURRENT session conf by Spark's own converter — the schema
+    * inference would give (including `nanosAsLong` and the schema Spark
+    * writes into its own files' key-value metadata), without the
+    * inference job.
+    */
+  private def parquetSchema(s: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val footer = new org.apache.parquet.hadoop.Footer(
+      new org.apache.hadoop.fs.Path(path),
+      new org.apache.parquet.hadoop.metadata.ParquetMetadata(
+        parquetMeta(s, path).fileMeta, java.util.Collections.emptyList()))
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(s.sessionState.conf))
+  }
 
   /** Tables below this size are never spread: the repartition exchange
     * costs more than the single-task scan it parallelizes (nation,
@@ -86,8 +123,8 @@ object Tables {
   def scanStarved(s: SparkSession, sfDir: String, name: String): Boolean = {
     if (!s.conf.get(SpreadConfKey, "true").toBoolean) return false
     val floor = s.conf.get(SpreadMinBytesConfKey, SpreadMinBytes.toString).toLong
-    val (groups, bytes) = parquetLayout(s, s"$sfDir/$name.parquet")
-    groups < s.sparkContext.defaultParallelism && bytes >= floor
+    val meta  = parquetMeta(s, s"$sfDir/$name.parquet")
+    meta.groups < s.sparkContext.defaultParallelism && meta.bytes >= floor
   }
 
   /** Total on-disk bytes of `name`'s parquet under `sfDir` (memoized
@@ -98,7 +135,7 @@ object Tables {
     * directories.
     */
   def tableBytes(s: SparkSession, sfDir: String, name: String): Long =
-    parquetLayout(s, s"$sfDir/$name.parquet")._2
+    parquetMeta(s, s"$sfDir/$name.parquet").bytes
 
   /** OPT-IN scale-adaptive spread for a compute-heavy scan-fused stage
     * (optimization guide §2.5, "input skew: one huge unsplittable file
@@ -136,15 +173,14 @@ object Tables {
     else df.repartition(par)
   }
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
-
-  /** The bare scan, never spread — for operators whose SEMANTICS ride
-    * the scan itself (q_file_lineage's input_file_name() column does
-    * not survive an exchange).
+  /** `name`'s parquet under `sfDir` as a bare scan (never spread — see
+    * [[spreadForCompute]]), read with the footer-derived schema: no
+    * schema-inference job.
     */
-  def tableRaw(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -324,7 +324,10 @@ object Distributed {
           if (2 * (cum + c) >= totals(g)) found = Some((bk, cum))
           else cum += c
         }
-        val (bk, cumBefore) = found.get // crossing exists: Σc = n_g
+        require(found.isDefined, s"groupedLowerMedianLong: group '$g' " +
+          s"never reaches half its total weight ${totals(g)}; statsIn " +
+          "totals must equal the exact summed weight of each group")
+        val (bk, cumBefore) = found.get
         before += g -> cumBefore
         conds += g -> (conds(g) && (shiftright(v, sh) === lit(bk)))
         if (sh == 0) result += g -> bk

@@ -363,9 +363,9 @@ object Relational {
     "q_file_lineage",
     (s, d) =>
       Tables
-        // raw scan: input_file_name() is scan-local and would return ''
-        // past the spread exchange
-        .tableRaw(s, d, "lineitem")
+        // bare scan, never spread: input_file_name() is scan-local and
+        // would return '' past the spread exchange
+        .table(s, d, "lineitem")
         .select(
           regexp_extract(input_file_name(), "([a-z_]+)\\.parquet", 1)
             .as("table_name")

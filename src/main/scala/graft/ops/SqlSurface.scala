@@ -1,27 +1,48 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
 
 /** SQL-text entry points: the reference's users write SQL against the
   * DuckDB host, so the rebuilt engine must answer the same queries via
-  * `spark.sql`. Tables are registered as temp views per scale dir, and
-  * the Spark SQL text is near-verbatim the oracle SQL (dialect-shared
-  * subset).
+  * `spark.sql`. The fixture tables a query names are registered as temp
+  * views over its scale dir, and the Spark SQL text is near-verbatim the
+  * oracle SQL (dialect-shared subset).
   */
 object SqlSurface {
 
-  private def registerViews(s: SparkSession, d: String): Unit =
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents").foreach { t =>
-      Tables.table(s, d, t).createOrReplaceTempView(t)
-    }
+  private val fixtureTables = Set("region", "nation", "customer",
+    "supplier", "part", "orders", "lineitem", "documents")
 
-  private def sqlQ(name: String, sparkSql: String, duckSql: Option[String] = None,
-      bench: Boolean = false): Q =
+  /** Relation names `plan` reads, CTE bodies included: the parser keeps
+    * those in `UnresolvedWith.cteRelations`, which are neither children
+    * nor subquery expressions, so `collectWithSubqueries` alone misses
+    * them.
+    */
+  private def relationsNamed(plan: LogicalPlan): Seq[String] =
+    plan.collectWithSubqueries {
+      case r: UnresolvedRelation =>
+        Seq(r.multipartIdentifier.last.toLowerCase(java.util.Locale.ROOT))
+      case w: UnresolvedWith => w.cteRelations.flatMap(c => relationsNamed(c._2))
+    }.flatten
+
+  /** Registers as temp views exactly the fixture tables `sql` names. */
+  private def registerViews(s: SparkSession, d: String, sql: String): Unit =
+    relationsNamed(s.sessionState.sqlParser.parsePlan(sql)).distinct
+      .filter(fixtureTables).foreach { t =>
+        Tables.table(s, d, t).createOrReplaceTempView(t)
+      }
+
+  /** A query whose Spark side is `sparkSql` over the fixture views; the
+    * oracle runs `duckSql`, or the same text when that is shared.
+    */
+  private[ops] def sqlQ(name: String, sparkSql: String,
+      duckSql: Option[String] = None, bench: Boolean = false): Q =
     Q(
       name,
-      (s, d) => { registerViews(s, d); s.sql(sparkSql) },
+      (s, d) => { registerViews(s, d, sparkSql); s.sql(sparkSql) },
       Some(duckSql.getOrElse(sparkSql)),
       bench)
 

@@ -1,7 +1,7 @@
 package graft.ops
 
-import graft.{Q, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.Q
+import SqlSurface.sqlQ
 
 /** TPC-H-shaped SQL surface, part 2 — the decision-support query shapes
   * not yet covered by [[SqlSurface]]: EXISTS / NOT EXISTS semi- and
@@ -27,20 +27,6 @@ import org.apache.spark.sql.SparkSession
   *   of qty < 0.2 * avg).
   */
 object SqlSurface2 {
-
-  private def registerViews(s: SparkSession, d: String): Unit =
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents").foreach { t =>
-      Tables.table(s, d, t).createOrReplaceTempView(t)
-    }
-
-  private def sqlQ(name: String, sparkSql: String,
-      duckSql: Option[String] = None, bench: Boolean = false): Q =
-    Q(
-      name,
-      (s, d) => { registerViews(s, d); s.sql(sparkSql) },
-      Some(duckSql.getOrElse(sparkSql)),
-      bench)
 
   /** q_sql_pricing_summary — the full TPC-H Q1 pricing-summary report:
     * all eight aggregates (conditional sums, three averages, count) per

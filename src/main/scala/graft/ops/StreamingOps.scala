@@ -1532,7 +1532,7 @@ object StreamingOps {
   val qStreamCrossmodal = Q(
     "q_stream_crossmodal",
     (s, d) => {
-      val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
+      val docsSchema = Tables.documents(s, d).schema
       val (emb, embRows) = Similarity.crossmodalEmb(s, d)
       val stream = s.readStream
         .schema(docsSchema)

@@ -86,6 +86,18 @@ class RadixMedianSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == want, s"got $got want $want")
   }
 
+  test("groupedLowerMedianLong names the group whose statsIn total " +
+    "exceeds its summed weight") {
+    import spark.implicits._
+    val df = Seq(("A", 1L, 1L), ("A", 2L, 1L)).toDF("g", "v", "w")
+    val e = intercept[IllegalArgumentException] {
+      ops.Distributed.groupedLowerMedianLong(df, col("g"), col("v"),
+        col("w"), statsIn = Some(Seq(("A", 100L, 1L, 2L))))
+    }
+    assert(e.getMessage.contains("group 'A'"), e.getMessage)
+    assert(e.getMessage.contains("exact summed weight"), e.getMessage)
+  }
+
   test("spreadForCompute fires only on row-group-starved big files " +
     "and is value-neutral") {
     import spark.implicits._
@@ -96,7 +108,7 @@ class RadixMedianSpec extends AnyFunSuite with BeforeAndAfterAll {
         concat(lit("x"), col("id")).as("text"))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val bare = Tables.tableRaw(spark, dir.toString, "documents")
+    val bare = Tables.table(spark, dir.toString, "documents")
     val spreadDf = Tables.spreadForCompute(
       bare, spark, dir.toString, "documents")
     assert(spreadDf.rdd.getNumPartitions ==
@@ -109,7 +121,7 @@ class RadixMedianSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set(Tables.SpreadConfKey, "false")
     try {
       val off = Tables.spreadForCompute(
-        Tables.tableRaw(spark, dir.toString, "documents"),
+        Tables.table(spark, dir.toString, "documents"),
         spark, dir.toString, "documents")
       assert(!off.queryExecution.executedPlan.toString
         .contains("Exchange"), "conf off must not insert an exchange")
@@ -119,7 +131,7 @@ class RadixMedianSpec extends AnyFunSuite with BeforeAndAfterAll {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/tiny.parquet")
     val tiny = Tables.spreadForCompute(
-      Tables.tableRaw(spark, dir.toString, "tiny"),
+      Tables.table(spark, dir.toString, "tiny"),
       spark, dir.toString, "tiny")
     assert(!tiny.queryExecution.executedPlan.toString.contains("Exchange"),
       "sub-floor file must not spread")
