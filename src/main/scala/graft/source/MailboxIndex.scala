@@ -447,14 +447,14 @@ object MailboxIndex {
     * indexed (planning afterwards is O(#files) forever).
     */
   def indexAll(spark: SparkSession, pattern: String): Long = {
-    val conf  = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val files = MailboxPlanner.globStatuses(pattern, conf.value).map(_._1)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val files = MailboxPlanner.globStatuses(pattern, hadoopConf).map(_._1)
+    val conf  = MailboxPlanner.broadcastConf(hadoopConf)
     spark.sparkContext
       .parallelize(files, math.max(1, files.length))
       .map { f =>
         val p  = new Path(f)
-        val fs = p.getFileSystem(conf.value)
+        val fs = p.getFileSystem(conf.value.value)
         write(fs, p, build(fs, p))
         1L
       }

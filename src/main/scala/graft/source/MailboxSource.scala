@@ -13,6 +13,7 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -38,7 +39,10 @@ import graft.model.MailboxSchema.Mode
   * scans `*.mbx` mailbox dumps with:
   *  - file globbing / multi-file scan over any Hadoop FileSystem scheme
   *    (A2, A19; reference reads PST over any DuckDB filesystem,
-  *    duckdb_filesystem.cpp:12-36),
+  *    duckdb_filesystem.cpp:12-36). The session's Hadoop conf, schemes
+  *    set with `spark.conf.set("fs.<scheme>.impl", …)` included, is
+  *    broadcast once per scan: inlined in the reader factory, its ~1,100
+  *    properties (~110 KB) would be Java-deserialized again by every task,
   *  - O(#files) planning: with `.idx` sidecars (see [[MailboxIndex]])
   *    planning reads only per-file metadata — the analog of the
   *    reference enumerating PST index nodes without reading message
@@ -336,6 +340,13 @@ object MailboxPlanner {
     SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
+
+  /** Ships `conf` to executors once, as Spark's own file scans do. Tasks
+    * read it from the block manager; anything a reader factory or RDD
+    * closure holds is Java-deserialized once per task instead.
+    */
+  def broadcastConf(conf: Configuration): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
 
   /** First-record probe: read ≤160 bytes and require the mailbox line
     * shape (A20 — the analog of the reference failing the PST header
@@ -894,10 +905,11 @@ class MailboxScan(
         Array[Array[Long]], Array[Array[Boolean]])] = None)
   extends Scan with Batch with SupportsReportStatistics {
 
-  // captured at plan time on the driver; shipped to executors so custom
-  // FileSystem schemes configured on the session work in readers (A19)
-  private val serConf = new SerializableConfiguration(
-    MailboxPlanner.activeHadoopConf())
+  // captured at plan time on the driver, so custom FileSystem schemes
+  // configured on the session work in readers (A19); broadcast once per
+  // scan, because BatchScanExec and AQE may ask for the factory again
+  private val hadoopConf = MailboxPlanner.activeHadoopConf()
+  private lazy val confBroadcast = MailboxPlanner.broadcastConf(hadoopConf)
 
   private lazy val planned: MailboxPlanner.PlanResult = {
     val effective = limit match {
@@ -905,7 +917,7 @@ class MailboxScan(
         math.min(l, opts.readLimit).toString))
       case None => opts
     }
-    MailboxPlanner.plan(effective, filter, serConf.value)
+    MailboxPlanner.plan(effective, filter, hadoopConf)
   }
 
   override def readSchema(): StructType = (pushedStats, pushedGroups) match {
@@ -936,7 +948,7 @@ class MailboxScan(
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new MailboxReaderFactory(readSchema(), opts, filter, countStar, serConf)
+    new MailboxReaderFactory(readSchema(), opts, filter, countStar, confBroadcast)
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
     MailboxMetrics.all
@@ -986,9 +998,10 @@ class MailboxReaderFactory(
     opts: MailboxOptions,
     filter: RecordFilter,
     countStar: Boolean,
-    serConf: SerializableConfiguration) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[MailboxPartition]
+    lazy val hadoopConf = conf.value.value
     p match {
       case sp: StaticStatsPartition =>
         return new StaticStatsReader(sp.values, sp.nulls)
@@ -1001,16 +1014,16 @@ class MailboxReaderFactory(
       case ip: IndexedPartition    => new StaticCountReader(ip.takeMatching)
       case ep: EnumeratedPartition => new StaticCountReader(ep.offsets.length.toLong)
       case rp: RangePartition      =>
-        new RangeCountReader(rp, opts, filter, serConf.value)
+        new RangeCountReader(rp, opts, filter, hadoopConf)
       case pp: PstPartition =>
         if (pp.exact) new StaticCountReader(pp.nodeIds.length.toLong)
-        else new PstCountReader(pp, opts, filter, serConf.value)
+        else new PstCountReader(pp, opts, filter, hadoopConf)
     }
     else p match {
       case pp: PstPartition =>
-        new PstPartitionReader(pp, readSchema, opts, filter, serConf.value)
+        new PstPartitionReader(pp, readSchema, opts, filter, hadoopConf)
       case _ =>
-        new MailboxPartitionReader(p, readSchema, opts, filter, serConf.value)
+        new MailboxPartitionReader(p, readSchema, opts, filter, hadoopConf)
     }
   }
 }

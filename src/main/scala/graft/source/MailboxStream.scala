@@ -4,7 +4,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 /** Streaming extension of the mailbox source (beyond the batch-only
   * reference): new mailbox files appearing under the glob — `.mbx`
@@ -22,8 +21,7 @@ class MailboxMicroBatchStream(
     readSchema: StructType,
     filter: RecordFilter) extends MicroBatchStream {
 
-  private val serConf = new SerializableConfiguration(
-    MailboxPlanner.activeHadoopConf())
+  private val hadoopConf = MailboxPlanner.activeHadoopConf()
 
   /** Offset = files seen so far. Serialized as a SINGLE-LINE JSON array:
     * Spark's OffsetSeqLog is line-oriented (one offset JSON per line), so
@@ -54,7 +52,7 @@ class MailboxMicroBatchStream(
   override def initialOffset(): Offset = FilesOffset(Nil)
 
   override def latestOffset(): Offset =
-    FilesOffset(MailboxPlanner.globStatuses(opts.path, serConf.value).map(_._1))
+    FilesOffset(MailboxPlanner.globStatuses(opts.path, hadoopConf).map(_._1))
 
   override def deserializeOffset(json: String): Offset =
     FilesOffset(FilesOffset.parse(json))
@@ -67,7 +65,7 @@ class MailboxMicroBatchStream(
       // plan only the new files, one glob-free pass each
       val perFile = newOnes.sorted.flatMap { f =>
         MailboxPlanner
-          .plan(MailboxOptions(opts.raw + ("path" -> f)), filter, serConf.value)
+          .plan(MailboxOptions(opts.raw + ("path" -> f)), filter, hadoopConf)
           .partitions
       }
       perFile.zipWithIndex
@@ -81,8 +79,10 @@ class MailboxMicroBatchStream(
     }
   }
 
+  // called once per micro-batch: one broadcast per batch
   override def createReaderFactory(): PartitionReaderFactory =
-    new MailboxReaderFactory(readSchema, opts, filter, countStar = false, serConf)
+    new MailboxReaderFactory(readSchema, opts, filter, countStar = false,
+      MailboxPlanner.broadcastConf(hadoopConf))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
