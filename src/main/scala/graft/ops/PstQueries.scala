@@ -5,16 +5,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Real-PST-binary queries wired into the driver contract: the mailbox
-  * DSv2 source reading the reference's checked-in `test/unittest.pst`
-  * through the full MS-PST parse (NDB b-trees → heap-on-node → property
-  * contexts; graft.source.pst). DuckDB cannot read PST, so the oracles
-  * are the reference's own golden outputs
+  * DSv2 source reading `fixtures/mailbox/unittest.pst`, the committed
+  * Unicode re-emission of the reference's `test/unittest.pst` (same
+  * logical NDB content; FIXTURES.md §1), through the full MS-PST parse
+  * (NDB b-trees → heap-on-node → property contexts;
+  * graft.source.pst). Paths are relative to the repository root, the
+  * working directory of `graft.Verify` and the tests. DuckDB cannot
+  * read PST, so the oracles are the reference's own golden outputs
   * (test/sql/read_unittest_pst.test, table_function_parameters.test) as
   * typed VALUES relations — Spark must reproduce them bit-exactly.
   */
 object PstQueries {
 
-  private val pstFile = "/root/reference/test/unittest.pst"
+  private val pstFile = "fixtures/mailbox/unittest.pst"
 
   private def read(s: SparkSession, mode: String,
       options: Map[String, String] = Map.empty): DataFrame = {
@@ -216,13 +219,13 @@ object PstQueries {
   )
 
   // ── ANSI (pre-Outlook-2003) format ────────────────────────────────
-  // The committed fixture is a structural ANSI re-emission of the same
-  // unittest mailbox (fixtures/mailbox/unittest_ansi.pst, written by
-  // the test-side AnsiPstWriter), so the reference's golden outputs
-  // apply unchanged: the 32-bit NDB parse must reproduce them
-  // bit-exactly, same as the Unicode branch.
+  // The committed fixture is the ANSI twin of the same unittest mailbox
+  // (fixtures/mailbox/unittest_ansi.pst; the test-side PstWriter
+  // converts it to and from the Unicode file bit-for-bit), so the
+  // reference's golden outputs apply unchanged: the 32-bit NDB parse
+  // must reproduce them bit-exactly, same as the Unicode branch.
 
-  private val ansiFile = "/root/repo/fixtures/mailbox/unittest_ansi.pst"
+  private val ansiFile = "fixtures/mailbox/unittest_ansi.pst"
 
   private def readAnsi(s: SparkSession, mode: String): DataFrame =
     s.read.format("mailbox").option("mode", mode).load(ansiFile)

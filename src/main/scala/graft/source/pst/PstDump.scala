@@ -3,11 +3,12 @@ package graft.source.pst
 import org.apache.hadoop.conf.Configuration
 
 /** Debug CLI: dump folder/message rows of a PST (used while validating
-  * against the reference's golden expectations).
+  * against the reference's golden expectations). Defaults to the
+  * committed Unicode unittest fixture.
   */
 object PstDump {
   def main(args: Array[String]): Unit = {
-    val path = if (args.nonEmpty) args(0) else "/root/reference/test/unittest.pst"
+    val path = if (args.nonEmpty) args(0) else "fixtures/mailbox/unittest.pst"
     val pst = PstFile.open(path, new Configuration())
     try {
       val r = new PstReader(pst)

@@ -17,10 +17,12 @@ import org.apache.hadoop.fs.{FSDataInputStream, Path}
   *
   * The layout follows the public MS-PST specification; all offsets and
   * structures were additionally validated against the reference's
-  * checked-in `test/unittest.pst` fixture (CRC of every block verified
-  * with the spec's CRC algorithm — see PstFileSpec), and the ANSI
-  * branch against a structurally re-emitted ANSI twin of that fixture
-  * (see AnsiPstWriter / PstAnsiSpec).
+  * checked-in `test/unittest.pst` fixture. The repository holds that
+  * fixture's logical NDB content as two re-emissions, Unicode
+  * (`fixtures/mailbox/unittest.pst`) and ANSI
+  * (`fixtures/mailbox/unittest_ansi.pst`), which the test-side
+  * PstWriter converts into each other bit-for-bit (PstFileSpec,
+  * PstAnsiSpec; FIXTURES.md §1).
   */
 object PstCrypt {
 

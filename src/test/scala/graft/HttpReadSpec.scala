@@ -30,7 +30,7 @@ class HttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var port: Int = 0
 
   private val served = Map(
-    "/unittest.pst"    -> "/root/reference/test/unittest.pst",
+    "/unittest.pst"    -> "fixtures/mailbox/unittest.pst",
     "/synth_a.mbx"     -> "fixtures/mailbox/synth_a.mbx",
     "/synth_a.mbx.idx" -> "fixtures/mailbox/synth_a.mbx.idx"
   )
@@ -87,7 +87,7 @@ class HttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val remote = read("contacts", url)
       .select("given_name", "surname").orderBy("given_name")
       .collect().map(r => (r.getString(0), r.getString(1)))
-    val local = read("contacts", "/root/reference/test/unittest.pst")
+    val local = read("contacts", "fixtures/mailbox/unittest.pst")
       .select("given_name", "surname").orderBy("given_name")
       .collect().map(r => (r.getString(0), r.getString(1)))
 
@@ -164,7 +164,7 @@ class HttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     tls.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val bytes = Files.readAllBytes(
-          Paths.get("/root/reference/test/unittest.pst"))
+          Paths.get("fixtures/mailbox/unittest.pst"))
         ex.sendResponseHeaders(200, bytes.length.toLong)
         ex.getResponseBody.write(bytes)
         ex.close()
@@ -179,7 +179,7 @@ class HttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
         .load(url)
         .select("given_name", "surname").orderBy("given_name")
         .collect().map(r => (r.getString(0), r.getString(1)))
-      val local = read("contacts", "/root/reference/test/unittest.pst")
+      val local = read("contacts", "fixtures/mailbox/unittest.pst")
         .select("given_name", "surname").orderBy("given_name")
         .collect().map(r => (r.getString(0), r.getString(1)))
       assert(remote.nonEmpty && remote.sameElements(local))

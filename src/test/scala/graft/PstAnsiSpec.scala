@@ -7,20 +7,24 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.source.pst.{AnsiPstWriter, PstFile}
+import graft.source.pst.{PstFile, PstWriter}
 
 /** ANSI (pre-Outlook-2003, wVer 14/15, 32-bit) PST format support.
   *
-  * No public ANSI fixture exists — the reference's `unittest.pst` is
-  * Unicode — so AnsiPstWriter re-emits that file's complete logical
-  * NDB content in the ANSI on-disk layout, and these tests require the
-  * ANSI branch of the reader to reproduce the Unicode parse exactly:
-  * same nodes, same bytes, same DataFrames through every scan mode.
+  * The repository holds the unittest mailbox twice, as a pair that
+  * PstWriter converts into each other bit-for-bit:
+  * `fixtures/mailbox/unittest_ansi.pst` (ANSI, the root of provenance)
+  * and `fixtures/mailbox/unittest.pst` (Unicode, re-emitted from it).
+  * These tests convert the committed Unicode file to ANSI afresh and
+  * require the ANSI branch of the reader to reproduce the Unicode parse
+  * exactly: same nodes, same bytes, same DataFrames through every scan
+  * mode; and they hold both committed files equal to a fresh
+  * conversion of the other.
   */
 class PstAnsiSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
-  private val unicodeFixture = "/root/reference/test/unittest.pst"
-  private val committedAnsi  = "/root/repo/fixtures/mailbox/unittest_ansi.pst"
+  private val unicodeFixture = "fixtures/mailbox/unittest.pst"
+  private val committedAnsi  = "fixtures/mailbox/unittest_ansi.pst"
 
   lazy val spark: org.apache.spark.sql.SparkSession = org.apache.spark.sql.SparkSession
     .builder()
@@ -34,12 +38,20 @@ class PstAnsiSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
   override def afterAll(): Unit = spark.stop()
 
-  private lazy val freshAnsi: String = {
+  private def fresh(src: String, name: String, ansi: Boolean): String = {
     val dir = Files.createTempDirectory("pst_ansi_rt")
-    val p = dir.resolve("unittest_ansi.pst").toString
-    AnsiPstWriter.convert(unicodeFixture, p)
+    val p = dir.resolve(name).toString
+    PstWriter.convert(src, p, ansi)
     p
   }
+  private lazy val freshAnsi: String =
+    fresh(unicodeFixture, "unittest_ansi.pst", ansi = true)
+  private lazy val freshUnicode: String =
+    fresh(committedAnsi, "unittest.pst", ansi = false)
+
+  private def sameBytes(a: String, b: String): Boolean =
+    java.util.Arrays.equals(Files.readAllBytes(java.nio.file.Paths.get(a)),
+      Files.readAllBytes(java.nio.file.Paths.get(b)))
 
   test("converted file parses as ANSI and the NDB content is byte-identical") {
     val u = PstFile.open(unicodeFixture, new Configuration())
@@ -87,11 +99,20 @@ class PstAnsiSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     } finally a.close()
     // fresh handle: one message lookup must not enumerate the index
     val b = PstFile.open(freshAnsi, new Configuration())
-    try {
+    val lookupBytes = try {
       val e = b.nodeEntry(0x200024L).get
       assert(e.nidType === 0x04)
       assert(b.bytesRead < 16 * 1024, s"read ${b.bytesRead} bytes")
+      b.bytesRead
     } finally b.close()
+    // the whole ANSI index fits under 16 KiB, so that bound alone cannot
+    // tell a lookup from an enumeration: compare with a full NBT walk
+    val c = PstFile.open(freshAnsi, new Configuration())
+    try {
+      c.nodes.size
+      assert(lookupBytes < c.bytesRead,
+        s"lookup read $lookupBytes bytes, full enumeration ${c.bytesRead}")
+    } finally c.close()
   }
 
   private def normalized(path: String, mode: String) = {
@@ -117,10 +138,15 @@ class PstAnsiSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("the committed ANSI fixture matches a fresh conversion bit-for-bit") {
     // guards fixtures/mailbox/unittest_ansi.pst going stale relative to
-    // AnsiPstWriter (the q_pst_ansi_* registry queries read it)
-    val committed = Files.readAllBytes(java.nio.file.Paths.get(committedAnsi))
-    val fresh     = Files.readAllBytes(java.nio.file.Paths.get(freshAnsi))
-    assert(java.util.Arrays.equals(committed, fresh))
+    // PstWriter (the q_pst_ansi_* registry queries read it)
+    assert(sameBytes(committedAnsi, freshAnsi))
+  }
+
+  test("the committed Unicode fixture matches a fresh conversion bit-for-bit") {
+    // the inverse guard: fixtures/mailbox/unittest.pst is PstWriter's
+    // Unicode re-emission of the committed ANSI fixture (the q_pst_*
+    // registry queries and the PST specs read it)
+    assert(sameBytes(unicodeFixture, freshUnicode))
   }
 
   test("ANSI truncation fuzz: every cut point fails cleanly, never hangs") {

@@ -5,10 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.source.pst.{PstCrypt, PstFile}
 
-/** NDB-layer unit checks against the reference's binary fixture. */
+/** NDB-layer unit checks against the committed Unicode unittest fixture
+  * (`fixtures/mailbox/unittest.pst`, PstWriter's re-emission of the
+  * ANSI twin; see FIXTURES.md §1).
+  */
 class PstFileSpec extends AnyFunSuite {
 
-  private val fixture = "/root/reference/test/unittest.pst"
+  private val fixture = "fixtures/mailbox/unittest.pst"
 
   test("decode table is a permutation") {
     assert(PstCrypt.decodeTable.length === 256)
@@ -43,13 +46,21 @@ class PstFileSpec extends AnyFunSuite {
 
   test("point-lookup reads stay O(touched pages), not O(index)") {
     val pst = PstFile.open(fixture, new Configuration())
-    try {
+    val afterLookup = try {
       val e = pst.nodeEntry(0x200024L).get // one message, no enumeration
-      val afterLookup = pst.bytesRead
-      // header + a handful of b-tree pages, nowhere near the 2.3 MB file
-      assert(afterLookup < 16 * 1024, s"read $afterLookup bytes")
+      // header + one b-tree page per level
+      assert(pst.bytesRead < 16 * 1024, s"read ${pst.bytesRead} bytes")
       assert(e.nidType === 0x04)
+      pst.bytesRead
     } finally pst.close()
+    // the fixture's whole NBT fits under 16 KiB too, so that bound alone
+    // cannot tell a lookup from an enumeration: compare with one
+    val all = PstFile.open(fixture, new Configuration())
+    try {
+      all.nodes.size
+      assert(afterLookup < all.bytesRead,
+        s"lookup read $afterLookup bytes, full enumeration ${all.bytesRead}")
+    } finally all.close()
   }
 
   test("ANSI headers parse; garbage ANSI bodies fail cleanly on access") {

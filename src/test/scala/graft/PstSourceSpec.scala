@@ -10,12 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Golden parity with the reference's own PST test corpus
   * (test/sql/read_unittest_pst.test, read_pst_folders.test,
   * table_function_parameters.test, query_optimizations.test), run
-  * against the same checked-in binary fixture — real MS-PST parsing,
-  * not the `.mbx` stand-in.
+  * against the committed Unicode re-emission of the reference's
+  * fixture (`fixtures/mailbox/unittest.pst`, FIXTURES.md §1) — real
+  * MS-PST parsing, not the `.mbx` stand-in.
   */
 class PstSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val pstFile = "/root/reference/test/unittest.pst"
+  // absolute: the folders test compares `pst_path` with the path given
+  private val pstFile = new java.io.File("fixtures/mailbox/unittest.pst").getAbsolutePath
 
   lazy val spark: SparkSession = SparkSession
     .builder()

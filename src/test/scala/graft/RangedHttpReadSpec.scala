@@ -44,7 +44,7 @@ class RangedHttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   @volatile private var honorRanges = true
 
   private val served = Map(
-    "/unittest.pst"    -> "/root/reference/test/unittest.pst",
+    "/unittest.pst"    -> "fixtures/mailbox/unittest.pst",
     "/synth_a.mbx"     -> "fixtures/mailbox/synth_a.mbx",
     "/synth_a.mbx.idx" -> "fixtures/mailbox/synth_a.mbx.idx"
   )
@@ -127,14 +127,14 @@ class RangedHttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val remote = read("folders", url)
       .select("display_name", "message_count").orderBy("display_name")
       .collect().map(r => (r.getString(0), r.getLong(1)))
-    val local = read("folders", "/root/reference/test/unittest.pst")
+    val local = read("folders", "fixtures/mailbox/unittest.pst")
       .select("display_name", "message_count").orderBy("display_name")
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(remote.nonEmpty && remote.sameElements(local))
 
     val rs   = snapshot().filter(_.path == "/unittest.pst")
     val gets = rs.filter(_.method == "GET")
-    val size = Files.size(Paths.get("/root/reference/test/unittest.pst"))
+    val size = Files.size(Paths.get("fixtures/mailbox/unittest.pst"))
     assert(rs.exists(_.method == "HEAD"), "expected HEAD-based sizing")
     assert(gets.nonEmpty, "expected ranged data GETs")
     assert(gets.forall(_.range.isDefined),
@@ -192,7 +192,7 @@ class RangedHttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val clientCtx = SSLContext.getInstance("TLS")
     clientCtx.init(null, tmf.getTrustManagers, null)
 
-    val bytes = Files.readAllBytes(Paths.get("/root/reference/test/unittest.pst"))
+    val bytes = Files.readAllBytes(Paths.get("fixtures/mailbox/unittest.pst"))
     val tls = com.sun.net.httpserver.HttpsServer
       .create(new InetSocketAddress("127.0.0.1", 0), 0)
     tls.setHttpsConfigurator(
@@ -231,7 +231,7 @@ class RangedHttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
       val remote = read("contacts", url)
         .select("given_name", "surname").orderBy("given_name")
         .collect().map(r => (r.getString(0), r.getString(1)))
-      val local = read("contacts", "/root/reference/test/unittest.pst")
+      val local = read("contacts", "fixtures/mailbox/unittest.pst")
         .select("given_name", "surname").orderBy("given_name")
         .collect().map(r => (r.getString(0), r.getString(1)))
       assert(remote.nonEmpty && remote.sameElements(local))
@@ -252,7 +252,7 @@ class RangedHttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
       val remote = read("contacts", url)
         .select("given_name", "surname").orderBy("given_name")
         .collect().map(r => (r.getString(0), r.getString(1)))
-      val local = read("contacts", "/root/reference/test/unittest.pst")
+      val local = read("contacts", "fixtures/mailbox/unittest.pst")
         .select("given_name", "surname").orderBy("given_name")
         .collect().map(r => (r.getString(0), r.getString(1)))
       assert(remote.nonEmpty && remote.sameElements(local))

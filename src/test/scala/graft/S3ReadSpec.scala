@@ -41,14 +41,14 @@ class S3ReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val Region = "us-east-1"
 
   private val objects = Map(
-    "/test-bucket/pst/unittest.pst" -> "/root/reference/test/unittest.pst",
+    "/test-bucket/pst/unittest.pst" -> "fixtures/mailbox/unittest.pst",
     "/test-bucket/mbx/synth_a.mbx"  -> "fixtures/mailbox/synth_a.mbx",
     "/test-bucket/mbx/synth_a.mbx.idx" -> "fixtures/mailbox/synth_a.mbx.idx",
     // glob corpus: two PSTs behind one wildcard (same local bytes under
     // two keys — enumeration is what's under test), plus both synthetic
     // mailboxes + sidecars under a shared prefix
-    "/test-bucket/multi/a.pst" -> "/root/reference/test/unittest.pst",
-    "/test-bucket/multi/b.pst" -> "/root/reference/test/unittest.pst",
+    "/test-bucket/multi/a.pst" -> "fixtures/mailbox/unittest.pst",
+    "/test-bucket/multi/b.pst" -> "fixtures/mailbox/unittest.pst",
     "/test-bucket/multi/mbx/synth_a.mbx" -> "fixtures/mailbox/synth_a.mbx",
     "/test-bucket/multi/mbx/synth_a.mbx.idx" -> "fixtures/mailbox/synth_a.mbx.idx",
     "/test-bucket/multi/mbx/synth_b.mbx" -> "fixtures/mailbox/synth_b.mbx",
@@ -239,7 +239,7 @@ class S3ReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val remote = read("contacts", url)
       .select("given_name", "surname").orderBy("given_name")
       .collect().map(r => (r.getString(0), r.getString(1)))
-    val local = read("contacts", "/root/reference/test/unittest.pst")
+    val local = read("contacts", "fixtures/mailbox/unittest.pst")
       .select("given_name", "surname").orderBy("given_name")
       .collect().map(r => (r.getString(0), r.getString(1)))
     assert(remote.nonEmpty && remote.sameElements(local))
@@ -276,7 +276,7 @@ class S3ReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("s3a wildcard enumerates via ListObjectsV2 and scans every match") {
     reset()
     val remote = read("contacts", "s3a://test-bucket/multi/*.pst")
-    val local  = read("contacts", "/root/reference/test/unittest.pst")
+    val local  = read("contacts", "fixtures/mailbox/unittest.pst")
     // two keys behind the wildcard, each the unittest corpus
     assert(remote.count() === 2 * local.count())
     val paths = remote.select("pst_path").distinct()

@@ -105,7 +105,7 @@ class TaxonomySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("PST typed scans enforce read_limit globally across partitions") {
-    val pst = "/root/reference/test/unittest.pst"
+    val pst = "fixtures/mailbox/unittest.pst"
     // partition_size=1 → one candidate node per partition; a per-partition
     // cap would return up to limit × #partitions rows
     val limited = Mailbox.notes(spark, pst,
