@@ -186,5 +186,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // late-materialization rewrite must see the raw mailbox relation
     ext.injectOptimizerRule(_ => graft.plans.AutoLateMaterialization)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    // query-stage preparation rules run after EnsureRequirements, where
+    // a small global sort's range exchange first exists
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallSortSinglePartition)
   }
 }

@@ -12,10 +12,12 @@ import org.apache.spark.sql.functions._
   * The fixtures live in-repo (fixtures/mailbox/, regenerable with
   * `runMain graft.source.MailboxGen`), so these queries are independent
   * of the sfDir parameter — the mailbox is the dataset under test.
+  * Paths are relative to the repository root, the working directory of
+  * `graft.Verify`, the tests and `tools/check.py`'s DuckDB.
   */
 object MailboxQueries {
 
-  private val fixtureDir = "/root/repo/fixtures/mailbox"
+  private val fixtureDir = "fixtures/mailbox"
   private val unittest   = s"$fixtureDir/unittest.mbx"
   private val glob       = s"$fixtureDir/*.mbx"
 
@@ -23,6 +25,9 @@ object MailboxQueries {
     s"read_json_auto('$path', format='newline_delimited')"
 
   private val taxonomyBox = s"$fixtureDir/taxonomy/mixed.mbx"
+
+  /** The generated large-archive corpus (not committed). */
+  private val benchBoxDir = "target/bench_mailbox"
 
   /** Regenerate fixtures if missing (first run on a fresh checkout). */
   private def ensureFixtures(): Unit = {
@@ -389,7 +394,7 @@ object MailboxQueries {
   val qMailboxCountLarge = Q(
     "q_mailbox_count_large",
     (s, _) => {
-      val dir = new java.io.File("/root/repo/target/bench_mailbox")
+      val dir = new java.io.File(benchBoxDir)
       // 16 archives × 6250 messages, like the reference's multi-file
       // Enron corpus — planning fans out one future per file
       if (!new java.io.File(dir, "box15.mbx.idx").exists()) {
@@ -403,8 +408,8 @@ object MailboxQueries {
         .agg(count(lit(1)).as("cnt"))
     },
     Some(
-      """SELECT count(*) AS cnt
-        |FROM read_json_auto('/root/repo/target/bench_mailbox/*.mbx',
+      s"""SELECT count(*) AS cnt
+        |FROM read_json_auto('$benchBoxDir/*.mbx',
         |                    format='newline_delimited', maximum_object_size=33554432)
         |WHERE record_type = 'message'""".stripMargin
     ),
@@ -420,7 +425,7 @@ object MailboxQueries {
     (s, _) => {
       qMailboxCountLarge.fn(s, "") // ensures the corpus exists
       Mailbox
-        .messages(s, "/root/repo/target/bench_mailbox/*.mbx")
+        .messages(s, s"$benchBoxDir/*.mbx")
         .groupBy("conversation_topic")
         .agg(
           count(lit(1)).as("n"),
@@ -428,9 +433,9 @@ object MailboxQueries {
         .orderBy("conversation_topic")
     },
     Some(
-      """SELECT conversation_topic, count(*) AS n,
+      s"""SELECT conversation_topic, count(*) AS n,
         |  CAST(sum(message_size) AS BIGINT) AS total_size
-        |FROM read_json_auto('/root/repo/target/bench_mailbox/*.mbx',
+        |FROM read_json_auto('$benchBoxDir/*.mbx',
         |                    format='newline_delimited', maximum_object_size=33554432)
         |WHERE record_type = 'message'
         |GROUP BY conversation_topic ORDER BY conversation_topic""".stripMargin

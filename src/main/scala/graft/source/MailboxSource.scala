@@ -687,16 +687,18 @@ class MailboxScanBuilder(opts: MailboxOptions)
     with SupportsPushDownFilters
     with SupportsPushDownLimit
     with SupportsPushDownAggregates {
+  import MailboxScanBuilder._
 
   private var requiredSchema: StructType = MailboxTable.schemaFor(opts)
   private var exactClasses: Seq[String] = Nil
   private var accepted: Array[Filter] = Array.empty
   private var limit: Option[Long] = None
   private var countStar: Boolean = false
-  private var pushedStats
-      : Option[(StructType, Array[Long], Array[Boolean])] = None
-  private var pushedGroups: Option[(StructType, Array[String],
-      Array[Array[Long]], Array[Array[Boolean]])] = None
+  private var pushedStats: Option[Stats] = None
+  private var pushedGroups: Option[Groups] = None
+  // the probe's answer for the last aggregate Spark offered: Spark asks
+  // supportCompletePushDown first, and pushAggregation reuses the answer
+  private var probed: Option[(Aggregation, Option[Answer])] = None
 
   private def filter: RecordFilter = RecordFilter(opts.mode, exactClasses)
 
@@ -740,43 +742,74 @@ class MailboxScanBuilder(opts: MailboxOptions)
     */
   override def pushAggregation(agg: Aggregation): Boolean = {
     if (limit.nonEmpty) return false
-    val exprs = agg.aggregateExpressions()
-    if (agg.groupByExpressions.nonEmpty)
-      return pushGroupedAggregation(agg)
-    if (exprs.length == 1 && exprs(0).isInstanceOf[CountStar]) {
-      countStar = true
-      return true
+    answer(agg) match {
+      case Some(Left(stats))   => pushedStats = Some(stats); true
+      case Some(Right(groups)) => pushedGroups = Some(groups); true
+      case None if countStarOnly(agg) => countStar = true; true
+      case None => false
     }
-    val tsField = "message_delivery_time"
+  }
+
+  /** A stats-answered aggregate is complete: the scan emits exactly the
+    * final rows (one row, or one row per raw `message_class`), so Spark
+    * drops its re-aggregation and the exchange under it. The lone
+    * count(*) stays partial: its scan emits one count per partition.
+    */
+  override def supportCompletePushDown(agg: Aggregation): Boolean =
+    limit.isEmpty && answer(agg).isDefined
+
+  private def countStarOnly(agg: Aggregation): Boolean =
+    agg.groupByExpressions.isEmpty && agg.aggregateExpressions.length == 1 &&
+      agg.aggregateExpressions()(0).isInstanceOf[CountStar]
+
+  /** The sidecar probe's exact answer to `agg`, probed once per
+    * aggregate.
+    */
+  private def answer(agg: Aggregation): Option[Answer] =
+    probed match {
+      case Some((a, result)) if a eq agg => result
+      case _ =>
+        val result =
+          if (agg.groupByExpressions.nonEmpty) probeGrouped(agg).map(Right(_))
+          else if (countStarOnly(agg)) None
+          else probeStats(agg).map(Left(_))
+        probed = Some((agg, result))
+        result
+    }
+
+  /** Each aggregate as the statistic that answers it: count(*) or
+    * min/max(message_delivery_time); None if any aggregate is another.
+    */
+  private def statKinds(agg: Aggregation): Option[Seq[StatKind]] = {
     def tsRef(e: org.apache.spark.sql.connector.expressions.Expression)
         : Boolean = e match {
       case nr: NamedReference =>
-        nr.fieldNames.length == 1 && nr.fieldNames()(0) == tsField
+        nr.fieldNames.length == 1 && nr.fieldNames()(0) == TsField
       case _ => false
     }
-    sealed trait Kind
-    object KCount extends Kind; object KMin extends Kind
-    object KMax extends Kind
-    val kinds: Array[Option[Kind]] = exprs.map {
+    val kinds = agg.aggregateExpressions().toSeq.map {
       case _: CountStar              => Some(KCount)
       case m: Min if tsRef(m.column) => Some(KMin)
       case m: Max if tsRef(m.column) => Some(KMax)
       case _                         => None
     }
-    if (kinds.exists(_.isEmpty)) return false
-    MailboxPlanner.statsProbe(opts, filter,
-      MailboxPlanner.activeHadoopConf()) match {
-      case Some((cnt, minMax, _)) =>
+    if (kinds.exists(_.isEmpty)) None else Some(kinds.flatten)
+  }
+
+  private def probeStats(agg: Aggregation): Option[Stats] =
+    statKinds(agg).flatMap { kinds =>
+      MailboxPlanner.statsProbe(opts, filter,
+        MailboxPlanner.activeHadoopConf()).map { case (cnt, minMax, _) =>
         val fields = new Array[StructField](kinds.length)
         val values = new Array[Long](kinds.length)
         val nulls  = new Array[Boolean](kinds.length)
-        kinds.map(_.get).zipWithIndex.foreach {
+        kinds.zipWithIndex.foreach {
           case (KCount, i) =>
             fields(i) = StructField("count(*)", LongType, nullable = false)
             values(i) = cnt
           case (k, i) =>
             fields(i) = StructField(
-              s"${if (k == KMin) "min" else "max"}($tsField)",
+              s"${if (k == KMin) "min" else "max"}($TsField)",
               TimestampType, nullable = true)
             minMax match {
               case Some((mn, mx)) => // epoch seconds → catalyst micros
@@ -784,84 +817,78 @@ class MailboxScanBuilder(opts: MailboxOptions)
               case None => nulls(i) = true // zero non-null rows
             }
         }
-        pushedStats = Some((StructType(fields.toSeq), values, nulls))
-        true
-      case None => false
+        (StructType(fields.toSeq), values, nulls)
+      }
     }
-  }
 
   /** GROUP BY message_class + {count(*), min/max(delivery time)} from
     * the v3 sidecars' per-class statistics — the whole aggregate
-    * becomes one static partition emitting one row per raw class
-    * (partial pushdown: Spark still re-aggregates our per-class rows,
-    * which is exact). Refused unless every glob member's sidecar is
-    * fresh and conclusive for what the query needs — the probe's
-    * rules, see [[MailboxPlanner.classStatsProbe]].
+    * becomes one static partition emitting one row per raw class, the
+    * final rows (complete pushdown). Refused unless every glob member's
+    * sidecar is fresh and conclusive for what the query needs — the
+    * probe's rules, see [[MailboxPlanner.classStatsProbe]].
     */
-  private def pushGroupedAggregation(agg: Aggregation): Boolean = {
+  private def probeGrouped(agg: Aggregation): Option[Groups] = {
     val gbOk = agg.groupByExpressions match {
       case Array(nr: NamedReference) =>
         nr.fieldNames.length == 1 && nr.fieldNames()(0) == "message_class"
       case _ => false
     }
-    if (!gbOk || !MailboxSchema.isMessageMode(opts.mode)) return false
-    val tsField = "message_delivery_time"
-    def tsRef(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Boolean = e match {
-      case nr: NamedReference =>
-        nr.fieldNames.length == 1 && nr.fieldNames()(0) == tsField
-      case _ => false
-    }
-    sealed trait Kind
-    object KCount extends Kind; object KMin extends Kind
-    object KMax extends Kind
-    val kinds: Array[Option[Kind]] = agg.aggregateExpressions().map {
-      case _: CountStar              => Some(KCount)
-      case m: Min if tsRef(m.column) => Some(KMin)
-      case m: Max if tsRef(m.column) => Some(KMax)
-      case _                         => None
-    }
-    if (kinds.isEmpty || kinds.exists(_.isEmpty)) return false
-    val needTs = kinds.exists(k => k.get == KMin || k.get == KMax)
+    if (!gbOk || !MailboxSchema.isMessageMode(opts.mode)) return None
+    val kinds = statKinds(agg).getOrElse(Nil)
+    if (kinds.isEmpty) return None
+    val needTs = kinds.exists(k => k == KMin || k == KMax)
     MailboxPlanner.classStatsProbe(opts, filter,
-      MailboxPlanner.activeHadoopConf(), needTs) match {
-      case Some(rows) =>
-        val aggFields = kinds.map(_.get).map {
+      MailboxPlanner.activeHadoopConf(), needTs).map { rows =>
+        val aggFields = kinds.map {
           case KCount =>
             StructField("count(*)", LongType, nullable = false)
           case KMin =>
-            StructField(s"min($tsField)", TimestampType, nullable = true)
+            StructField(s"min($TsField)", TimestampType, nullable = true)
           case KMax =>
-            StructField(s"max($tsField)", TimestampType, nullable = true)
+            StructField(s"max($TsField)", TimestampType, nullable = true)
         }
         val schema = StructType(
           StructField("message_class", StringType, nullable = true) +:
             aggFields.toSeq)
         val classes = rows.map(_._1).toArray
         val values  = rows.map { case (_, cnt, minMax) =>
-          kinds.map(_.get).map {
+          kinds.map {
             case KCount => cnt
             case KMin   => minMax.map(_._1 * 1000000L).getOrElse(0L)
             case KMax   => minMax.map(_._2 * 1000000L).getOrElse(0L)
-          }
+          }.toArray
         }.toArray
         val nulls = rows.map { case (_, _, minMax) =>
-          kinds.map(_.get).map {
+          kinds.map {
             case KCount => false
             case _      => minMax.isEmpty
-          }
+          }.toArray
         }.toArray
-        pushedGroups = Some((schema, classes, values, nulls))
-        true
-      case None => false
+        (schema, classes, values, nulls)
     }
   }
-
-  override def supportCompletePushDown(agg: Aggregation): Boolean = false
 
   override def build(): Scan =
     new MailboxScan(opts, requiredSchema, filter, limit, countStar,
       pushedStats, pushedGroups)
+}
+
+object MailboxScanBuilder {
+  /** A stats-answered global aggregate: schema, values, null flags. */
+  type Stats = (StructType, Array[Long], Array[Boolean])
+  /** A stats-answered GROUP BY message_class: schema, the classes, and
+    * per class its values and null flags.
+    */
+  type Groups = (StructType, Array[String], Array[Array[Long]],
+    Array[Array[Boolean]])
+  type Answer = Either[Stats, Groups]
+
+  private val TsField = "message_delivery_time"
+  private sealed trait StatKind
+  private object KCount extends StatKind
+  private object KMin extends StatKind
+  private object KMax extends StatKind
 }
 
 /** A11 — scan progress metrics, mirroring the reference's % scanned
@@ -900,9 +927,8 @@ class MailboxScan(
     filter: RecordFilter,
     limit: Option[Long],
     countStar: Boolean,
-    pushedStats: Option[(StructType, Array[Long], Array[Boolean])] = None,
-    pushedGroups: Option[(StructType, Array[String],
-        Array[Array[Long]], Array[Array[Boolean]])] = None)
+    pushedStats: Option[MailboxScanBuilder.Stats] = None,
+    pushedGroups: Option[MailboxScanBuilder.Groups] = None)
   extends Scan with Batch with SupportsReportStatistics {
 
   // captured at plan time on the driver, so custom FileSystem schemes

@@ -194,6 +194,48 @@ class MailboxStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mn.collect()(0).getTimestamp(1).toInstant.getEpochSecond == 1000L)
   }
 
+  private def hashAggregated(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("HashAggregate")
+
+  /** message_class → row count, read through the plain projection path. */
+  private def classCounts(path: String): Map[String, Long] =
+    Mailbox.messages(spark, path).select(col("message_class")).collect()
+      .groupBy(_.getString(0)).map { case (c, rows) => c -> rows.length.toLong }
+
+  test("stats-answered aggregates push down completely: no re-aggregation") {
+    val glob = s"$fixtures/*.mbx"
+    val global = Mailbox.messages(spark, glob)
+      .agg(min(col("message_delivery_time")).as("mn"), count(lit(1)).as("n"))
+    val grouped = Mailbox.messages(spark, glob)
+      .groupBy("message_class").agg(count(lit(1)).as("n"))
+    val expected = classCounts(glob)
+    val n = global.collect()(0).getLong(1)
+    val got = grouped.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(statsPushed(global) && groupPushed(grouped))
+    assert(!hashAggregated(global), global.queryExecution.executedPlan.toString)
+    assert(!hashAggregated(grouped), grouped.queryExecution.executedPlan.toString)
+    assert(n == expected.values.sum && got == expected, s"$n, $got vs $expected")
+  }
+
+  test("a glob with an unindexed member falls back to Spark's aggregation") {
+    val dir = Files.createTempDirectory("mbx-mixed-idx").toFile
+    MailboxGen.writeFile(new File(dir, "a.mbx"), MailboxGen.syntheticLines(2, 40, 1))
+    MailboxGen.writeFile(new File(dir, "b.mbx"), MailboxGen.syntheticLines(2, 30, 2),
+      writeIndex = false)
+    val glob = s"$dir/*.mbx"
+    val expected = classCounts(glob)
+    val grouped = Mailbox.messages(spark, glob)
+      .groupBy("message_class").agg(count(lit(1)).as("n"))
+    assert(!groupPushed(grouped) && hashAggregated(grouped),
+      grouped.queryExecution.executedPlan.toString)
+    assert(grouped.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == expected)
+    // the lone count(*) stays a partial pushdown: one count per partition
+    val cnt = Mailbox.messages(spark, glob).agg(count(lit(1)).as("n"))
+    val plan = cnt.queryExecution.executedPlan.toString
+    assert(plan.contains("countStarPushdown=true") && hashAggregated(cnt), plan)
+    assert(cnt.collect()(0).getLong(0) == expected.values.sum)
+  }
+
   test("deliveryOfPrefix: null, absent-in-full-line, and cut-mid-digits") {
     import MailboxIndex.deliveryOfPrefix
     assert(deliveryOfPrefix(

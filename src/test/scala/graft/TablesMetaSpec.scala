@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, MetadataBuilder}
@@ -51,32 +49,7 @@ class TablesMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def inferred(path: String) = spark.read.parquet(path).schema
 
-  /** Jobs started while `body` runs. Listener delivery is asynchronous,
-    * so a marker job is run afterwards and the count is taken once the
-    * listener has seen the marker start.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs   = new AtomicInteger(0)
-    val marker = s"jobs-marker-${System.nanoTime}"
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.job.description") == marker))
-          markerSeen = true
-        else if (!markerSeen) jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription(marker)
-      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime < deadline) Thread.sleep(10)
-      assert(markerSeen, "listener never saw the marker job")
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Unit): Int = JobCount.during(spark)(body)
 
   /** A single-file parquet at `target`: the one data file Spark writes
     * for `df`, copied over whatever `target` held.
