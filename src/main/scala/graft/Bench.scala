@@ -73,26 +73,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // State-store async maintenance (default interval 60 s) collides
-      // with the short-lived streaming queries the tier-2 set runs: the
-      // snapshot upload lands INSIDE a timed pass roughly once per bench
-      // execution and shows up as one ~5 s max task (the reproduced
-      // q_stream_drift straggler, diagnosed via taskstats in r11).
-      // Pinning the interval above any pass length makes the committed
-      // spreads independent of collision luck; correctness is unaffected
-      // (maintenance only compacts state files, and every bench stream
-      // is torn down within seconds).
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus  = Sessions.cpus
+    val spark = Sessions.local(cpus)
 
     def run(q: Q, dir: String): Unit =
       q.fn(spark, dir).write.format("noop").mode("overwrite").save()
@@ -149,7 +131,7 @@ object Bench {
       */
     def sentinel(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 1L << 21, 1L, cpus.toInt)
+      spark.range(0L, 1L << 21, 1L, cpus)
         .selectExpr("sum(id) AS s", "count(1) AS c")
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** A named query with an optional DuckDB oracle.
   *
-  * The driver contract (see /root/repo/SURVEY.md §7 and Verify.scala):
+  * The driver contract (see SURVEY.md §7 and Verify.scala):
   * `fn(spark, sfDir)` runs on the driver-provided parquet tables under
   * `sfDir`; `oracle` is equivalent ANSI SQL that DuckDB executes on the
   * same tables. Queries without an oracle get a weaker rows-only check.
@@ -20,9 +20,9 @@ final case class Q(
 /** Loaders for the driver-generated parquet tables (TESTDATA.md). */
 object Tables {
 
-  /** Session conf gating [[spread]] (default on). The plan-shape suite
-    * turns it off to assert the AT-SCALE plan (where the row-group gate
-    * makes the spread a no-op anyway — see the spread() scaladoc).
+  /** Session conf gating [[spread]] (default on). `RadixMedianSpec`
+    * turns it off to check the kill-switch; `Round14BatchSpec` holds
+    * gate-on and gate-off results bit-equal.
     */
   val SpreadConfKey = "spark.graft.scan.spread"
 
@@ -144,7 +144,8 @@ object Tables {
     * (digest chains, per-position scans, tokenize+explode) runs in ONE
     * task regardless of core count (measured: orders.parquet → 1
     * non-empty scan partition; a 32-way explode+md5 stage over it
-    * 3.7 s fused vs 0.7 s spread on local[32] — tools/SpreadProbe).
+    * 3.7 s fused vs 0.7 s spread on local[32] — tools/SpreadProbe,
+    * last in commit b6c9ab4).
     *
     * This is deliberately NOT applied to every table() read: the
     * exchange's write side is itself single-task, so for queries whose

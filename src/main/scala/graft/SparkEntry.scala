@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract — see SURVEY.md §7. */
 object SparkEntry {
   /** Full registry of implemented operators (SURVEY.md §2 + pipeline
     * extensions). Order is the §7.2 build order.

@@ -88,7 +88,7 @@ object HllKernel {
   *
   * This is the aggregate-function analog of the scalar surface the
   * reference registers through its host's extension API
-  * (/root/reference/src/pst_extension.cpp:15-24 registers table
+  * (the reference's src/pst_extension.cpp:15-24 registers table
   * functions; DuckDB's own approx_count_distinct provides the HLL
   * aggregate there) — here registered via SparkSessionExtensions
   * .injectFunction / a session temp function (GraftFunctions.register).

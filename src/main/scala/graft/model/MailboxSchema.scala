@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 /** The mailbox data model of the reference, §1 of SURVEY.md, re-expressed
   * as Spark StructTypes.
   *
-  * Column lists mirror /root/reference/src/include/schema.hpp exactly:
+  * Column lists mirror the reference's src/include/schema.hpp exactly:
   * PST metadata (schema.hpp:124-133) + base Note (140-165) + per-type
   * extensions (contacts 175-260, appointments 263-287, sticky notes
   * 290-304, tasks 307-330, distribution lists 333-343, folders 347-359).

@@ -207,14 +207,7 @@ object CuratePipeline {
   def main(args: Array[String]): Unit = {
     val sfDir  = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     val (_, stats) = curate(spark, sfDir, outDir)
     println(s"curate: $stats")
     spark.stop()

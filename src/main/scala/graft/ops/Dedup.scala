@@ -202,8 +202,9 @@ object Dedup {
     // pin the band rows: they feed FOUR sub-DAGs below (the bucket-size
     // pre-pass inside bandCells plus both sides of the self-join), and
     // for the LSH callers each copy re-derives the whole signature
-    // pipeline — measured r14 (SetsimProbe, warm): the equivalent
-    // un-pinned prefix pipeline executed ~3× inside one action
+    // pipeline — measured r14 (SetsimProbe, last in commit b6c9ab4,
+    // warm): the equivalent un-pinned prefix pipeline executed ~3×
+    // inside one action
     val b = bands.localCheckpoint()
     val cells = bandCells(b, cap)
     cells

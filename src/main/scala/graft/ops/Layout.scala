@@ -978,9 +978,9 @@ object Layout {
     * discipline, not a constant): one bucket per ~4 MiB of table
     * bytes, floored at 8 and capped at the 256-way production layout.
     * The r13 verdict's top line was this query at 6.4 s — measured
-    * (tools/DvProbe): virtually all of it was the 256-directory
-    * dynamic-partition commit plus three 256-file listings/scans over
-    * a 0.6 MB fixture table (~2 KB per directory). The bucket count is
+    * (tools/DvProbe, last in commit b6c9ab4): virtually all of it was
+    * the 256-directory dynamic-partition commit plus three 256-file
+    * listings/scans over a 0.6 MB fixture table (~2 KB per directory). The bucket count is
     * internal layout only — `_pos` is defined within whatever bucket
     * its row lands in, both delete batches resolve positions from the
     * same written table, and the survivor set (the declared result) is

@@ -12,7 +12,7 @@ import graft.source.{MailboxOptions, MailboxTable}
 /** Automatic late materialization (A10) — the optimizer rewrite the
   * reference's host engine applies to any qualifying query over a scan
   * that advertises row-id columns (`late_materialization = true` +
-  * `get_row_id_columns`, /root/reference/src/pst_extension.cpp:26-34;
+  * `get_row_id_columns`, the reference's src/pst_extension.cpp:26-34;
   * HASH_JOIN asserted on a plain filter/order/limit query by
   * test/sql/query_optimizations.test:49-53). The manual two-phase
   * helper ([[graft.ops.LateMaterialization]]) encodes the same shape

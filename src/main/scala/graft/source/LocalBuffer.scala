@@ -18,7 +18,7 @@ import org.apache.hadoop.fs.Path
   * The honest fallback for a range-less protocol is to fetch the object
   * once and scan locally — the same shape as the reference's hosted-
   * filesystem demo (`read_pst_contacts('https://…/unittest.pst')`,
-  * /root/reference/README.md:58-69, served by its host's httpfs), which
+  * the reference's README.md:58-69, served by its host's httpfs), which
   * likewise falls back to whole-object GET when a server cannot do
   * range requests.
   *

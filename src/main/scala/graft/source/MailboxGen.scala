@@ -7,7 +7,7 @@ import java.util.Base64
   * one node per line) that the mailbox DSv2 connector scans.
   *
   * The inventory mirrors the reference's checked-in `test/unittest.pst`
-  * fixture (FIXTURES.md §1; /root/reference/test/sql/read_unittest_pst
+  * fixture (FIXTURES.md §1; the reference's test/sql/read_unittest_pst
   * .test:13-93): 16 folders with the root self-loop 290→290, 12 messages
   * = 5 IPM.Note + 2 IPM.Contact + 1 IPM.DistList + 1 IPM.Appointment +
   * 2 IPM.StickyNote + 1 IPM.Task — so the reference's golden assertions

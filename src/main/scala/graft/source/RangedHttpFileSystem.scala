@@ -11,7 +11,7 @@ import org.apache.hadoop.util.Progressable
 /** Seekable ranged-GET HTTP filesystem — the remote random-access path
   * of A19, matching the reference's actual remote I/O behavior: its
   * host filesystem serves `read(buf, nr_bytes, offset)` with HTTP
-  * Range GETs (/root/reference/src/pst/duckdb_filesystem.cpp:12-36
+  * Range GETs (the reference's src/pst/duckdb_filesystem.cpp:12-36
   * delegates positioned reads to a DuckDB `FileHandle`; httpfs
   * implements that handle with ranged requests). Hadoop's bundled
   * read-only `HttpFileSystem` cannot do this — it reports length -1

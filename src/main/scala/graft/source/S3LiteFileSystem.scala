@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 
 /** Minimal S3-dialect filesystem for `s3a://bucket/key` reads — the
   * object-store scheme the reference inherits from its host's httpfs
-  * (/root/reference/README.md:58-69 and extension_config.cmake:14-18
+  * (the reference's README.md:58-69 and extension_config.cmake:14-18
   * load httpfs, whose S3 support is the same ranged-GET machinery with
   * bucket/key addressing and SigV4 auth). The container has no AWS
   * connector jars and no egress, so this speaks the public S3 REST
@@ -85,7 +85,7 @@ class S3LiteFileSystem extends RangedHttpFileSystem {
   //
   // The reference gets `read_pst_messages('s3://bucket/*.pst')` for free
   // from its host httpfs, which globs via ListObjectsV2
-  // (/root/reference/README.md:58-69). Hadoop's Globber drives glob
+  // (the reference's README.md:58-69). Hadoop's Globber drives glob
   // resolution through getFileStatus/listStatus, so implementing those
   // two over `GET /bucket?list-type=2&prefix=...&delimiter=/` gives the
   // same capability: `s3a://bucket/dir/*.pst` enumerates, the mailbox

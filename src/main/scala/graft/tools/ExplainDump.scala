@@ -2,17 +2,15 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for named registry queries to files —
   * the optimization-round evidence artifact (plans/r13/<q>_{before,after}.txt).
   *
   * Usage: runMain graft.tools.ExplainDump <outDir> <suffix> <query...>
   * e.g.   runMain graft.tools.ExplainDump plans/r13 before q_theil_sen q_setsim_join
   *
-  * Uses the bench session shape (local[N] from SPARK_GRAFT_CPUS,
-  * shuffle.partitions = N, AQE on) so the dumped plan is the plan the
-  * bench executes — not a differently-configured one.
+  * Uses the bench's own session ([[graft.Sessions.local]] on
+  * SPARK_GRAFT_CPUS cores), so the dumped plan is the plan the bench
+  * executes — not a differently-configured one.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -21,21 +19,8 @@ object ExplainDump {
     val suffix = args(1)
     val names  = args.drop(2).toSeq
     Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sf   = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // SPARK_GRAFT_SPREAD=false re-creates the pre-round plan for the
-      // spread-gated queries (the gate is conf-keyed)
-      .config(graft.Tables.SpreadConfKey,
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     val byName = graft.SparkEntry.registry.map(q => q.name -> q).toMap
     for (n <- names) {
       val q = byName.getOrElse(n, sys.error(s"unknown query: $n"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the broadcast-vs-shuffle crossover of
@@ -31,14 +31,8 @@ import org.apache.spark.sql.functions._
 object ModelJoinProbe {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.cpus
+    val spark = graft.Sessions.local(cpus)
     // the arm under test must be the gate's choice, never the planner's
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
@@ -46,7 +40,7 @@ object ModelJoinProbe {
       .map(_.toLong).getOrElse(20000000L)
 
     def keyed(modelRows: Long, rows: Long): DataFrame =
-      spark.range(0L, rows, 1L, cpus.toInt)
+      spark.range(0L, rows, 1L, cpus)
         .select(md5(concat(lit("t"),
           pmod(col("id"), lit(modelRows)).cast("string"))).as("token"),
           col("id"))

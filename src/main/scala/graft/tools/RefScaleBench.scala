@@ -2,14 +2,13 @@ package graft.tools
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.source.MailboxGen
 
 /** One-off probe at the REFERENCE'S OWN published scale.
   *
-  * The reference's headline number (/root/reference/README.md:8-19) is
+  * The reference's headline number (its README.md:8-19) is
   * a `count(*)` via `read_pst_message` over an Enron glob of 167 PST
   * files / 1,170,000 messages in 0.564 s — answered from planning
   * statistics alone. This main reproduces that exact shape against the
@@ -26,7 +25,7 @@ object RefScaleBench {
   private val MsgsPerFile = 7005
 
   def main(args: Array[String]): Unit = {
-    val dir = new File("/root/repo/target/ref_scale")
+    val dir = new File("target/ref_scale")
     if (!new File(dir, s"box${Files - 1}.mbx.idx").exists()) {
       val t0 = System.nanoTime()
       (0 until Files).foreach { i =>
@@ -36,14 +35,8 @@ object RefScaleBench {
       println(f"generated $Files files in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.cpus
+    val spark = graft.Sessions.local(cpus)
 
     val glob = new File(dir, "*.mbx").getPath
     def countQuery() = graft.source.Mailbox.messages(spark, glob)

@@ -91,18 +91,11 @@ object ScaleProbe {
     "q_model_artifact_pq")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.cpus
+    val spark = graft.Sessions.local(cpus)
 
     val src = "/root/testdata/sf0.1"
-    val dst = "/root/repo/target/sf1"
+    val dst = "target/sf1"
     if (!new File(dst, "_DONE").exists()) generate(spark, src, dst)
 
     val only: Set[String] = args.toSet

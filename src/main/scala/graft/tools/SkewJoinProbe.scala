@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures [[graft.ops.Distributed.modelJoin]]'s SHUFFLE arm (the
@@ -79,19 +79,14 @@ import org.apache.spark.sql.functions._
 object SkewJoinProbe {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // more partitions than cores: the hot key's RELATIVE partition
-      // size is what the skew detector keys on. 200 gives a 9× ROW
-      // factor — measured NOT enough once the hot key's compression
-      // discount lands (~2.3× in bytes); the p1000 configs override
-      // this to the production-faithful count
-      .config("spark.sql.shuffle.partitions", "200")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.cpus
+    val spark = graft.Sessions.local(cpus)
+    // more partitions than cores: the hot key's RELATIVE partition
+    // size is what the skew detector keys on. 200 gives a 9× ROW
+    // factor — measured NOT enough once the hot key's compression
+    // discount lands (~2.3× in bytes); the p1000 configs override
+    // this to the production-faithful count
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     val modelRows = 4000000L
@@ -101,7 +96,7 @@ object SkewJoinProbe {
     def hex(c: org.apache.spark.sql.Column) =
       md5(concat(lit("t"), c.cast("string")))
 
-    val build = spark.range(0L, modelRows, 1L, cpus.toInt)
+    val build = spark.range(0L, modelRows, 1L, cpus)
       .select(hex(col("id")).as("token"), col("id").as("w1"),
         (col("id") * 2).as("w2"), (col("id") + 7).as("w3"))
       .localCheckpoint()
@@ -113,7 +108,7 @@ object SkewJoinProbe {
     // compression discount
     def word(c: org.apache.spark.sql.Column) =
       concat(lit("t"), c.cast("string"))
-    val buildW = spark.range(0L, modelRows, 1L, cpus.toInt)
+    val buildW = spark.range(0L, modelRows, 1L, cpus)
       .select(word(col("id")).as("token"), col("id").as("w1"),
         (col("id") * 2).as("w2"), (col("id") + 7).as("w3"))
       .localCheckpoint()
@@ -125,12 +120,12 @@ object SkewJoinProbe {
     // near-identical token + near-sequential longs — to the point
     // where partitions were byte-BALANCED at 45× row skew and there
     // was nothing for a byte-based detector to see.)
-    val uniform = spark.range(0L, probeRows, 1L, cpus.toInt)
+    val uniform = spark.range(0L, probeRows, 1L, cpus)
       .select(hex(pmod(col("id"), lit(modelRows))).as("token"),
         xxhash64(col("id"), lit(7)).as("doc_id"))
     // Zipf(1) rank via inverse CDF: u ~ U(0,1) from a row-id hash,
     // rank = clamp(floor(N^u), 1, N); P(rank = r) ≈ 1/(r·lnN)
-    val zipfRank = spark.range(0L, probeRows, 1L, cpus.toInt)
+    val zipfRank = spark.range(0L, probeRows, 1L, cpus)
       .select(col("id"),
         (pmod(xxhash64(col("id")), lit(1000000000L)).cast("double")
           / 1e9).as("u"))

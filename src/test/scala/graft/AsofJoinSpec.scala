@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.AsofJoinOps
@@ -11,21 +9,9 @@ import graft.plans.AsofJoinOps
 /** The custom as-of join operator (LogicalPlan + Strategy + SparkPlan)
   * against its compositional equivalent, plus plan and edge checks.
   */
-class AsofJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AsofJoinSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("asof-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def leftSide = Tables
     .events(spark, sf)

@@ -3,9 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.LateMaterialization
@@ -22,28 +20,15 @@ import graft.source.{Mailbox, MailboxGen}
   * when the rewrite would not pay, and never re-fires on its own
   * output or on the manual helper's explicit two-phase plan.
   */
-class AutoLateMatSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AutoLateMatSpec extends AnyFunSuite with SessionSuite {
 
   private var dir: File = _
   private def box: String = new File(dir, "unittest.mbx").getPath
 
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("auto-latemat-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-
   override def beforeAll(): Unit = {
     dir = Files.createTempDirectory("auto_latemat_fixtures").toFile
     MailboxGen.writeFixtures(dir)
-    spark.sparkContext.setLogLevel("WARN")
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   private def scans(plan: String): Int =
     "BatchScan".r.findAllIn(plan).length

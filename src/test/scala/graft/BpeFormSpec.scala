@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Bpe, Wordpiece}
@@ -15,21 +13,9 @@ import graft.ops.{Bpe, Wordpiece}
   * over-merges; and the merges must enter the table arm's plan as a
   * join build side, never a literal.
   */
-class BpeFormSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BpeFormSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("bpe-form-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def wordsDf(ws: Seq[String]) = {
     import spark.implicits._

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics of the distributed BPE trainer ([[ops.Bpe]]) on a
@@ -11,18 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * non-overlapping application, dry-out before K merges, and encode
   * fertility — all checked against pencil-and-paper expectations.
   */
-class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("bpe-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
+class BpeSpec extends AnyFunSuite with SessionSuite {
 
   /** Write a tiny documents.parquet the ops can read as a corpus dir. */
   private def corpus(texts: Seq[String]): String = {

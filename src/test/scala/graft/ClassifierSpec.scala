@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Classifier
@@ -11,16 +9,7 @@ import graft.ops.Classifier
 /** Naive-Bayes classifier family: hand-computed model weights on a
   * tiny corpus, the routing decision, and the shared-model memo.
   */
-class ClassifierSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("classifier-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ClassifierSpec extends AnyFunSuite with SessionSuite {
 
   /** Tiny corpus with hand-checkable counts: 'good' appears only in
     * the curated source, 'spam' only outside it, 'the' everywhere
@@ -38,9 +27,6 @@ class ClassifierSpec extends AnyFunSuite with BeforeAndAfterAll {
       .coalesce(1).write.parquet(s"$d/documents.parquet")
     d
   }
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def lnPpm(x: Double): Long =
     math.floor(math.log(x) * 1e6 + 0.5).toLong

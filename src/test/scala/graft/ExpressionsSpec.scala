@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
@@ -12,19 +11,9 @@ import graft.functions.GraftFunctions
 /** Property tests for the custom codegen'd expressions (an upgrade over
   * the reference's golden-only testing, SURVEY.md §5).
   */
-class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExpressionsSpec extends AnyFunSuite with SessionSuite {
 
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[2]")
-    .appName("expr-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
+  override protected def cpus: Int = 2
 
   private val shift = 11644473600000000L
 
@@ -50,18 +39,25 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.collect().map(_.getInt(0)).toSeq === Seq(0, 4, 1, -1))
   }
 
-  test("GraftExtensions injects the functions into a fresh session") {
-    spark // force the shared session first so we can restore it after
+  /** Runs `body` on a new session state over the shared context, built
+    * by the factory, and restores the suite's session afterwards.
+    */
+  private def withFreshSession(body: SparkSession => Unit): Unit = {
+    spark // force the shared session first so it can be restored after
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession
-        .builder()
-        .master("local[2]")
-        .appName("ext-spec")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate() // new session state over the shared context
+      val s2 = Sessions.local(cpus)
+      assert(s2 ne spark)
+      body(s2)
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
+
+  test("GraftExtensions injects the functions into a fresh session") {
+    withFreshSession { s2 =>
       val d = s2
         .sql("SELECT hamming_distance('111', '010') AS d")
         .collect()(0).getInt(0)
@@ -75,9 +71,6 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(df.queryExecution.optimizedPlan.toString.contains("0 AS d"),
         df.queryExecution.optimizedPlan.toString)
       assert(df.collect().map(_.getInt(0)).toSeq === Seq(0, 0, 0))
-    } finally {
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
     }
   }
 
@@ -436,13 +429,7 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("FuseDotProduct rewrites the HOF idiom into dot_product_q") {
-    import org.apache.spark.sql.SparkSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[2]")
-      .appName("fuse-dot").config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions).getOrCreate()
-    try {
+    withFreshSession { s2 =>
       // non-foldable input (id column) so the fused form is observable
       val df = s2.sql(
         """SELECT aggregate(zip_with(array(id, 2L, 3L), array(4L, 5L, id),
@@ -459,10 +446,6 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!other.queryExecution.optimizedPlan.toString
         .toLowerCase.contains("dotproductq"))
       assert(other.collect()(0).getLong(0) === 3L)
-    } finally {
-      s2.stop()
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
     }
   }
 

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{GraftFunctions, HllKernel, HllSketchAgg}
@@ -16,22 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * function), and kernel-level equivalence to an independent
   * register-arithmetic reimplementation.
   */
-class HllAggSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HllAggSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("hll-agg-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   /** Independent register-DAG recompute: brute-force the 64 registers
     * over a value list with plain Scala arithmetic (no HllKernel).
@@ -105,7 +90,7 @@ class HllAggSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SQL surface: extensions hook and temp function; partial-agg plan") {
     Tables.orders(spark, sf).createOrReplaceTempView("orders_hll_t")
-    // extensions-injected (session built withExtensions)
+    // extensions-injected (Sessions.local installs GraftExtensions)
     val viaExt = spark
       .sql("SELECT graft_hll(CAST(o_custkey AS STRING)) AS e FROM orders_hll_t")
     val plan = viaExt.queryExecution.executedPlan.toString

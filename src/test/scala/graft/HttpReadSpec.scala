@@ -6,15 +6,14 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A19's remote-protocol path exercised against a REAL `http://`
   * endpoint (an in-JVM server; the sandbox has no egress): the same
   * shape as the reference's hosted-PST demo
   * `read_pst_contacts('https://…/unittest.pst')`
-  * (/root/reference/README.md:58-69).
+  * (the reference's README.md:58-69).
   *
   * Hadoop's bundled read-only http filesystem reports length -1 and
   * cannot seek, so these reads go through the LocalBuffer
@@ -23,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * local read, and each object is fetched exactly ONCE per JVM no
   * matter how many probes, plans, and task readers touch it.
   */
-class HttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HttpReadSpec extends AnyFunSuite with SessionSuite {
 
   private val gets = new ConcurrentHashMap[String, AtomicInteger]()
   private var server: HttpServer = _
@@ -35,23 +34,12 @@ class HttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     "/synth_a.mbx.idx" -> "fixtures/mailbox/synth_a.mbx.idx"
   )
 
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("http-read-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  override def beforeAll(): Unit = {
     // the read-only http FS Spark bundles (hadoop-client-api); its
     // streams cannot seek and its FileStatus length is -1
-    .config("spark.hadoop.fs.http.impl",
-      "org.apache.hadoop.fs.http.HttpFileSystem")
-    .config("spark.hadoop.fs.https.impl",
-      "org.apache.hadoop.fs.http.HttpsFileSystem")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    spark.sparkContext.setLogLevel("WARN")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.http.impl", "org.apache.hadoop.fs.http.HttpFileSystem")
+    conf.set("fs.https.impl", "org.apache.hadoop.fs.http.HttpsFileSystem")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
@@ -72,8 +60,8 @@ class HttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    spark.stop()
     if (server != null) server.stop(0)
+    super.afterAll()
   }
 
   private def nGets(path: String): Int =

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{GraftFunctions, KmvMedianAgg}
@@ -14,20 +12,7 @@ import graft.functions.{GraftFunctions, KmvMedianAgg}
   * of the hash-min selection, exactness below the sample size, and the
   * ObjectHashAggregate partial-aggregation plan shape.
   */
-class KmvMedianAggSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("kmv-median-agg-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
+class KmvMedianAggSpec extends AnyFunSuite with SessionSuite {
 
   private def md5hex(v: Long): String =
     java.security.MessageDigest.getInstance("MD5")

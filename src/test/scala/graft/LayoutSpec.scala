@@ -3,9 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Layout
@@ -14,21 +12,9 @@ import graft.ops.Layout
   * partitioning, bounded file sizes, and in-file ordering (the
   * properties that make a 100 TB curated corpus cheap to scan).
   */
-class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LayoutSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("layout-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   test("curated write: partition dirs, file row caps, in-file sort order") {
     val out = Files.createTempDirectory("layout_spec").resolve("docs").toString

@@ -3,42 +3,28 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.LateMaterialization
 import graft.source.{Mailbox, MailboxGen}
 
 /** End-to-end connector suite — the Spark port of the reference's
-  * SQLLogicTest corpus (files under /root/reference/test/sql/; inventory
+  * SQLLogicTest corpus (files under the reference's test/sql/; inventory
   * per FIXTURES.md §1): golden counts and values over the
   * unittest-equivalent fixture, scan parameters, pushdown plan shapes,
   * resilience.
   */
-class MailboxSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MailboxSourceSpec extends AnyFunSuite with SessionSuite {
 
   private var dir: File = _
   private def box: String = new File(dir, "unittest.mbx").getPath
   private def glob: String = new File(dir, "*.mbx").getPath
 
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("mailbox-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   override def beforeAll(): Unit = {
     dir = Files.createTempDirectory("mailbox_fixtures").toFile
     MailboxGen.writeFixtures(dir)
-    spark.sparkContext.setLogLevel("WARN")
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   // ── golden counts (read_unittest_pst.test:13-93) ────────────────────
 

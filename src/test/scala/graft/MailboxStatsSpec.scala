@@ -3,8 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.source.{Mailbox, MailboxGen, MailboxIndex}
@@ -15,19 +14,7 @@ import graft.source.{Mailbox, MailboxGen, MailboxIndex}
   * sidecar, foreign layout with the timestamp beyond the record head)
   * falls back to the ordinary scan and stays correct.
   */
-class MailboxStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("mailbox-stats-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
+class MailboxStatsSpec extends AnyFunSuite with SessionSuite {
 
   private def fixtures: String = {
     val dir = new File("fixtures/mailbox")

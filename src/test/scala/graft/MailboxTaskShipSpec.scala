@@ -6,9 +6,8 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.spark.serializer.JavaSerializer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.source.{Mailbox, MailboxGen}
@@ -26,19 +25,10 @@ class AliasLocalFileSystem extends RawLocalFileSystem {
   * task binary), and executors still see the session's conf as it was at
   * plan time (A19).
   */
-class MailboxTaskShipSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MailboxTaskShipSpec extends AnyFunSuite with SessionSuite {
 
   private var dir: File = _
   private def glob: String = new File(dir, "*.mbx").getPath
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("mailbox-task-ship-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   override def beforeAll(): Unit = {
     dir = Files.createTempDirectory("mailbox_task_ship").toFile
@@ -49,10 +39,7 @@ class MailboxTaskShipSpec extends AnyFunSuite with BeforeAndAfterAll {
       MailboxGen.syntheticLines(3, 250, 2), writeIndex = false)
     MailboxGen.writeFile(new File(dir, "raw_c.mbx"),
       MailboxGen.syntheticLines(2, 200, 3), writeIndex = false)
-    spark.sparkContext.setLogLevel("WARN")
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   test("reader factory of a planned scan Java-serializes under 16 KiB") {
     val df = Mailbox.messages(spark, glob)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression pin for the r07 bench failure: the ANN artifact cache's
@@ -14,17 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * nesting is structurally safe; with 200 nested pairs the old
   * implementation throws with probability ≈ 1 − (15/16)^200 ≈ 1.
   */
-class MemoNestingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MemoNestingSpec extends AnyFunSuite with SessionSuite {
 
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[2]")
-    .appName("memo-nesting-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cpus: Int = 2
 
   test("nested memo builds never throw and cache correctly") {
     val results = (0 until 200).map { i =>

@@ -15,17 +15,7 @@ class ModelStoreSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def build(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("model-store-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def build(): SparkSession = graft.Sessions.local(4)
 
   private def canon(df: org.apache.spark.sql.DataFrame): Vector[String] =
     df.collect().map(_.toString).sorted.toVector

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Dedup
@@ -21,19 +19,7 @@ import graft.ops.Dedup
   * Generators are seeded (fixed scala.util.Random seeds), so failures
   * reproduce exactly.
   */
-class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("property-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
+class PropertySpec extends AnyFunSuite with SessionSuite {
 
   test("bandPairs preserves the exact pair set for arbitrary skew and cap") {
     import spark.implicits._

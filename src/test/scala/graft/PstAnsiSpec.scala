@@ -21,22 +21,10 @@ import graft.source.pst.{PstFile, PstWriter}
   * mode; and they hold both committed files equal to a fresh
   * conversion of the other.
   */
-class PstAnsiSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class PstAnsiSpec extends AnyFunSuite with SessionSuite {
 
   private val unicodeFixture = "fixtures/mailbox/unittest.pst"
   private val committedAnsi  = "fixtures/mailbox/unittest_ansi.pst"
-
-  lazy val spark: org.apache.spark.sql.SparkSession = org.apache.spark.sql.SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("pst-ansi-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def fresh(src: String, name: String, ansi: Boolean): String = {
     val dir = Files.createTempDirectory("pst_ansi_rt")

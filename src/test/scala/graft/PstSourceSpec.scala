@@ -2,9 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden parity with the reference's own PST test corpus
@@ -14,22 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixture (`fixtures/mailbox/unittest.pst`, FIXTURES.md §1) — real
   * MS-PST parsing, not the `.mbx` stand-in.
   */
-class PstSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PstSourceSpec extends AnyFunSuite with SessionSuite {
 
   // absolute: the folders test compares `pst_path` with the path given
   private val pstFile = new java.io.File("fixtures/mailbox/unittest.pst").getAbsolutePath
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("pst-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def read(mode: String, options: Map[String, String] = Map.empty): DataFrame = {
     val r = spark.read.format("mailbox").option("mode", mode)
@@ -196,13 +183,13 @@ class PstSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(pstFile), dir.resolve("a.pst"))
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/repo/fixtures/mailbox/unittest.mbx"),
+      java.nio.file.Paths.get("fixtures/mailbox/unittest.mbx"),
       dir.resolve("b.mbx"))
     def count(path: String) = spark.read.format("mailbox")
       .option("mode", "messages").load(path).count()
     val both = count(s"$dir/*")
     assert(both === count(s"$dir/a.pst") + count(s"$dir/b.mbx"))
-    assert(both === 12 + count("/root/repo/fixtures/mailbox/unittest.mbx"))
+    assert(both === 12 + count("fixtures/mailbox/unittest.mbx"))
   }
 
   test("micro-batch streaming ingests newly arriving PST binaries") {

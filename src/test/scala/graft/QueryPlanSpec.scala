@@ -1,28 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** B20 — plan-shape assertions (the Spark analog of the reference's
   * EXPLAIN regex tests, query_optimizations.test:14-53) plus a smoke
   * run of every registered query at sf0.001.
   */
-class QueryPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class QueryPlanSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("plan-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf)
@@ -177,7 +164,12 @@ class QueryPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q_pack_sequences windows per source shard (no global single partition)") {
-    val p = plan("q_pack_sequences")
+    // at sf0.001 the final ORDER BY's input fits one advisory partition,
+    // so SmallSortSinglePartition plans its exchange as SinglePartition;
+    // an advisory size below the input reproduces the at-scale plan
+    val p = withConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key, "1024") {
+      plan("q_pack_sequences")
+    }
     assert(p.contains("hashpartitioning(source"),
       s"the running offset must partition by the shard key:\n$p")
     assert(!p.contains("SinglePartition"),

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Focused spec for the round-13 optimization internals:
@@ -14,19 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Tables.spreadForCompute's gate (fires only on row-group-starved,
   *    big-enough files; conf kill-switch; value-neutral).
   */
-class RadixMedianSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("radix-median-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
+class RadixMedianSpec extends AnyFunSuite with SessionSuite {
 
   /** The repo's determinate-on-ties LOWER median: smallest v with
     * 2·cum(v) ≥ n — brute force.

@@ -7,14 +7,13 @@ import java.util.Collections
 import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A19's remote RANDOM-ACCESS path: the seekable ranged-GET filesystem
   * (graft.source.RangedHttpFileSystem) against an in-JVM server that
   * implements HEAD + `Range` (206) — the I/O shape of the reference's
-  * remote reads (/root/reference/src/pst/duckdb_filesystem.cpp:12-36
+  * remote reads (the reference's src/pst/duckdb_filesystem.cpp:12-36
   * delegates read-at-offset to its host; httpfs serves those with
   * byte-range requests). Complements HttpReadSpec, which pins the
   * whole-object LocalBuffer fallback for range-less servers.
@@ -28,7 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - a server that answers range requests with 200-full-body still
   *    yields correct results (the skip-to-offset path).
   */
-class RangedHttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RangedHttpReadSpec extends AnyFunSuite with SessionSuite {
 
   /** One recorded request. */
   case class Req(method: String, path: String, range: Option[String],
@@ -51,21 +50,10 @@ class RangedHttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val RangeSpec = """bytes=(\d+)-(\d*)""".r
 
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("ranged-http-read-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.hadoop.fs.http.impl",
-      "graft.source.RangedHttpFileSystem")
-    .config("spark.hadoop.fs.https.impl",
-      "graft.source.RangedHttpsFileSystem")
-    .getOrCreate()
-
   override def beforeAll(): Unit = {
-    spark.sparkContext.setLogLevel("WARN")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.http.impl", "graft.source.RangedHttpFileSystem")
+    conf.set("fs.https.impl", "graft.source.RangedHttpsFileSystem")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
@@ -111,8 +99,8 @@ class RangedHttpReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    spark.stop()
     if (server != null) server.stop(0)
+    super.afterAll()
   }
 
   private def snapshot(): Seq[Req] = reqs.synchronized(reqs.asScala.toVector)

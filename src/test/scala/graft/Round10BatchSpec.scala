@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Multimodal
@@ -12,27 +10,15 @@ import graft.ops.Multimodal
   * memoized perceptual-signature table (one codec pass per session
   * serving every downstream consumer).
   */
-class Round10BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Round10BatchSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("round10-batch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
 
   private var sigBuildsBaseline = 0L
 
   override def beforeAll(): Unit = {
-    spark.sparkContext.setLogLevel("WARN")
     sigBuildsBaseline = Multimodal.dhashSigBuilds.get()
   }
-  override def afterAll(): Unit = spark.stop()
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 

@@ -1,29 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-11 batch: the cross-modal pair-alignment gate — planted
   * separation, population accounting, and the norm-preservation
   * property of the sign-perturbed twin.
   */
-class Round11BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Round11BatchSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("round11-batch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   test("q_crossmodal_gate: population covers every image asset with " +
     "an embedding, exactly one row per source") {

@@ -1,29 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 batch: the cluster-conditional mixture — quota arithmetic,
   * deterministic selection, and the tempered-distribution property —
   * replicated brute-force in Scala from the trained assignment.
   */
-class Round12BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Round12BatchSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("round12-batch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

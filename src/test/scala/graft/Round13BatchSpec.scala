@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 operators: batch-incremental SemDeDup must equal the
@@ -10,21 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * earlier vectors), and the artifact queries must agree with their
   * in-session twins on the served values.
   */
-class Round13BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Round13BatchSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("round13-batch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def rows(name: String): Vector[String] =
     SparkEntry.queries(name)(spark, sf)

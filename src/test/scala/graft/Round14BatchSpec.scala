@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 optimization guards.
@@ -15,43 +13,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * gate-off plans — so the driver's own `sbt test` run covers the
   * spread mechanism every round.
   */
-class Round14BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Round14BatchSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("round14-batch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   /** Collected, order-normalized rows of `name` under the given spread
     * confs (restored afterwards so other suites see the defaults).
     */
-  private def rowsWith(name: String, spread: Boolean): Vector[String] = {
-    val prevOn    = spark.conf.getOption(Tables.SpreadConfKey)
-    val prevFloor = spark.conf.getOption(Tables.SpreadMinBytesConfKey)
-    spark.conf.set(Tables.SpreadConfKey, spread.toString)
-    spark.conf.set(Tables.SpreadMinBytesConfKey, "0")
-    try SparkEntry.queries(name)(spark, sf)
-      .collect().map(_.toString).sorted.toVector
-    finally {
-      prevOn match {
-        case Some(v) => spark.conf.set(Tables.SpreadConfKey, v)
-        case None    => spark.conf.unset(Tables.SpreadConfKey)
-      }
-      prevFloor match {
-        case Some(v) => spark.conf.set(Tables.SpreadMinBytesConfKey, v)
-        case None    => spark.conf.unset(Tables.SpreadMinBytesConfKey)
+  private def rowsWith(name: String, spread: Boolean): Vector[String] =
+    withConf(Tables.SpreadConfKey, spread.toString) {
+      withConf(Tables.SpreadMinBytesConfKey, "0") {
+        SparkEntry.queries(name)(spark, sf)
+          .collect().map(_.toString).sorted.toVector
       }
     }
-  }
 
   for (q <- Seq("q_bootstrap_ci", "q_simhash", "q_winnow", "q_span_corruption"))
     test(s"$q is bit-equal with the spread gate forced ON at spec scale " +
@@ -64,14 +39,9 @@ class Round14BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("the forced gate actually fires at spec scale: scanStarved is " +
     "true under floor 0 and false under the default floor") {
-    val prev = spark.conf.getOption(Tables.SpreadMinBytesConfKey)
-    try {
-      spark.conf.set(Tables.SpreadMinBytesConfKey, "0")
+    withConf(Tables.SpreadMinBytesConfKey, "0") {
       assert(Tables.scanStarved(spark, sf, "documents"),
         "floor 0 must make the sf0.001 documents scan spread-eligible")
-    } finally prev match {
-      case Some(v) => spark.conf.set(Tables.SpreadMinBytesConfKey, v)
-      case None    => spark.conf.unset(Tables.SpreadMinBytesConfKey)
     }
     assert(!Tables.scanStarved(spark, sf, "documents"),
       "default floor must keep the sf0.001 documents scan un-spread " +

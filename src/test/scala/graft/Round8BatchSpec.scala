@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
@@ -14,22 +12,9 @@ import graft.functions.GraftFunctions
   * SafetySketchGraphSpec discipline), plus the aggregate's linearity
   * and partitioning-invariance properties that license its oracle.
   */
-class Round8BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Round8BatchSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("round8-batch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 

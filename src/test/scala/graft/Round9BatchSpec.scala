@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.MediaCodec
@@ -11,22 +9,9 @@ import graft.ops.MediaCodec
   * the IVF nprobe ladder — each pinned by independent driver-side
   * recomputes and plan-shape assertions.
   */
-class Round9BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Round9BatchSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("round9-batch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 

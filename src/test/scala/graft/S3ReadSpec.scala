@@ -8,14 +8,13 @@ import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.source.S3SigV4
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end `s3a://` reads against an in-JVM S3-dialect stub — the
   * object-store scheme the reference's host httpfs provides
-  * (/root/reference/README.md:58-69; the sandbox has no egress and no
-  * AWS connector jars, so an in-JVM stub speaking the S3 GET/HEAD
+  * (the reference's README.md:58-69; tests run without network access
+  * or AWS connector jars, so an in-JVM stub speaking the S3 GET/HEAD
   * subset is the honest way to exercise it).
   *
   * The stub is NOT a pushover: it verifies real AWS SigV4 header
@@ -26,7 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * RangedHttpReadSpec: identical results to local reads, ranged (not
   * whole-object) data movement, failed auth fails the scan.
   */
-class S3ReadSpec extends AnyFunSuite with BeforeAndAfterAll {
+class S3ReadSpec extends AnyFunSuite with SessionSuite {
 
   case class Req(method: String, path: String, range: Option[String],
       served: Long, authOk: Boolean)
@@ -56,22 +55,6 @@ class S3ReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   )
 
   private val RangeSpec = """bytes=(\d+)-(\d*)""".r
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("s3-read-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.hadoop.fs.s3a.impl", "graft.source.S3LiteFileSystem")
-    .config("spark.hadoop.fs.s3a.access.key", Access)
-    .config("spark.hadoop.fs.s3a.secret.key", Secret)
-    .config("spark.hadoop.fs.s3a.endpoint.region", Region)
-    // 2-entry ListObjectsV2 pages: every multi-object listing in this
-    // spec must walk the continuation-token path to enumerate fully
-    .config("spark.hadoop.fs.s3a.paging.maximum", "2")
-    .getOrCreate()
 
   override def beforeAll(): Unit = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
@@ -138,9 +121,15 @@ class S3ReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     })
     server.start()
     port = server.getAddress.getPort
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.s3a.endpoint", s"http://127.0.0.1:$port")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.s3a.impl", "graft.source.S3LiteFileSystem")
+    conf.set("fs.s3a.access.key", Access)
+    conf.set("fs.s3a.secret.key", Secret)
+    conf.set("fs.s3a.endpoint.region", Region)
+    conf.set("fs.s3a.endpoint", s"http://127.0.0.1:$port")
+    // 2-entry ListObjectsV2 pages: every multi-object listing in this
+    // spec must walk the continuation-token path to enumerate fully
+    conf.set("fs.s3a.paging.maximum", "2")
   }
 
   /** Recompute the SigV4 signature with the shared secret (query string
@@ -223,8 +212,8 @@ class S3ReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    spark.stop()
     if (server != null) server.stop(0)
+    super.afterAll()
   }
 
   private def snapshot(): Seq[Req] = reqs.synchronized(reqs.asScala.toVector)

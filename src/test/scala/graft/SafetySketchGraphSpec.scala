@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Safety (PII + decontamination), sketch (KMV, count-min), and graph
@@ -10,21 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (CM never underestimates, PageRank conserves mass up to floor
   * leakage, determinism across runs).
   */
-class SafetySketchGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SafetySketchGraphSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("safety-sketch-graph-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TopKAggregator
@@ -11,21 +9,9 @@ import graft.ops.Skew
 /** Scale tooling: salted skew join correctness, typed top-k aggregator,
   * approximate-distinct error bound.
   */
-class ScaleToolsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScaleToolsSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("scale-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   test("salted join returns exactly the plain join's result") {
     val o = Tables.orders(spark, sf)

@@ -1,0 +1,56 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.plans.SmallSortSinglePartition
+
+/** [[Sessions.local]] builds the bench's session, and it is the only
+  * place a session is built.
+  */
+class SessionsSpec extends AnyFunSuite with SessionSuite {
+
+  test("the session installs GraftExtensions: SQL functions and the " +
+    "query-stage prep rule") {
+    val d = spark.sql("SELECT hamming_distance('111', '010') AS d")
+      .collect()(0).getInt(0)
+    assert(d === 2)
+    val prep = spark.sessionState.adaptiveRulesHolder.queryStagePrepRules
+    assert(prep.contains(SmallSortSinglePartition), prep)
+  }
+
+  test("shuffle partitions equal the core count") {
+    assert(spark.sparkContext.master === s"local[$cpus]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === cpus.toString)
+  }
+
+  test("another core count while a context runs fails and names both " +
+    "masters") {
+    spark
+    val e = intercept[IllegalStateException](Sessions.local(cpus + 1))
+    assert(e.getMessage.contains(s"local[$cpus]"), e.getMessage)
+    assert(e.getMessage.contains(s"local[${cpus + 1}]"), e.getMessage)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === cpus.toString)
+  }
+
+  test("no session builder outside Sessions.scala") {
+    assert(new File("src/main/scala/graft/Sessions.scala").isFile)
+    val builder = ("SparkSession" + """\s*\.\s*builder""").r
+    val hits = Seq("src/main", "src/test").flatMap { root =>
+      Using.resource(Files.walk(new File(root).toPath)) { paths =>
+        paths.iterator().asScala
+          .filter(_.toString.endsWith(".scala"))
+          .filterNot(_.getFileName.toString == "Sessions.scala")
+          .filter(p => builder.findFirstIn(
+            new String(Files.readAllBytes(p), "ISO-8859-1")).isDefined)
+          .map(_.toString).toVector
+      }
+    }
+    assert(hits.isEmpty, s"build sessions with Sessions.local: $hits")
+  }
+}

@@ -2,34 +2,16 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Sink-side scale behaviors: partitioned writes with partition pruning
   * on read-back, and bucketed tables joining without an exchange — the
   * two storage-layout levers for 100 TB co-located access.
   */
-class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SinkSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val wh = Files.createTempDirectory("graft_warehouse").toFile.getPath
-    SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("sink-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   test("partitioned parquet write prunes partitions on filtered read-back") {
     val out = Files.createTempDirectory("events_part").toFile.getPath
@@ -53,11 +35,15 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bucketed tables join without an exchange (co-located join)") {
+    // external tables: the data lives in a temp dir, not the warehouse
+    val wh = Files.createTempDirectory("graft_buckets")
     Tables.orders(spark, sf).write
       .bucketBy(8, "o_custkey").sortBy("o_custkey")
+      .option("path", wh.resolve("orders_b").toString)
       .mode("overwrite").saveAsTable("orders_b")
     Tables.customer(spark, sf).write
       .bucketBy(8, "c_custkey").sortBy("c_custkey")
+      .option("path", wh.resolve("customer_b").toString)
       .mode("overwrite").saveAsTable("customer_b")
 
     val joined = spark

@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, MetadataBuilder}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -15,24 +13,14 @@ import scala.jdk.CollectionConverters._
   * steers the conversion, resolution and SQL-query construction must
   * launch no job, and a rewritten file must be read again.
   */
-class TablesMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TablesMetaSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.01"
   private val fixtures = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[2]")
-    .appName("tables-meta-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
+  override protected def cpus: Int = 2
 
   /** Runs `body` with `key` set to `value` (unset when None), restoring
     * the previous setting afterwards.

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The events fixture has shipped ts in two physical forms —
@@ -11,19 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the schema-tolerant helpers in [[Tables]] so a future fixture flip
   * cannot silently break the readers again.
   */
-class TablesTsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TablesTsSpec extends AnyFunSuite with SessionSuite {
 
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[2]")
-    .appName("tables-ts-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
+  override protected def cpus: Int = 2
 
   private val us = 1700000000123456L // some µs epoch with sub-ms precision
 

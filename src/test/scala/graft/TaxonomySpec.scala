@@ -4,9 +4,8 @@ import java.io.{File, RandomAccessFile}
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.MailboxSchema
@@ -19,19 +18,10 @@ import graft.source._
   * scans, sidecar content-fingerprint freshness, files-read metric
   * accounting, and seek-based enumerated partitions.
   */
-class TaxonomySpec extends AnyFunSuite with BeforeAndAfterAll {
+class TaxonomySpec extends AnyFunSuite with SessionSuite {
 
   private var dir: File = _
   private var box: String = _
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("taxonomy-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   override def beforeAll(): Unit = {
     dir = Files.createTempDirectory("mailbox_taxonomy").toFile
@@ -39,10 +29,7 @@ class TaxonomySpec extends AnyFunSuite with BeforeAndAfterAll {
     MailboxGen.writeFile(new File(dir, "mixed_plain.mbx"),
       MailboxGen.taxonomyLines, writeIndex = false)
     box = new File(dir, "mixed.mbx").getPath
-    spark.sparkContext.setLogLevel("WARN")
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   private def ids(df: DataFrame): Seq[Long] =
     df.select("node_id").collect().map(_.getLong(0)).sorted.toSeq

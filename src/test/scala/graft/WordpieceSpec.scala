@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Wordpiece
@@ -13,16 +11,7 @@ import graft.ops.Wordpiece
   * than BPE's frequency argmax on a corpus built to separate them, and
   * the greedy longest-match-first (MaxMatch) walk.
   */
-class WordpieceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("wordpiece-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WordpieceSpec extends AnyFunSuite with SessionSuite {
 
   /** Pair (x,y) is the most FREQUENT (10 > 5) but its units are
     * common (x, y appear 30× each); pair (q,z) is rarer but its units
@@ -41,9 +30,6 @@ class WordpieceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .coalesce(1).write.parquet(s"$d/documents.parquet")
     d
   }
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   test("step-1 merge is the likelihood argmax, not the frequency argmax") {
     val wp = SparkEntry.queries("q_wordpiece_train")(spark, dir)

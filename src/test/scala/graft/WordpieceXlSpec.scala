@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.WordpieceXl
@@ -12,21 +10,9 @@ import graft.ops.WordpieceXl
   * assertions (round-10 verdict #1: the vocabulary must enter the
   * plan as a scanned relation, never a typedlit literal).
   */
-class WordpieceXlSpec extends AnyFunSuite with BeforeAndAfterAll {
+class WordpieceXlSpec extends AnyFunSuite with SessionSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("wordpiece-xl-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-  override def afterAll(): Unit = spark.stop()
 
   test("the vocabulary is EXACTLY the 4096-piece budget with the " +
     "(cnt DESC, piece ASC) total order filling 2-grams first") {
