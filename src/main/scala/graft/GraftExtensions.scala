@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
-import graft.functions.{DotProductQ, FiletimeToTimestamp, HammingDistance, HllSketchAgg}
+import graft.functions.{DotProductQ, GraftFunctions, HammingDistance}
 
 /** Algebraic simplification of graft's own expressions — a
   * Rule[LogicalPlan] injected as an optimizer rule: `hamming_distance
@@ -87,97 +87,10 @@ object FuseDotProduct extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("filetime_to_timestamp"),
-        new ExpressionInfo(classOf[FiletimeToTimestamp].getName, "filetime_to_timestamp"),
-        (exprs: Seq[Expression]) => FiletimeToTimestamp(exprs.head)))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("hamming_distance"),
-        new ExpressionInfo(classOf[HammingDistance].getName, "hamming_distance"),
-        (exprs: Seq[Expression]) => HammingDistance(exprs.head, exprs(1))))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("dot_product_q"),
-        new ExpressionInfo(classOf[DotProductQ].getName, "dot_product_q"),
-        (exprs: Seq[Expression]) => DotProductQ(exprs.head, exprs(1))))
-    // a native AGGREGATE function: the analyzer wraps an
-    // AggregateFunction-valued builder in AggregateExpression itself
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("graft_hll"),
-        new ExpressionInfo(classOf[HllSketchAgg].getName, "graft_hll"),
-        (exprs: Seq[Expression]) => HllSketchAgg(exprs.head)))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("graft_minhash"),
-        new ExpressionInfo(classOf[graft.functions.MinHashAgg].getName,
-          "graft_minhash"),
-        (exprs: Seq[Expression]) => graft.functions.MinHashAgg(exprs.head)))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("graft_kmv_median"),
-        new ExpressionInfo(classOf[graft.functions.KmvMedianAgg].getName,
-          "graft_kmv_median"),
-        (exprs: Seq[Expression]) => graft.functions.KmvMedianAgg(exprs.head)))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("graft_f2"),
-        new ExpressionInfo(classOf[graft.functions.F2SketchAgg].getName,
-          "graft_f2"),
-        (exprs: Seq[Expression]) =>
-          graft.functions.F2SketchAgg(exprs.head, exprs(1))))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("winnow_stats"),
-        new ExpressionInfo(classOf[graft.functions.WinnowStats].getName,
-          "winnow_stats"),
-        (exprs: Seq[Expression]) => graft.functions.WinnowStats(exprs.head)))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("winnow_fps"),
-        new ExpressionInfo(classOf[graft.functions.WinnowFps].getName,
-          "winnow_fps"),
-        (exprs: Seq[Expression]) => graft.functions.WinnowFps(exprs.head)))
-    // the fused scalar kernels, so SQL users have full parity with the
-    // Column API (literal-argument builders for the parameterized two)
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("minhash_slices"),
-        new ExpressionInfo(classOf[graft.functions.MinhashSlices].getName,
-          "minhash_slices"),
-        (exprs: Seq[Expression]) => graft.functions.MinhashSlices(exprs.head)))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("simhash16"),
-        new ExpressionInfo(classOf[graft.functions.Simhash16].getName,
-          "simhash16"),
-        (exprs: Seq[Expression]) => graft.functions.Simhash16(exprs.head)))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("chars_in_ranges"),
-        new ExpressionInfo(classOf[graft.functions.CountCharsInRanges].getName,
-          "chars_in_ranges"),
-        (exprs: Seq[Expression]) => graft.functions.CountCharsInRanges(
-          exprs.head, graft.functions.GraftFunctions.parseRanges(
-            graft.functions.GraftFunctions.litString(exprs(1),
-              "chars_in_ranges")))))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("jaro_winkler"),
-        new ExpressionInfo(classOf[graft.functions.JaroWinkler].getName,
-          "jaro_winkler"),
-        (exprs: Seq[Expression]) => graft.functions.JaroWinkler(exprs.head,
-          exprs(1))))
-    ext.injectFunction(
-      (
-        new FunctionIdentifier("gram_run_stats"),
-        new ExpressionInfo(classOf[graft.functions.GramRunStats].getName,
-          "gram_run_stats"),
-        (exprs: Seq[Expression]) => graft.functions.GramRunStats(exprs.head,
-          graft.functions.GraftFunctions.litInt(exprs(1),
-            "gram_run_stats"))))
+    GraftFunctions.sqlFunctions.foreach { case (name, cls, builder) =>
+      ext.injectFunction(
+        (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
     ext.injectOptimizerRule(_ => SimplifyGraftExpressions)
     ext.injectOptimizerRule(_ => FuseDotProduct)
     // injected optimizer rules run in the operator-optimization batch,

@@ -811,68 +811,41 @@ object GraftFunctions {
       s"$fn expects a foldable integer literal argument, got $e")
   }
 
+  /** Every graft SQL function: (name, expression class, builder). Both
+    * registration paths read it: GraftExtensions injects it into every
+    * session it is installed in, [[register]] adds it to one session as
+    * temp functions. The parameterized kernels take literal arguments.
+    */
+  val sqlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("filetime_to_timestamp", classOf[FiletimeToTimestamp],
+      e => FiletimeToTimestamp(e.head)),
+    ("hamming_distance", classOf[HammingDistance],
+      e => HammingDistance(e.head, e(1))),
+    ("dot_product_q", classOf[DotProductQ], e => DotProductQ(e.head, e(1))),
+    // native AGGREGATE functions: the analyzer wraps an
+    // AggregateFunction-valued builder in AggregateExpression itself
+    ("graft_hll", classOf[HllSketchAgg], e => HllSketchAgg(e.head)),
+    ("graft_minhash", classOf[MinHashAgg], e => MinHashAgg(e.head)),
+    ("graft_kmv_median", classOf[KmvMedianAgg], e => KmvMedianAgg(e.head)),
+    ("graft_f2", classOf[F2SketchAgg], e => F2SketchAgg(e.head, e(1))),
+    ("winnow_stats", classOf[WinnowStats], e => WinnowStats(e.head)),
+    ("winnow_fps", classOf[WinnowFps], e => WinnowFps(e.head)),
+    ("minhash_slices", classOf[MinhashSlices], e => MinhashSlices(e.head)),
+    ("simhash16", classOf[Simhash16], e => Simhash16(e.head)),
+    ("chars_in_ranges", classOf[CountCharsInRanges],
+      e => CountCharsInRanges(e.head,
+        parseRanges(litString(e(1), "chars_in_ranges")))),
+    ("gram_run_stats", classOf[GramRunStats],
+      e => GramRunStats(e.head, litInt(e(1), "gram_run_stats"))),
+    ("jaro_winkler", classOf[JaroWinkler], e => JaroWinkler(e.head, e(1))))
+
   /** Register every graft function for SQL use (temp-function path;
     * GraftExtensions.injectFunction is the standing-session analog).
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "filetime_to_timestamp",
-      exprs => FiletimeToTimestamp(exprs.head),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "hamming_distance",
-      exprs => HammingDistance(exprs.head, exprs(1)),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "dot_product_q",
-      exprs => DotProductQ(exprs.head, exprs(1)),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_hll",
-      exprs => HllSketchAgg(exprs.head),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => MinHashAgg(exprs.head),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_kmv_median",
-      exprs => KmvMedianAgg(exprs.head),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_f2",
-      exprs => F2SketchAgg(exprs.head, exprs(1)),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "winnow_stats",
-      exprs => WinnowStats(exprs.head),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "winnow_fps",
-      exprs => WinnowFps(exprs.head),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "minhash_slices",
-      exprs => MinhashSlices(exprs.head),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "simhash16",
-      exprs => Simhash16(exprs.head),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "chars_in_ranges",
-      exprs => CountCharsInRanges(exprs.head,
-        parseRanges(litString(exprs(1), "chars_in_ranges"))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "gram_run_stats",
-      exprs => GramRunStats(exprs.head,
-        litInt(exprs(1), "gram_run_stats")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "jaro_winkler",
-      exprs => JaroWinkler(exprs.head, exprs(1)),
-      "built-in")
+    sqlFunctions.foreach { case (name, _, builder) =>
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

@@ -552,7 +552,6 @@ object Corpus {
   val qMinhashAgg = Q(
     "q_minhash_agg",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.graft_minhash
       val toks = Tables.documents(s, d)
         .select(col("source"),

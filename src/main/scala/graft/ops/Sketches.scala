@@ -616,7 +616,6 @@ object Sketches {
   val qHllAgg = Q(
     "q_hll_agg",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.graft_hll
       val est = Tables.orders(s, d)
         .groupBy(col("o_orderpriority").as("scope"))
@@ -666,7 +665,6 @@ object Sketches {
   val qKmvMedian = Q(
     "q_kmv_median",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.graft_kmv_median
       import s.implicits._
       val cents = Tables.orders(s, d).select(

@@ -1331,7 +1331,6 @@ object StreamingOps {
   val qStreamKmv = Q(
     "q_stream_kmv",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.graft_kmv_median
       val rawSchema = Tables.eventsRaw(s, d).schema
       val qn = s"graft_stream_${nameCounter.incrementAndGet()}"
@@ -1394,7 +1393,6 @@ object StreamingOps {
   val qStreamF2 = Q(
     "q_stream_f2",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.graft_f2
       val rawSchema = Tables.eventsRaw(s, d).schema
       val qn = s"graft_stream_${nameCounter.incrementAndGet()}"

@@ -99,26 +99,6 @@ object MailboxIndex {
       blocks: Array[Block],
       ts: TsStats) {
 
-    /** Exact delivery-time MIN/MAX over the rows matching `filter`:
-      * None when the statistics cannot answer (a matching class has
-      * head-less rows, or the filter wants folders — folders carry no
-      * delivery time); Some((min, max, nonNullRows)) otherwise, min/max
-      * meaningful only when nonNullRows > 0 (SQL MIN/MAX of all-null is
-      * NULL).
-      */
-    def deliveryStats(filter: RecordFilter): Option[(Long, Long, Long)] =
-      if (filter.wantFolder) None
-      else {
-        val ms = matchingClasses(filter)
-        if (ms.exists(i => ts.unknown(i) > 0)) None
-        else {
-          val withVals = ms.filter(i => ts.nonNull(i) > 0)
-          val n = withVals.map(ts.nonNull).sum
-          if (withVals.isEmpty) Some((Long.MaxValue, Long.MinValue, 0L))
-          else Some((withVals.map(ts.min).min, withVals.map(ts.max).max, n))
-        }
-      }
-
     /** Index positions of message classes (stored namespaced as "m:…",
       * so the folder marker can never collide) matching the plan
       * filter — taxonomy + exact-equality semantics live in

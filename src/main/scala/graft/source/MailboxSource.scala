@@ -56,8 +56,11 @@ import graft.model.MailboxSchema.Mode
   *  - exact `read_limit` / SupportsPushDownLimit allocation (A6),
   *  - projection pushdown — unprojected columns are never parsed (A7;
   *    row_serializer.cpp:1211-1266),
-  *  - count(*) pushdown: zero execution IO on indexed files, a
-  *    distributed classify-only scan otherwise (A9),
+  *  - aggregate pushdown (A8, A9): a count(*) or min/max of the delivery
+  *    time that planning or the sidecars know exactly becomes final rows
+  *    in one static-rows partition, with zero execution IO; any other
+  *    count(*) drains each partition's row reader with an empty
+  *    projection, so a count applies the scan's own record rules,
   *  - virtual row-id columns `__partition`/`__node_id` for late
   *    materialization (A10; schema.hpp:11-17),
   *  - per-task scan metrics: rows / bytes / files read (A11; reference
@@ -241,39 +244,19 @@ final case class PstPartition(
     exact: Boolean = false,
     firstInFile: Boolean = false) extends MailboxPartition
 
-/** A9 — when count(*) is answered entirely from planning statistics
-  * (every file's count exact), the scan collapses to ONE partition
-  * carrying the total: a 167-file archive costs one task instead of
-  * one per planned slice (measured 0.84 s → ~0.2 s on the
-  * 1.17M-message reference-scale probe, `graft.tools.RefScaleBench`).
+/** Final rows the scan answers without reading a record (A8, A9): a
+  * stats-answered aggregate (one row, or one row per raw
+  * `message_class`), or the count(*) of what planning counted exactly.
+  * `rowsRead` is the rows-read metric its reader reports: the rows a
+  * count stands for, 0 for a stats answer.
   */
-final case class TotalCountPartition(total: Long) extends MailboxPartition {
-  def index: Int = 0
-  def file: String = ""
-  def firstInFile: Boolean = false
-}
+final case class StaticRowsPartition(rows: Array[InternalRow], rowsRead: Long)
+  extends InputPartition
 
-/** One static partition carrying a fully stats-answered aggregate row
-  * (count / delivery-time min/max from v3 sidecar statistics — zero
-  * execution IO, like [[TotalCountPartition]]).
-  */
-final case class StaticStatsPartition(values: Array[Long],
-    nulls: Array[Boolean]) extends MailboxPartition {
-  def index: Int = 0
-  def file: String = ""
-  def firstInFile: Boolean = false
-}
-
-/** One static partition carrying a stats-answered GROUP BY
-  * message_class aggregate: one row per raw class, values aligned
-  * with the pushed schema's aggregate fields (zero execution IO).
-  */
-final case class GroupStatsPartition(classes: Array[String],
-    values: Array[Array[Long]], nulls: Array[Array[Boolean]])
-  extends MailboxPartition {
-  def index: Int = 0
-  def file: String = ""
-  def firstInFile: Boolean = false
+object StaticRowsPartition {
+  /** One count(*) row standing for `n` planned rows. */
+  def count(n: Long): StaticRowsPartition =
+    StaticRowsPartition(Array(new GenericInternalRow(Array[Any](n))), n)
 }
 
 /** Driver-side planning: glob → per-file metadata (sidecar index or file
@@ -304,12 +287,17 @@ object MailboxPlanner {
   }
 
   /** Resolve a glob to (path, size) pairs, preserving non-local schemes.
-    * Local paths stay scheme-less so `pst_path` matches user input.
+    * Local paths stay scheme-less, and the matches of a relative local
+    * pattern stay relative to the filesystem's working directory, so
+    * `pst_path` matches user input.
     */
   def globStatuses(pattern: String, conf: Configuration): Seq[(String, Long)] = {
     val p  = new Path(pattern)
     val fs = p.getFileSystem(conf)
     val statuses = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
+    val relativeTo =
+      if (p.isAbsolute || p.toUri.getScheme != null) None
+      else Some(fs.getWorkingDirectory.toUri.getPath.stripSuffix("/") + "/")
     // A20: a LITERAL path (no wildcards) that matches nothing must be
     // an error, not a silent empty scan. globStatus swallows the
     // filesystem's FileNotFoundException (filesystems that do proper
@@ -321,7 +309,9 @@ object MailboxPlanner {
     statuses.filter(_.isFile).map { st =>
       val uri = st.getPath.toUri
       val name =
-        if (uri.getScheme == null || uri.getScheme == "file") uri.getPath
+        if (uri.getScheme == null || uri.getScheme == "file")
+          relativeTo.filter(uri.getPath.startsWith)
+            .fold(uri.getPath)(dir => uri.getPath.substring(dir.length))
         else st.getPath.toString
       // length-less schemes (http/s report -1) would make byte-range
       // planning vacuous (`while (start < bytes)` never runs → silent
@@ -423,15 +413,6 @@ object MailboxPlanner {
     (offsets.toArray, nodes.toArray)
   }
 
-  /** Statistics-only probe for aggregate pushdown: the exact
-    * (matchingRows, Some((deliveryMin, deliveryMax)) when any non-null,
-    * nonNullRows) over the glob, answered ENTIRELY from fresh v3
-    * sidecars — O(#files) metadata reads, zero corpus IO. None when any
-    * member cannot answer exactly (PST members, absent/stale sidecars,
-    * inconclusive head statistics, a read_limit, or folder mode — the
-    * caller must fall back to the ordinary columnar scan plan, which is
-    * always correct).
-    */
   /** One sidecar read per glob member, fanned out on a bounded pool
     * (same O(#files) parallel-metadata discipline as [[plan]] — a
     * 10,000-file archive must not pay 10,000 serial round-trips at
@@ -460,38 +441,20 @@ object MailboxPlanner {
     } finally pool.shutdown()
   }
 
-  def statsProbe(opts: MailboxOptions, filter: RecordFilter,
-      conf: Configuration): Option[(Long, Option[(Long, Long)], Long)] = {
-    if (filter.wantFolder || opts.readLimit != Long.MaxValue) return None
-    parallelIndexProbe(opts, conf) { ix =>
-      ix.deliveryStats(filter).map(st => (ix.matchingCount(filter), st))
-    }.map { perFile =>
-      var count = 0L
-      var mn    = Long.MaxValue
-      var mx    = Long.MinValue
-      var n     = 0L
-      perFile.foreach { case (cnt, (fmn, fmx, fn)) =>
-        count += cnt
-        if (fn > 0) {
-          if (fmn < mn) mn = fmn
-          if (fmx > mx) mx = fmx
-          n += fn
-        }
-      }
-      (count, if (n > 0) Some((mn, mx)) else None, n)
-    }
-  }
-
-  /** Plan-time probe for GROUP BY message_class aggregates: per raw
-    * class across the whole glob, exact count plus (when `needTs`)
-    * conclusive delivery-time min/max. Refuses (None) when any glob
-    * member lacks a fresh sidecar, when a matching class is the empty
-    * string (a record head without the field — the scan would emit
-    * NULL there, which the sidecar conflates with ""), or when
-    * `needTs` and any matching class has inconclusive timestamp heads.
+  /** Statistics-only probe for aggregate pushdown: per raw message class
+    * across the whole glob, the exact count plus (when `needTs`)
+    * conclusive delivery-time min/max, answered entirely from fresh v3
+    * sidecars — O(#files) metadata reads, zero corpus IO. Refuses
+    * (None) under a read_limit or in folder mode, when any glob member
+    * lacks a fresh sidecar (PST members, absent or stale sidecars), when
+    * `grouped` and a matching class is the empty string (a record head
+    * without the field — the scan would emit NULL there, which the
+    * sidecar conflates with ""), or when `needTs` and any matching class
+    * has inconclusive timestamp heads. The caller then falls back to
+    * the ordinary scan plan, which is always correct.
     */
   def classStatsProbe(opts: MailboxOptions, filter: RecordFilter,
-      conf: Configuration, needTs: Boolean)
+      conf: Configuration, needTs: Boolean, grouped: Boolean)
       : Option[Seq[(String, Long, Option[(Long, Long)])]] = {
     if (filter.wantFolder || opts.readLimit != Long.MaxValue) return None
     parallelIndexProbe(opts, conf)(_.classGroupStats(filter)).flatMap {
@@ -500,7 +463,7 @@ object MailboxPlanner {
           String, (Long, Long, Long, Long)]() // cnt, mn, mx, nonNull
         perFile.foreach { rows =>
           rows.foreach { case (cls, cnt, mn, mx, n, unknown) =>
-            if (cls.isEmpty) return None
+            if (grouped && cls.isEmpty) return None
             if (needTs && unknown > 0) return None
             val (c0, mn0, mx0, n0) =
               acc.getOrElse(cls, (0L, Long.MaxValue, Long.MinValue, 0L))
@@ -694,11 +657,10 @@ class MailboxScanBuilder(opts: MailboxOptions)
   private var accepted: Array[Filter] = Array.empty
   private var limit: Option[Long] = None
   private var countStar: Boolean = false
-  private var pushedStats: Option[Stats] = None
-  private var pushedGroups: Option[Groups] = None
+  private var pushed: Option[PushedAggregate] = None
   // the probe's answer for the last aggregate Spark offered: Spark asks
   // supportCompletePushDown first, and pushAggregation reuses the answer
-  private var probed: Option[(Aggregation, Option[Answer])] = None
+  private var probed: Option[(Aggregation, Option[PushedAggregate])] = None
 
   private def filter: RecordFilter = RecordFilter(opts.mode, exactClasses)
 
@@ -730,21 +692,20 @@ class MailboxScanBuilder(opts: MailboxOptions)
   }
 
   /** A9 — count(*) with no grouping is answered from planning statistics;
-    * partial pushdown: each partition emits its exact count, Spark sums.
+    * partial pushdown: each partition emits its count, Spark sums.
     *
     * Beyond count(*): MIN/MAX(message_delivery_time) — alone, together,
-    * or mixed with count(*) — is answered from the v3 sidecars'
-    * per-class timestamp statistics (the parquet-footer-min/max analog)
-    * when EVERY glob member has fresh, conclusive stats; the
-    * [[MailboxPlanner.statsProbe]] decides at plan time, and anything
-    * it cannot answer exactly falls back to the ordinary columnar scan
-    * (Spark then aggregates the pruned timestamp column itself).
+    * or mixed with count(*), globally or grouped by message_class — is
+    * answered from the v3 sidecars' per-class statistics (the
+    * parquet-footer-min/max analog) when EVERY glob member has fresh,
+    * conclusive stats; [[MailboxPlanner.classStatsProbe]] decides at
+    * plan time, and anything it cannot answer exactly falls back to the
+    * ordinary columnar scan (Spark then aggregates the pruned columns).
     */
   override def pushAggregation(agg: Aggregation): Boolean = {
     if (limit.nonEmpty) return false
     answer(agg) match {
-      case Some(Left(stats))   => pushedStats = Some(stats); true
-      case Some(Right(groups)) => pushedGroups = Some(groups); true
+      case answered @ Some(_) => pushed = answered; true
       case None if countStarOnly(agg) => countStar = true; true
       case None => false
     }
@@ -765,14 +726,11 @@ class MailboxScanBuilder(opts: MailboxOptions)
   /** The sidecar probe's exact answer to `agg`, probed once per
     * aggregate.
     */
-  private def answer(agg: Aggregation): Option[Answer] =
+  private def answer(agg: Aggregation): Option[PushedAggregate] =
     probed match {
       case Some((a, result)) if a eq agg => result
       case _ =>
-        val result =
-          if (agg.groupByExpressions.nonEmpty) probeGrouped(agg).map(Right(_))
-          else if (countStarOnly(agg)) None
-          else probeStats(agg).map(Left(_))
+        val result = probe(agg)
         probed = Some((agg, result))
         result
     }
@@ -796,93 +754,62 @@ class MailboxScanBuilder(opts: MailboxOptions)
     if (kinds.exists(_.isEmpty)) None else Some(kinds.flatten)
   }
 
-  private def probeStats(agg: Aggregation): Option[Stats] =
-    statKinds(agg).flatMap { kinds =>
-      MailboxPlanner.statsProbe(opts, filter,
-        MailboxPlanner.activeHadoopConf()).map { case (cnt, minMax, _) =>
-        val fields = new Array[StructField](kinds.length)
-        val values = new Array[Long](kinds.length)
-        val nulls  = new Array[Boolean](kinds.length)
-        kinds.zipWithIndex.foreach {
-          case (KCount, i) =>
-            fields(i) = StructField("count(*)", LongType, nullable = false)
-            values(i) = cnt
-          case (k, i) =>
-            fields(i) = StructField(
-              s"${if (k == KMin) "min" else "max"}($TsField)",
-              TimestampType, nullable = true)
-            minMax match {
-              case Some((mn, mx)) => // epoch seconds → catalyst micros
-                values(i) = (if (k == KMin) mn else mx) * 1000000L
-              case None => nulls(i) = true // zero non-null rows
-            }
-        }
-        (StructType(fields.toSeq), values, nulls)
-      }
-    }
-
-  /** GROUP BY message_class + {count(*), min/max(delivery time)} from
-    * the v3 sidecars' per-class statistics — the whole aggregate
-    * becomes one static partition emitting one row per raw class, the
-    * final rows (complete pushdown). Refused unless every glob member's
-    * sidecar is fresh and conclusive for what the query needs — the
-    * probe's rules, see [[MailboxPlanner.classStatsProbe]].
+  /** `agg` as final rows built from the per-class sidecar statistics:
+    * GROUP BY message_class emits one row per raw class, a global
+    * aggregate folds the classes into one row. The lone count(*) is not
+    * probed here: planning answers it per partition.
     */
-  private def probeGrouped(agg: Aggregation): Option[Groups] = {
-    val gbOk = agg.groupByExpressions match {
+  private def probe(agg: Aggregation): Option[PushedAggregate] = {
+    val grouped = agg.groupByExpressions.nonEmpty
+    val shapeOk = agg.groupByExpressions match {
+      case Array() => !countStarOnly(agg)
       case Array(nr: NamedReference) =>
-        nr.fieldNames.length == 1 && nr.fieldNames()(0) == "message_class"
+        nr.fieldNames.length == 1 && nr.fieldNames()(0) == "message_class" &&
+          MailboxSchema.isMessageMode(opts.mode)
       case _ => false
     }
-    if (!gbOk || !MailboxSchema.isMessageMode(opts.mode)) return None
-    val kinds = statKinds(agg).getOrElse(Nil)
-    if (kinds.isEmpty) return None
-    val needTs = kinds.exists(k => k == KMin || k == KMax)
-    MailboxPlanner.classStatsProbe(opts, filter,
-      MailboxPlanner.activeHadoopConf(), needTs).map { rows =>
-        val aggFields = kinds.map {
-          case KCount =>
-            StructField("count(*)", LongType, nullable = false)
-          case KMin =>
-            StructField(s"min($TsField)", TimestampType, nullable = true)
-          case KMax =>
-            StructField(s"max($TsField)", TimestampType, nullable = true)
+    for {
+      kinds <- statKinds(agg)
+      if shapeOk && (kinds.nonEmpty || !grouped)
+      perClass <- MailboxPlanner.classStatsProbe(opts, filter,
+        MailboxPlanner.activeHadoopConf(),
+        needTs = kinds.exists(_ != KCount), grouped)
+    } yield {
+      // epoch seconds → catalyst micros; NULL when no non-null value
+      def row(lead: Seq[Any], cnt: Long, minMax: Option[(Long, Long)]) =
+        new GenericInternalRow((lead ++ kinds.map {
+          case KCount => cnt
+          case KMin   => minMax.map(_._1 * 1000000L: Any).orNull
+          case KMax   => minMax.map(_._2 * 1000000L: Any).orNull
+        }).toArray)
+      val rows: Seq[InternalRow] =
+        if (grouped) perClass.map { case (cls, cnt, minMax) =>
+          row(Seq(UTF8String.fromString(cls)), cnt, minMax)
         }
-        val schema = StructType(
-          StructField("message_class", StringType, nullable = true) +:
-            aggFields.toSeq)
-        val classes = rows.map(_._1).toArray
-        val values  = rows.map { case (_, cnt, minMax) =>
-          kinds.map {
-            case KCount => cnt
-            case KMin   => minMax.map(_._1 * 1000000L).getOrElse(0L)
-            case KMax   => minMax.map(_._2 * 1000000L).getOrElse(0L)
-          }.toArray
-        }.toArray
-        val nulls = rows.map { case (_, _, minMax) =>
-          kinds.map {
-            case KCount => false
-            case _      => minMax.isEmpty
-          }.toArray
-        }.toArray
-        (schema, classes, values, nulls)
+        else Seq(row(Nil, perClass.map(_._2).sum,
+          perClass.flatMap(_._3).reduceOption((a, b) =>
+            (math.min(a._1, b._1), math.max(a._2, b._2)))))
+      val aggFields = kinds.map {
+        case KCount => StructField("count(*)", LongType, nullable = false)
+        case KMin   => StructField(s"min($TsField)", TimestampType, nullable = true)
+        case KMax   => StructField(s"max($TsField)", TimestampType, nullable = true)
+      }
+      PushedAggregate(
+        StructType(
+          if (grouped) StructField("message_class", StringType, nullable = true) +: aggFields
+          else aggFields),
+        grouped, rows.toArray)
     }
   }
 
   override def build(): Scan =
-    new MailboxScan(opts, requiredSchema, filter, limit, countStar,
-      pushedStats, pushedGroups)
+    new MailboxScan(opts, requiredSchema, filter, limit, countStar, pushed)
 }
 
 object MailboxScanBuilder {
-  /** A stats-answered global aggregate: schema, values, null flags. */
-  type Stats = (StructType, Array[Long], Array[Boolean])
-  /** A stats-answered GROUP BY message_class: schema, the classes, and
-    * per class its values and null flags.
-    */
-  type Groups = (StructType, Array[String], Array[Array[Long]],
-    Array[Array[Boolean]])
-  type Answer = Either[Stats, Groups]
+  /** A stats-answered aggregate: its output schema and final rows. */
+  final case class PushedAggregate(schema: StructType, grouped: Boolean,
+      rows: Array[InternalRow])
 
   private val TsField = "message_delivery_time"
   private sealed trait StatKind
@@ -927,8 +854,7 @@ class MailboxScan(
     filter: RecordFilter,
     limit: Option[Long],
     countStar: Boolean,
-    pushedStats: Option[MailboxScanBuilder.Stats] = None,
-    pushedGroups: Option[MailboxScanBuilder.Groups] = None)
+    pushed: Option[MailboxScanBuilder.PushedAggregate] = None)
   extends Scan with Batch with SupportsReportStatistics {
 
   // captured at plan time on the driver, so custom FileSystem schemes
@@ -946,12 +872,11 @@ class MailboxScan(
     MailboxPlanner.plan(effective, filter, hadoopConf)
   }
 
-  override def readSchema(): StructType = (pushedStats, pushedGroups) match {
-    case (Some((schema, _, _)), _) => schema
-    case (None, Some((schema, _, _, _))) => schema
-    case _ if countStar =>
+  override def readSchema(): StructType = pushed match {
+    case Some(p) => p.schema
+    case None if countStar =>
       StructType(Seq(StructField("count(*)", LongType, nullable = false)))
-    case _ => requiredSchema
+    case None => requiredSchema
   }
 
   override def toBatch: Batch = this
@@ -960,18 +885,26 @@ class MailboxScan(
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new MailboxMicroBatchStream(opts, requiredSchema, filter)
 
-  override def planInputPartitions(): Array[InputPartition] =
-    (pushedStats, pushedGroups) match {
-      case (Some((_, values, nulls)), _) =>
-        // fully stats-answered: one partition, one row, zero IO (the
-        // probe already paid the O(#files) sidecar reads at push time)
-        Array(StaticStatsPartition(values, nulls))
-      case (None, Some((_, classes, values, nulls))) =>
-        Array(GroupStatsPartition(classes, values, nulls))
-      case _ if countStar && planned.exactRows.isDefined =>
-        Array(TotalCountPartition(planned.exactRows.get))
-      case _ => planned.partitions.toArray
-    }
+  override def planInputPartitions(): Array[InputPartition] = pushed match {
+    // fully stats-answered: one partition, zero IO (the probe already
+    // paid the O(#files) sidecar reads at push time)
+    case Some(p) => Array(StaticRowsPartition(p.rows, 0L))
+    // A9: every count exact → ONE partition carrying the total, so a
+    // 167-file archive costs one task instead of one per planned slice
+    // (measured 0.84 s → ~0.2 s on the 1.17M-message reference-scale
+    // probe, `graft.tools.RefScaleBench`)
+    case None if countStar && planned.exactRows.isDefined =>
+      Array(StaticRowsPartition.count(planned.exactRows.get))
+    // partitions planning counted exactly answer with their count;
+    // the rest are counted by their row readers
+    case None if countStar => planned.partitions.map {
+      case ip: IndexedPartition         => StaticRowsPartition.count(ip.takeMatching)
+      case ep: EnumeratedPartition      => StaticRowsPartition.count(ep.offsets.length)
+      case pp: PstPartition if pp.exact => StaticRowsPartition.count(pp.nodeIds.length)
+      case p                            => p
+    }.toArray
+    case None => planned.partitions.toArray
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new MailboxReaderFactory(readSchema(), opts, filter, countStar, confBroadcast)
@@ -985,37 +918,35 @@ class MailboxScan(
     */
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(
-        if (pushedStats.isDefined) 64L
-        else if (pushedGroups.isDefined)
-          64L * pushedGroups.get._2.length
-        else planned.exactRows.map(_ * 512L).getOrElse(planned.totalBytes))
-    override def numRows(): java.util.OptionalLong =
-      if (pushedStats.isDefined) java.util.OptionalLong.of(1L)
-      else if (pushedGroups.isDefined)
-        java.util.OptionalLong.of(pushedGroups.get._2.length.toLong)
-      else planned.exactRows
-        .map(java.util.OptionalLong.of)
-        .getOrElse(java.util.OptionalLong.empty())
+      java.util.OptionalLong.of(pushed match {
+        case Some(p) => 64L * p.rows.length
+        case None    => planned.exactRows.map(_ * 512L).getOrElse(planned.totalBytes)
+      })
+    override def numRows(): java.util.OptionalLong = pushed match {
+      case Some(p) => java.util.OptionalLong.of(p.rows.length.toLong)
+      case None =>
+        planned.exactRows
+          .map(java.util.OptionalLong.of)
+          .getOrElse(java.util.OptionalLong.empty())
+    }
   }
 
   /** A12 — EXPLAIN metadata, mirroring PSTDynamicToString. */
   override def description(): String = {
-    if (pushedStats.isDefined)
-      s"mailbox mode=${opts.mode} statsAggPushdown=true " +
-        s"[${pushedStats.get._1.fieldNames.mkString(", ")}]" +
-        (if (filter.filtersClass) s" classFilter=${filter.describe}" else "")
-    else if (pushedGroups.isDefined)
-      s"mailbox mode=${opts.mode} statsAggPushdown=group " +
-        s"groups=${pushedGroups.get._2.length} " +
-        s"[${pushedGroups.get._1.fieldNames.mkString(", ")}]" +
-        (if (filter.filtersClass) s" classFilter=${filter.describe}" else "")
-    else s"mailbox mode=${opts.mode} files=${planned.files} " +
-      s"partitions=${planned.partitions.length}" +
-      planned.exactRows.map(r => s" rows=$r").getOrElse(" rows=est") +
-      (if (countStar) " countStarPushdown=true" else "") +
-      limit.map(l => s" limit=$l").getOrElse("") +
-      (if (filter.filtersClass) s" classFilter=${filter.describe}" else "")
+    val classFilter =
+      if (filter.filtersClass) s" classFilter=${filter.describe}" else ""
+    pushed match {
+      case Some(p) =>
+        s"mailbox mode=${opts.mode} statsAggPushdown=" +
+          (if (p.grouped) s"group groups=${p.rows.length}" else "true") +
+          s" [${p.schema.fieldNames.mkString(", ")}]" + classFilter
+      case None =>
+        s"mailbox mode=${opts.mode} files=${planned.files} " +
+          s"partitions=${planned.partitions.length}" +
+          planned.exactRows.map(r => s" rows=$r").getOrElse(" rows=est") +
+          (if (countStar) " countStarPushdown=true" else "") +
+          limit.map(l => s" limit=$l").getOrElse("") + classFilter
+    }
   }
 }
 
@@ -1025,78 +956,55 @@ class MailboxReaderFactory(
     filter: RecordFilter,
     countStar: Boolean,
     conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[MailboxPartition]
-    lazy val hadoopConf = conf.value.value
-    p match {
-      case sp: StaticStatsPartition =>
-        return new StaticStatsReader(sp.values, sp.nulls)
-      case gp: GroupStatsPartition =>
-        return new GroupStatsReader(gp.classes, gp.values, gp.nulls)
-      case _ => ()
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case sp: StaticRowsPartition => new StaticRowsReader(sp)
+      case p: MailboxPartition if countStar =>
+        new CountReader(rowReader(p, new StructType()))
+      case p: MailboxPartition => rowReader(p, readSchema)
     }
-    if (countStar) p match {
-      case tp: TotalCountPartition => new StaticCountReader(tp.total)
-      case ip: IndexedPartition    => new StaticCountReader(ip.takeMatching)
-      case ep: EnumeratedPartition => new StaticCountReader(ep.offsets.length.toLong)
-      case rp: RangePartition      =>
-        new RangeCountReader(rp, opts, filter, hadoopConf)
-      case pp: PstPartition =>
-        if (pp.exact) new StaticCountReader(pp.nodeIds.length.toLong)
-        else new PstCountReader(pp, opts, filter, hadoopConf)
-    }
-    else p match {
-      case pp: PstPartition =>
-        new PstPartitionReader(pp, readSchema, opts, filter, hadoopConf)
-      case _ =>
-        new MailboxPartitionReader(p, readSchema, opts, filter, hadoopConf)
-    }
+
+  private def rowReader(p: MailboxPartition, schema: StructType)
+      : PartitionReader[InternalRow] = p match {
+    case pp: PstPartition =>
+      new PstPartitionReader(pp, schema, opts, filter, conf.value.value)
+    case _ =>
+      new MailboxPartitionReader(p, schema, opts, filter, conf.value.value)
   }
 }
 
-/** A9 — count(*) from planning statistics: one row with the partition's
-  * exact planned count; no file IO at execution time.
-  */
-/** Emits the single stats-answered aggregate row (zero IO). */
-class StaticStatsReader(values: Array[Long], nulls: Array[Boolean])
-  extends PartitionReader[InternalRow] {
-  private var emitted = false
-  override def next(): Boolean = if (emitted) false else { emitted = true; true }
-  override def get(): InternalRow = new GenericInternalRow(
-    values.indices.map(i =>
-      if (nulls(i)) null else values(i): Any).toArray)
-  override def close(): Unit = ()
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, 0L),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead, 0L),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead, 0L))
-}
-
-class GroupStatsReader(classes: Array[String],
-    values: Array[Array[Long]], nulls: Array[Array[Boolean]])
+/** Emits a [[StaticRowsPartition]]'s rows: no file IO at execution time. */
+class StaticRowsReader(p: StaticRowsPartition)
   extends PartitionReader[InternalRow] {
   private var i = -1
-  override def next(): Boolean = { i += 1; i < classes.length }
-  override def get(): InternalRow = new GenericInternalRow(
-    (UTF8String.fromString(classes(i)): Any) +:
-      values(i).indices.map(j =>
-        if (nulls(i)(j)) null else values(i)(j): Any).toArray)
+  override def next(): Boolean = { i += 1; i < p.rows.length }
+  override def get(): InternalRow = p.rows(i)
   override def close(): Unit = ()
   override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, 0L),
+    MailboxMetrics.Task(MailboxMetrics.RowsRead, p.rowsRead),
     MailboxMetrics.Task(MailboxMetrics.BytesRead, 0L),
     MailboxMetrics.Task(MailboxMetrics.FilesRead, 0L))
 }
 
-class StaticCountReader(count: Long) extends PartitionReader[InternalRow] {
-  private var emitted = false
-  override def next(): Boolean = if (emitted) false else { emitted = true; true }
+/** count(*) over a partition planning could not count: drains the
+  * partition's row reader, built with an empty projection, into one
+  * row. The count applies that reader's own split-boundary and
+  * malformed-record rules, and reports its metrics.
+  */
+class CountReader(rows: PartitionReader[InternalRow])
+  extends PartitionReader[InternalRow] {
+  private var count = -1L
+  override def next(): Boolean =
+    if (count >= 0) false
+    else {
+      count = 0L
+      while (rows.next()) count += 1
+      true
+    }
   override def get(): InternalRow = new GenericInternalRow(Array[Any](count))
-  override def close(): Unit = ()
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, count),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead, 0L),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead, 0L))
+  override def close(): Unit = rows.close()
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    rows.currentMetricsValues()
 }
 
 /** Streams lines of one partition's byte span through a Hadoop FS input
@@ -1205,49 +1113,10 @@ private[source] final class LineStream(
   def close(): Unit = fsIn.close()
 }
 
-/** Distributed count(*) over an unindexed byte range: classify-only scan,
-  * no JSON parse, no row materialization.
-  */
-class RangeCountReader(
-    p: RangePartition, opts: MailboxOptions,
-    filter: RecordFilter, conf: Configuration)
-    extends PartitionReader[InternalRow] {
-
-  private var counted    = false
-  private var count      = 0L
-  private var bytes      = 0L
-
-  override def next(): Boolean = {
-    if (counted) return false
-    val ls  = new LineStream(p.file, p.start, conf, alignToNewline = true)
-    val end = p.start + p.length
-    try {
-      // Hadoop boundary rule: a line starting at pos <= end belongs to
-      // this split (the next split's align-skip discards it)
-      var line = if (ls.pos <= end) ls.next(keepAll = false) else null
-      while (line != null) {
-        val prefix = line._1
-        if (prefix.startsWith("{\"node_id\":") &&
-            MailboxPlanner.lineMatches(prefix, filter))
-          count += 1
-        line = if (ls.pos <= end) ls.next(keepAll = false) else null
-      }
-      bytes = ls.bytesRead
-    } finally ls.close()
-    counted = true
-    true
-  }
-
-  override def get(): InternalRow = new GenericInternalRow(Array[Any](count))
-  override def close(): Unit = ()
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, count),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead, bytes),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead, if (p.firstInFile) 1L else 0L))
-}
-
 /** Per-task reader (A15-A18): streams its byte span sequentially through
   * the Hadoop FS, parses only projected fields, null-tolerant per field.
+  * An empty projection (count(*), see [[CountReader]]) keeps no line
+  * bytes and parses nothing: it only classifies record heads.
   */
 class MailboxPartitionReader(
     p: MailboxPartition,
@@ -1256,8 +1125,9 @@ class MailboxPartitionReader(
     filter: RecordFilter,
     conf: Configuration) extends PartitionReader[InternalRow] {
 
-  private val mapper  = new ObjectMapper()
-  private val factory = mapper.getFactory
+  private lazy val mapper  = new ObjectMapper()
+  private lazy val factory = mapper.getFactory
+  private val keepLines    = readSchema.nonEmpty
 
   private val (startAt, align) = p match {
     case ip: IndexedPartition => (ip.startOffset, false)
@@ -1302,7 +1172,7 @@ class MailboxPartitionReader(
         var emitted = false
         var eof     = false
         while (!emitted && !eof) {
-          val line = stream.next(keepAll = skipped >= ip.skipMatching)
+          val line = stream.next(keepAll = keepLines && skipped >= ip.skipMatching)
           if (line == null) eof = true
           else {
             val prefix = line._1
@@ -1329,7 +1199,7 @@ class MailboxPartitionReader(
         // starts at pos <= end (the next range's align-skip discards it)
         if (stream.pos > end) done = true
         else {
-          val line = stream.next(keepAll = true)
+          val line = stream.next(keepAll = keepLines)
           if (line == null) done = true
           else {
             val prefix = line._1
@@ -1351,7 +1221,7 @@ class MailboxPartitionReader(
         // offsets are exact line starts from planning: seek, never
         // re-read the bytes between enumerated records
         if (target != stream.pos) stream.seekTo(target)
-        val line = stream.next(keepAll = true)
+        val line = stream.next(keepAll = keepLines)
         if (line == null) false
         else { emit(line._2, ep.nodeIds(enumIdx)); true }
       }
@@ -1361,7 +1231,8 @@ class MailboxPartitionReader(
     currentNodeId = nodeId
     rowsRead += 1
     current =
-      try {
+      if (!keepLines) InternalRow.empty
+      else try {
         if (flatOnly) rowOfStreaming(lineBytes)
         else rowOf(mapper.readTree(lineBytes))
       } catch { case NonFatal(_) => nullRow() }

@@ -93,7 +93,9 @@ object PstScan {
 
 /** Row reader over assigned node ids: opens the PST through the Hadoop
   * FS, serializes each node's property bag onto the projected columns
-  * (the Spark analog of row_serializer.cpp's into_row).
+  * (the Spark analog of row_serializer.cpp's into_row). An empty
+  * projection (count(*), see [[CountReader]]) classifies each node but
+  * reads no property bag.
   */
 class PstPartitionReader(
     p: PstPartition,
@@ -125,12 +127,12 @@ class PstPartitionReader(
       i += 1
       val nid = p.nodeIds(i)
       try {
-        if (wantFolder) {
-          current = project(reader.folderRow(nid), nid)
-          found = true
-        } else if (p.exact || filter.matchesClass(reader.messageClass(nid))) {
+        if (wantFolder || p.exact ||
+            filter.matchesClass(reader.messageClass(nid))) {
           current = project(
-            reader.messageRow(nid, opts.readAttachmentBody), nid)
+            if (readSchema.isEmpty) Map.empty
+            else if (wantFolder) reader.folderRow(nid)
+            else reader.messageRow(nid, opts.readAttachmentBody), nid)
           found = true
         }
       } catch {
@@ -180,49 +182,6 @@ class PstPartitionReader(
     MailboxMetrics.Task(MailboxMetrics.RowsRead, rowsRead),
     MailboxMetrics.Task(MailboxMetrics.BytesRead,
       if (i >= 0) pst.bytesRead else 0L),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead,
-      if (p.firstInFile) 1L else 0L))
-}
-
-/** Distributed count(*) for class-filtered PST scans: reads only each
-  * candidate node's property context to classify it — no recipient /
-  * attachment / body materialization.
-  */
-class PstCountReader(
-    p: PstPartition, opts: MailboxOptions,
-    filter: RecordFilter, conf: Configuration)
-    extends PartitionReader[InternalRow] {
-
-  private var counted = false
-  private var count   = 0L
-  private var bytes   = 0L
-
-  override def next(): Boolean = {
-    if (counted) return false
-    val pst = PstFile.open(p.file, conf)
-    try {
-      val reader = new PstReader(pst)
-      p.nodeIds.foreach { nid =>
-        try {
-          if (filter.matchesClass(reader.messageClass(nid)))
-            count += 1
-        } catch {
-          // the row reader serializes a malformed node as a null row, so
-          // it must count here too (count(*) parity with the full scan)
-          case NonFatal(_) => count += 1
-        }
-      }
-      bytes = pst.bytesRead
-    } finally pst.close()
-    counted = true
-    true
-  }
-
-  override def get(): InternalRow = new GenericInternalRow(Array[Any](count))
-  override def close(): Unit = ()
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, count),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead, bytes),
     MailboxMetrics.Task(MailboxMetrics.FilesRead,
       if (p.firstInFile) 1L else 0L))
 }

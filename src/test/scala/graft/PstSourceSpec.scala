@@ -15,8 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PstSourceSpec extends AnyFunSuite with SessionSuite {
 
-  // absolute: the folders test compares `pst_path` with the path given
-  private val pstFile = new java.io.File("fixtures/mailbox/unittest.pst").getAbsolutePath
+  private val pstFile = "fixtures/mailbox/unittest.pst"
 
   private def read(mode: String, options: Map[String, String] = Map.empty): DataFrame = {
     val r = spark.read.format("mailbox").option("mode", mode)

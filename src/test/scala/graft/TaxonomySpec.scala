@@ -73,7 +73,7 @@ class TaxonomySpec extends AnyFunSuite with SessionSuite {
       .queryExecution.optimizedPlan.stats
     assert(stats.rowCount.exists(_.toLong == 7L),
       s"expected exact plan-time count 7 for notes mode, got ${stats.rowCount}")
-    // zero-IO count(*): StaticCountReader path stays consistent
+    // zero-IO count(*): the static-rows answer stays consistent
     assert(Mailbox.notes(spark, box).groupBy().count().collect()(0).getLong(0) === 7L)
   }
 
