@@ -100,7 +100,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.AutoLateMaterialization)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     // query-stage preparation rules run after EnsureRequirements, where
-    // a small global sort's range exchange first exists
-    ext.injectQueryStagePrepRule(_ => graft.plans.SmallSortSinglePartition)
+    // the exchanges this rule decides first exist
+    ext.injectQueryStagePrepRule(_ => graft.plans.SinglePartitionExchanges)
   }
 }

@@ -2,7 +2,8 @@ package graft.source
 
 import java.io.ByteArrayOutputStream
 import java.util.Base64
-import java.util.concurrent.Executors
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -413,32 +414,47 @@ object MailboxPlanner {
     (offsets.toArray, nodes.toArray)
   }
 
-  /** One sidecar read per glob member, fanned out on a bounded pool
-    * (same O(#files) parallel-metadata discipline as [[plan]] — a
-    * 10,000-file archive must not pay 10,000 serial round-trips at
+  /** One sidecar read per glob member, fanned out with [[perFile]]
+    * (a 10,000-file archive must not pay 10,000 serial round-trips at
     * aggregate-push time). Returns None if ANY file fails `read`.
     */
   private def parallelIndexProbe[A](opts: MailboxOptions, conf: Configuration)(
       read: (MailboxIndex.FileIndex) => Option[A]): Option[Seq[A]] = {
-    val files = globStatuses(opts.path, conf)
-    if (files.isEmpty) return Some(Nil)
-    val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(files.length, 16)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futs = files.map { case (name, len) =>
-        Future {
-          val p0 = new Path(name)
-          val p  = LocalBuffer.resolvePath(p0, conf)
-          val fs = p.getFileSystem(conf)
-          try MailboxIndex.read(fs, p, len, MailboxIndex.indexPath(p0), conf)
-            .flatMap(read)
-          catch { case NonFatal(_) => None }
-        }
-      }
-      val results = futs.map(f => Await.result(f, Duration.Inf))
-      if (results.exists(_.isEmpty)) None else Some(results.map(_.get).toSeq)
-    } finally pool.shutdown()
+    val results = perFile(globStatuses(opts.path, conf)) { case (name, len) =>
+      val p0 = new Path(name)
+      val p  = LocalBuffer.resolvePath(p0, conf)
+      val fs = p.getFileSystem(conf)
+      try MailboxIndex.read(fs, p, len, MailboxIndex.indexPath(p0), conf)
+        .flatMap(read)
+      catch { case NonFatal(_) => None }
+    }
+    if (results.exists(_.isEmpty)) None else Some(results.map(_.get))
+  }
+
+  /** Daemon threads shared by every planned scan's per-file metadata
+    * probes: at most 16 run at once, and idle threads exit after a
+    * minute, so planning a scan starts no threads of its own.
+    */
+  private lazy val probePool: ExecutionContext = {
+    val started = new AtomicInteger()
+    val pool = new ThreadPoolExecutor(16, 16, 60L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, s"mailbox-probe-${started.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    ExecutionContext.fromExecutorService(pool)
+  }
+
+  /** `probe` applied to every (file, length) on [[probePool]], results
+    * in file order (the reference's std::async fan-out,
+    * table_function.cpp:214-239).
+    */
+  private def perFile[B](files: Seq[(String, Long)])(
+      probe: ((String, Long)) => B): Seq[B] = {
+    implicit val ec: ExecutionContext = probePool
+    Await.result(Future.traverse(files)(f => Future(probe(f))), Duration.Inf)
   }
 
   /** Statistics-only probe for aggregate pushdown: per raw message class
@@ -458,10 +474,10 @@ object MailboxPlanner {
       : Option[Seq[(String, Long, Option[(Long, Long)])]] = {
     if (filter.wantFolder || opts.readLimit != Long.MaxValue) return None
     parallelIndexProbe(opts, conf)(_.classGroupStats(filter)).flatMap {
-      perFile =>
+      fileRows =>
         val acc = scala.collection.mutable.LinkedHashMap[
           String, (Long, Long, Long, Long)]() // cnt, mn, mx, nonNull
-        perFile.foreach { rows =>
+        fileRows.foreach { rows =>
           rows.foreach { case (cls, cnt, mn, mx, n, unknown) =>
             if (grouped && cls.isEmpty) return None
             if (needTs && unknown > 0) return None
@@ -484,8 +500,8 @@ object MailboxPlanner {
       totalBytes: Long,
       files: Int)
 
-  /** Full plan: one metadata probe per file in parallel (reference
-    * std::async fan-out, table_function.cpp:214-239), then partitions:
+  /** Full plan: one metadata probe per file, fanned out with
+    * [[perFile]], then partitions:
     * sidecar-indexed files → fixed-size row partitions with exact
     * counts; others → byte-range splits (or bounded enumeration under a
     * limit). The global limit is allocated across partitions in file
@@ -505,56 +521,48 @@ object MailboxPlanner {
     case class Pst(file: String, bytes: Long, nids: Array[Long],
         classified: Boolean) extends FilePlan
 
-    val pool = Executors.newFixedThreadPool(math.max(1, math.min(files.length, 16)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val perFile: Seq[FilePlan] =
+    val filePlans: Seq[FilePlan] = perFile(files) { case (name, len) =>
+      val p0 = new Path(name)
+      // length-less remote schemes (http/s): probes and reads run
+      // on the JVM-cached local copy globStatuses already fetched;
+      // the sidecar is looked up at the ORIGINAL location
+      val p  = LocalBuffer.resolvePath(p0, conf)
+      val fs = p.getFileSystem(conf)
       try {
-        val futures = files.map { case (name, len) =>
-          Future {
-            val p0 = new Path(name)
-            // length-less remote schemes (http/s): probes and reads run
-            // on the JVM-cached local copy globStatuses already fetched;
-            // the sidecar is looked up at the ORIGINAL location
-            val p  = LocalBuffer.resolvePath(p0, conf)
-            val fs = p.getFileSystem(conf)
-            try {
-              MailboxIndex.read(fs, p, len,
-                  MailboxIndex.indexPath(p0), conf) match {
-                case Some(ix) => Some(Indexed(name, len, ix))
-                case None =>
-                  if (PstScan.isPst(p, conf)) {
-                    // real PST binary: enumerate node ids from the file's
-                    // own index (O(index) bytes, like the reference)
-                    val nids = PstScan.enumerate(name, conf, filter.wantFolder)
-                    if (filter.filtersClass && !filter.wantFolder && limited) {
-                      // bounded classification so read_limit stays exact
-                      // and GLOBAL across partitions (the reference's
-                      // limit break is global, table_function.cpp):
-                      // read each candidate's class property until
-                      // `limit` matches — O(limit) property reads, the
-                      // PST analog of enumerateBounded
-                      Some(Pst(name, len,
-                        PstScan.classifyBounded(name, conf, nids, filter, limit),
-                        classified = true))
-                    } else Some(Pst(name, len, nids, classified = false))
-                  } else if (!validateFile(p, conf)) {
-                    System.err.println(s"[mailbox] skipping unreadable file $name")
-                    None
-                  } else if (limited) {
-                    val (off, nid) =
-                      enumerateBounded(p, conf, filter, limit)
-                    Some(Enumerated(name, len, off, nid))
-                  } else Some(Ranged(name, len))
-              }
-            } catch {
-              case NonFatal(e) => // A20: log and skip unreadable files
-                System.err.println(s"[mailbox] skipping unreadable file $name: ${e.getMessage}")
-                None
-            }
-          }
+        MailboxIndex.read(fs, p, len,
+            MailboxIndex.indexPath(p0), conf) match {
+          case Some(ix) => Some(Indexed(name, len, ix))
+          case None =>
+            if (PstScan.isPst(p, conf)) {
+              // real PST binary: enumerate node ids from the file's
+              // own index (O(index) bytes, like the reference)
+              val nids = PstScan.enumerate(name, conf, filter.wantFolder)
+              if (filter.filtersClass && !filter.wantFolder && limited) {
+                // bounded classification so read_limit stays exact
+                // and GLOBAL across partitions (the reference's
+                // limit break is global, table_function.cpp):
+                // read each candidate's class property until
+                // `limit` matches — O(limit) property reads, the
+                // PST analog of enumerateBounded
+                Some(Pst(name, len,
+                  PstScan.classifyBounded(name, conf, nids, filter, limit),
+                  classified = true))
+              } else Some(Pst(name, len, nids, classified = false))
+            } else if (!validateFile(p, conf)) {
+              System.err.println(s"[mailbox] skipping unreadable file $name")
+              None
+            } else if (limited) {
+              val (off, nid) =
+                enumerateBounded(p, conf, filter, limit)
+              Some(Enumerated(name, len, off, nid))
+            } else Some(Ranged(name, len))
         }
-        Await.result(Future.sequence(futures), Duration.Inf).flatten
-      } finally pool.shutdown()
+      } catch {
+        case NonFatal(e) => // A20: log and skip unreadable files
+          System.err.println(s"[mailbox] skipping unreadable file $name: ${e.getMessage}")
+          None
+      }
+    }.flatten
 
     val parts   = new ArrayBuffer[MailboxPartition]()
     var exact   = true
@@ -563,7 +571,7 @@ object MailboxPlanner {
     var fileStart = true
     def mark(): Boolean = { val f = fileStart; fileStart = false; f }
 
-    perFile.foreach { fp =>
+    filePlans.foreach { fp =>
       fileStart = true
       fp match {
       case Indexed(file, _, ix) if remain > 0 =>

@@ -204,6 +204,21 @@ class MailboxStatsSpec extends AnyFunSuite with SessionSuite {
     assert(n == expected.values.sum && got == expected, s"$n, $got vs $expected")
   }
 
+  test("a stats-answered GROUP BY under ORDER BY runs one job, no shuffle") {
+    val glob = s"$fixtures/*.mbx"
+    val hist = Mailbox.messages(spark, glob).groupBy("message_class")
+      .agg(count(lit(1)).as("c"))
+      .orderBy(col("c").desc, col("message_class").asc)
+    var got: Seq[(String, Long)] = Nil
+    val jobs = JobCount.during(spark) {
+      got = hist.collect().toSeq.map(r => r.getString(0) -> r.getLong(1))
+    }
+    val plan = hist.queryExecution.executedPlan.toString
+    assert(groupPushed(hist) && !plan.contains("Exchange"), plan)
+    assert(jobs == 1, s"$jobs jobs:\n$plan")
+    assert(got == classCounts(glob).toSeq.sortBy { case (c, n) => (-n, c) })
+  }
+
   test("a glob with an unindexed member falls back to Spark's aggregation") {
     val dir = Files.createTempDirectory("mbx-mixed-idx").toFile
     MailboxGen.writeFile(new File(dir, "a.mbx"), MailboxGen.syntheticLines(2, 40, 1))

@@ -165,7 +165,7 @@ class QueryPlanSpec extends AnyFunSuite with SessionSuite {
 
   test("q_pack_sequences windows per source shard (no global single partition)") {
     // at sf0.001 the final ORDER BY's input fits one advisory partition,
-    // so SmallSortSinglePartition plans its exchange as SinglePartition;
+    // so SinglePartitionExchanges plans it as SinglePartition or drops it;
     // an advisory size below the input reproduces the at-scale plan
     val p = withConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key, "1024") {
       plan("q_pack_sequences")
@@ -188,8 +188,16 @@ class QueryPlanSpec extends AnyFunSuite with SessionSuite {
       s"totals join should broadcast:\n$p")
   }
 
+  /** `body` with the sf0.001 fixture files split into 16 KiB partitions,
+    * as inputs are split at scale: over a single partition
+    * [[graft.plans.SinglePartitionExchanges]] drops the exchanges a
+    * plan-shape test looks for.
+    */
+  private def atScaleSplits[T](body: => T): T =
+    withConf(SQLConf.FILES_MAX_PARTITION_BYTES.key, "16384")(body)
+
   test("q_attribution is one shuffle by user then a map-side window") {
-    val p = plan("q_attribution")
+    val p = atScaleSplits(plan("q_attribution"))
     val shuffles = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(shuffles == 1,
       s"expected exactly one user_id shuffle, got $shuffles:\n$p")
@@ -197,7 +205,7 @@ class QueryPlanSpec extends AnyFunSuite with SessionSuite {
   }
 
   test("q_substr_regions shuffles gram digests once for the dup window") {
-    val p = plan("q_substr_regions")
+    val p = atScaleSplits(plan("q_substr_regions"))
     assert(p.contains("hashpartitioning(g#") || p.contains("hashpartitioning(g,"),
       s"expected the single window shuffle by gram digest:\n$p")
   }

@@ -8,7 +8,7 @@ import scala.util.Using
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.SmallSortSinglePartition
+import graft.plans.SinglePartitionExchanges
 
 /** [[Sessions.local]] builds the bench's session, and it is the only
   * place a session is built.
@@ -21,7 +21,7 @@ class SessionsSpec extends AnyFunSuite with SessionSuite {
       .collect()(0).getInt(0)
     assert(d === 2)
     val prep = spark.sessionState.adaptiveRulesHolder.queryStagePrepRules
-    assert(prep.contains(SmallSortSinglePartition), prep)
+    assert(prep.contains(SinglePartitionExchanges), prep)
   }
 
   test("shuffle partitions equal the core count") {
