@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildSide}
 import org.apache.spark.sql.catalyst.plans.InnerLike
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, RangePartitioning, SinglePartition, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{CoalesceExec, CoalescedPartitionSpec, FileSourceScanExec, SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{CoalescedPartitionSpec, FileSourceScanExec, SortExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, Exchange, ShuffleExchangeExec}
@@ -19,12 +19,14 @@ import org.apache.spark.sql.internal.SQLConf
   *  1. '''One partition in, no shuffle.''' When the rows under the
   *     exchange already form exactly one partition and that partition
   *     reads no more than the advisory size from its source, the
-  *     exchange is replaced by a narrow one-partition coalesce: no
-  *     shuffle, no extra Spark job, and the plan still reports
-  *     `SinglePartition`, which satisfies every distribution the
-  *     operator above can require (`CoalesceExec` also keeps one
-  *     partition if the input turns out empty at run time, so a global
-  *     aggregate still returns its row).
+  *     exchange is replaced by a [[OnePartitionExec]]: no shuffle, no
+  *     extra Spark job, and the plan still reports `SinglePartition`,
+  *     which satisfies every distribution the operator above can
+  *     require. The node passes its child's generated code straight
+  *     through, so the operators below and above it (a partial and a
+  *     final aggregate, a scan and a global sort) fuse into one
+  *     whole-stage-codegen stage, as they would in one pipeline with no
+  *     exchange.
   *  1. '''A small global sort shuffles into one partition.''' Otherwise
   *     a range exchange whose input is no larger than the advisory size
   *     becomes a `SinglePartition` exchange. `RangePartitioning` builds
@@ -117,7 +119,7 @@ object SinglePartitionExchanges extends Rule[SparkPlan] {
   private def rewrite(e: ShuffleExchangeExec, advisory: Long): SparkPlan =
     if (e.shuffleOrigin != ENSURE_REQUIREMENTS) e
     else if (source(e.child).exists { case (n, bytes) => n == 1 && bytes <= advisory })
-      CoalesceExec(1, e.child)
+      OnePartitionExec(e.child)
     else if (e.outputPartitioning.isInstanceOf[RangePartitioning] &&
         sizeInBytes(e.child).exists(_ <= advisory))
       e.copy(outputPartitioning = SinglePartition)

@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.execution.{CoalesceExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.expressions.Window
@@ -9,13 +13,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.OnePartitionExec
+
 /** [[graft.plans.SinglePartitionExchanges]]: an exchange above rows
   * that already form one partition is dropped when it serves a one-child
   * operator's own requirement and its input fits one AQE advisory
   * partition, also above a broadcast join's streamed side. Split
   * inputs, larger inputs, shuffled joins and user repartitions keep
-  * their exchanges. Every case checks its rows against the same
-  * query run without AQE, where the rule never runs.
+  * their exchanges. The node left in a dropped exchange's place fuses
+  * into the generated code on both sides of it. Every case checks its
+  * rows against the same query run without AQE, where the rule never
+  * runs.
   */
 class SinglePartitionExchangesSpec extends AnyFunSuite with SessionSuite
     with AdaptiveSparkPlanHelper {
@@ -39,6 +47,9 @@ class SinglePartitionExchangesSpec extends AnyFunSuite with SessionSuite
   private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
     collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
 
+  private def onePartitions(df: DataFrame): Seq[OnePartitionExec] =
+    collect(df.queryExecution.executedPlan) { case o: OnePartitionExec => o }
+
   private def rows(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString).sorted
 
@@ -57,6 +68,50 @@ class SinglePartitionExchangesSpec extends AnyFunSuite with SessionSuite
       assert(jobs == 1, s"$name: $jobs jobs")
       assert(got.nonEmpty && got == withoutAqe(build), name)
     }
+  }
+
+  test("a sort and an aggregate over a one-partition input run as one " +
+    "generated stage") {
+    for ((name, build) <- shapes.filter(s => Set("sort", "aggregate")(s._1))) {
+      val df = build()
+      val got = rows(df)
+      val plan = df.queryExecution.executedPlan
+      val stages = collect(plan) { case w: WholeStageCodegenExec => w }
+      assert(stages.size == 1, s"$name:\n$plan")
+      assert(collect(plan) { case c: CoalesceExec => c }.isEmpty, s"$name:\n$plan")
+      assert(onePartitions(df).size == 1, s"$name:\n$plan")
+      assert(got.nonEmpty && got == withoutAqe(build), name)
+    }
+  }
+
+  test("without whole-stage codegen every shape returns its rows") {
+    for ((name, build) <- shapes) {
+      val expected = withoutAqe(build)
+      withConf(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key, "false") {
+        val df = build()
+        val got = rows(df)
+        val plan = df.queryExecution.executedPlan
+        assert(onePartitions(df).nonEmpty, s"$name:\n$plan")
+        assert(collect(plan) { case w: WholeStageCodegenExec => w }.isEmpty, s"$name:\n$plan")
+        assert(got.nonEmpty && got == expected, name)
+      }
+    }
+  }
+
+  test("count(*) over one parquet file holding no rows returns one row") {
+    val dir = Files.createTempDirectory("one_partition_empty").toFile
+    try {
+      val path = s"$dir/empty"
+      lineitem.limit(0).write.parquet(path)
+      for (codegen <- Seq("true", "false"))
+        withConf(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key, codegen) {
+          val empty = spark.read.parquet(path)
+          assert(empty.rdd.getNumPartitions == 1)
+          val df = empty.agg(count(lit(1)).as("n"))
+          assert(df.collect().toSeq == Seq(Row(0L)), s"codegen $codegen")
+          assert(onePartitions(df).size == 1, df.queryExecution.executedPlan)
+        }
+    } finally FileUtils.deleteDirectory(dir)
   }
 
   test("the count passes through a broadcast join's streamed side") {
