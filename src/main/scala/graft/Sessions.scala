@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 
 /** The one place a SparkSession is built: Bench, Verify, the tools and
   * every spec run the same session, with [[GraftExtensions]] installed.
@@ -38,6 +41,10 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // a stage whose generated method exceeds the JIT's huge-method limit
+    // runs interpreted, and Spark says so only at INFO ("Found too long
+    // generated codes ... whole-stage codegen was disabled")
+    Configurator.setLevel(classOf[WholeStageCodegenExec].getName, Level.INFO)
     spark
   }
 }

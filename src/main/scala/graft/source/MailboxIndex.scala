@@ -224,12 +224,13 @@ object MailboxIndex {
 
   /** Build the index by scanning the file once (the indexing pass — run
     * distributed via [[indexAll]] for large corpora; planning afterwards
-    * never re-reads data). Throws if the first record is not
-    * mailbox-shaped (A20: such files fail the bind).
+    * never re-reads data). Reads the lines through the source's one
+    * [[LineStream]], keeping a [[HeadBytes]] head per line. Throws if
+    * the first record is not mailbox-shaped (A20: such files fail the
+    * bind).
     */
   def build(fs: FileSystem, file: Path): FileIndex = {
     val status = fs.getFileStatus(file)
-    val in     = fs.open(file)
     val classes = new ArrayBuffer[String]()
     val classIdx = scala.collection.mutable.HashMap[String, Int]()
     val totals  = new ArrayBuffer[Long]()
@@ -243,7 +244,6 @@ object MailboxIndex {
     var blockLines  = 0
     var blockCounts = new ArrayBuffer[Int]()
     var lines       = 0L
-    var first       = true
 
     def idxOf(c: String): Int = classIdx.getOrElseUpdate(c, {
       classes += c; totals += 0L
@@ -263,24 +263,16 @@ object MailboxIndex {
       blockCounts = new ArrayBuffer[Int]()
     }
 
-    val buf  = new Array[Byte](1 << 16)
-    val head = new Array[Byte](HeadBytes)
+    val stream = new LineStream(fs.open(file), headBytes = HeadBytes)
     try {
-      var headLen   = 0
-      var truncated = false
-      var lineStart = 0L
-      var abs       = 0L
-      var eof       = false
-
-      def processLine(lineEnd: Long): Unit = {
-        if (headLen > 0) {
-          val prefix = new String(head, 0, headLen, StandardCharsets.UTF_8)
-          if (first && !prefix.startsWith("{\"node_id\":"))
+      while (stream.next(keepLine = false)) {
+        val prefix = stream.head
+        if (prefix.nonEmpty) {
+          if (lines == 0 && !prefix.startsWith(MailboxPlanner.RecordStart))
             throw new IllegalArgumentException(s"not a mailbox dump: $file")
-          first = false
           val c = idxOf(storageClass(prefix))
           totals(c) += 1
-          deliveryOfPrefix(prefix, truncated) match {
+          deliveryOfPrefix(prefix, stream.truncated) match {
             case Some(Some(sec)) =>
               if (sec < tsMin(c)) tsMin(c) = sec
               if (sec > tsMax(c)) tsMax(c) = sec
@@ -292,32 +284,10 @@ object MailboxIndex {
           blockCounts(c) += 1
           blockLines += 1
           lines += 1
-          if (blockLines >= BlockLines) flushBlock(lineEnd)
+          if (blockLines >= BlockLines) flushBlock(stream.pos)
         }
       }
-
-      while (!eof) {
-        val n = in.read(buf)
-        if (n < 0) { processLine(abs); eof = true }
-        else {
-          var i = 0
-          while (i < n) {
-            val b = buf(i)
-            if (b == '\n') {
-              processLine(abs + i + 1)
-              lineStart = abs + i + 1
-              headLen = 0
-              truncated = false
-            } else if (headLen < HeadBytes) {
-              head(headLen) = b
-              headLen += 1
-            } else truncated = true
-            i += 1
-          }
-          abs += n
-        }
-      }
-    } finally in.close()
+    } finally stream.close()
     flushBlock(0L)
     FileIndex(status.getLen, fingerprint(fs, file, status.getLen), lines,
       classes.toArray, totals.toArray, blocks.toArray,

@@ -1,6 +1,7 @@
 package graft.source
 
 import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Base64
 import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
@@ -11,9 +12,9 @@ import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -69,8 +70,10 @@ import graft.model.MailboxSchema.Mode
   *  - scan-description EXPLAIN metadata (A12; table_function.cpp:367-380),
   *  - named scan parameters `read_limit`, `read_body_size_bytes`,
   *    `read_attachment_body`, `partition_size`, `partition_bytes` (A13),
-  *  - per-task readers with null-tolerant row serialization (A15-A18;
-  *    any per-field failure yields NULL, row_serializer.cpp:1252-1263),
+  *  - per-task readers with one line scanner ([[LineStream]]) and one
+  *    streaming decoder, null-tolerant per value (A15-A18; a value whose
+  *    JSON token does not fit its column type is NULL and the fields
+  *    after it keep theirs, row_serializer.cpp:1252-1263),
   *  - UTF-16 byte-budget body truncation that never splits a surrogate
   *    pair (row_serializer.cpp:83-114),
   *  - resilient multi-file bind — an unreadable file is logged and
@@ -205,8 +208,9 @@ class MailboxTable(val opts: MailboxOptions) extends Table with SupportsRead {
   *  - [[RangePartition]]: a byte range of an unindexed file — the reader
   *    discovers record boundaries (first newline after `start`) and
   *    emits every matching record starting inside the range;
-  *  - [[EnumeratedPartition]]: explicit row offsets (bounded-limit
-  *    planning on unindexed files only).
+  *  - [[EnumeratedPartition]]: the matching records bounded-limit
+  *    planning found in an unindexed file — the reader starts at the
+  *    first offset and emits `offsets.length` matching records.
   */
 sealed trait MailboxPartition extends InputPartition {
   def index: Int
@@ -229,8 +233,7 @@ final case class RangePartition(
     firstInFile: Boolean = false) extends MailboxPartition
 
 final case class EnumeratedPartition(
-    index: Int, file: String,
-    offsets: Array[Long], nodeIds: Array[Long],
+    index: Int, file: String, offsets: Array[Long],
     firstInFile: Boolean = false) extends MailboxPartition
 
 /** A slice of a real PST file's plan-enumerated node ids (the analog of
@@ -261,22 +264,28 @@ object StaticRowsPartition {
 }
 
 /** Driver-side planning: glob → per-file metadata (sidecar index or file
-  * size) → partitions. Reads O(#files) bytes — sidecars, or a ≤160-byte
-  * first-record validation probe — never the corpus (A2-A4, A20).
+  * size) → partitions. Reads O(#files) bytes — sidecars, or one 11-byte
+  * head probe per unindexed file — never the corpus (A2-A4, A20).
   */
 object MailboxPlanner {
 
-  /** Does a record with this line prefix survive the plan-time record
+  /** How every mailbox record line starts (the MailboxGen layout
+    * contract); a line that does not is never a row.
+    */
+  val RecordStart = "{\"node_id\":"
+
+  /** Is this line head a record that survives the plan-time record
     * filter? (A5 — the analog of the reference's planning-time
     * PR_MESSAGE_CLASS_A lookup.) The class string is extracted exactly
     * and classified through the typed_bag.hpp taxonomy — never a
     * substring/prefix match.
     */
-  def lineMatches(prefix: String, filter: RecordFilter): Boolean = {
-    val isFolder = prefix.contains("\"record_type\":\"folder\"")
-    if (filter.wantFolder) isFolder
-    else !isFolder && filter.matchesClass(MailboxIndex.classOfPrefix(prefix))
-  }
+  def lineMatches(prefix: String, filter: RecordFilter): Boolean =
+    prefix.startsWith(RecordStart) && {
+      val isFolder = prefix.contains("\"record_type\":\"folder\"")
+      if (filter.wantFolder) isFolder
+      else !isFolder && filter.matchesClass(MailboxIndex.classOfPrefix(prefix))
+    }
 
   def nodeIdOf(prefix: String): Long = {
     val i = prefix.indexOf("\"node_id\":")
@@ -339,79 +348,30 @@ object MailboxPlanner {
   def broadcastConf(conf: Configuration): Broadcast[SerializableConfiguration] =
     SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
 
-  /** First-record probe: read ≤160 bytes and require the mailbox line
-    * shape (A20 — the analog of the reference failing the PST header
-    * check and skipping the file). O(1) bytes per file.
+  /** The file's first bytes, read once per unindexed file to route it:
+    * the PST magic ([[PstScan.isPst]]) or a mailbox record start
+    * (A20 — the analog of the reference failing the PST header check
+    * and skipping the file). Fewer at EOF; empty when unreadable.
     */
-  private def validateFile(file: Path, conf: Configuration): Boolean = {
-    val fs = file.getFileSystem(conf)
-    val in = fs.open(file)
+  private def headOf(file: Path, conf: Configuration): Array[Byte] =
     try {
-      val head = new Array[Byte](11)
-      var got  = 0
-      while (got < head.length) {
-        val n = in.read(head, got, head.length - got)
-        if (n < 0) return false
-        got += n
-      }
-      new String(head, "UTF-8").startsWith("{\"node_id\":")
-    } catch { case NonFatal(_) => false }
-    finally in.close()
-  }
+      val in = file.getFileSystem(conf).open(file)
+      try in.readNBytes(RecordStart.length) finally in.close()
+    } catch { case NonFatal(_) => Array.emptyByteArray }
 
-  /** Bounded enumeration for `read_limit` on unindexed files: scans line
-    * prefixes and STOPS at `limit` matches — O(limit) rows per file, not
-    * O(file).
+  /** Bounded enumeration for `read_limit` on unindexed files: the
+    * offsets of the first `limit` matching records. Scans line heads and
+    * STOPS at `limit` matches — O(limit) rows per file, not O(file).
     */
   def enumerateBounded(file: Path, conf: Configuration,
-      filter: RecordFilter, limit: Long): (Array[Long], Array[Long]) = {
+      filter: RecordFilter, limit: Long): Array[Long] = {
     val offsets = new ArrayBuffer[Long]()
-    val nodes   = new ArrayBuffer[Long]()
-    val fs = file.getFileSystem(conf)
-    val in = fs.open(file)
-    val buf  = new Array[Byte](1 << 16)
-    val head = new Array[Byte](160)
+    val lines   = new LineStream(file.getFileSystem(conf).open(file))
     try {
-      var headLen   = 0
-      var lineStart = 0L
-      var abs       = 0L
-      var done      = false
-
-      def processLine(): Boolean = {
-        if (headLen == 0) false
-        else {
-          val prefix = new String(head, 0, headLen, "UTF-8")
-          if (prefix.startsWith("{\"node_id\":") &&
-              lineMatches(prefix, filter)) {
-            offsets += lineStart
-            nodes += nodeIdOf(prefix)
-            offsets.length >= limit
-          } else false
-        }
-      }
-
-      while (!done) {
-        val n = in.read(buf)
-        if (n < 0) { processLine(); done = true }
-        else {
-          var i = 0
-          while (i < n && !done) {
-            val b = buf(i)
-            if (b == '\n') {
-              if (processLine()) done = true
-              lineStart = abs + i + 1
-              headLen = 0
-            } else if (headLen < 160) {
-              head(headLen) = b
-              headLen += 1
-            }
-            i += 1
-          }
-          abs += n
-        }
-      }
-    } finally in.close()
-    (offsets.toArray, nodes.toArray)
+      while (offsets.length < limit && lines.next(keepLine = false))
+        if (lineMatches(lines.head, filter)) offsets += lines.lineStart
+    } finally lines.close()
+    offsets.toArray
   }
 
   /** One sidecar read per glob member, fanned out with [[perFile]]
@@ -516,8 +476,8 @@ object MailboxPlanner {
     sealed trait FilePlan { def bytes: Long }
     case class Indexed(file: String, bytes: Long, ix: MailboxIndex.FileIndex) extends FilePlan
     case class Ranged(file: String, bytes: Long) extends FilePlan
-    case class Enumerated(file: String, bytes: Long,
-        offsets: Array[Long], nodes: Array[Long]) extends FilePlan
+    case class Enumerated(file: String, bytes: Long, offsets: Array[Long])
+        extends FilePlan
     case class Pst(file: String, bytes: Long, nids: Array[Long],
         classified: Boolean) extends FilePlan
 
@@ -533,7 +493,8 @@ object MailboxPlanner {
             MailboxIndex.indexPath(p0), conf) match {
           case Some(ix) => Some(Indexed(name, len, ix))
           case None =>
-            if (PstScan.isPst(p, conf)) {
+            val head = headOf(p, conf)
+            if (PstScan.isPst(head)) {
               // real PST binary: enumerate node ids from the file's
               // own index (O(index) bytes, like the reference)
               val nids = PstScan.enumerate(name, conf, filter.wantFolder)
@@ -548,14 +509,12 @@ object MailboxPlanner {
                   PstScan.classifyBounded(name, conf, nids, filter, limit),
                   classified = true))
               } else Some(Pst(name, len, nids, classified = false))
-            } else if (!validateFile(p, conf)) {
+            } else if (!new String(head, UTF_8).startsWith(RecordStart)) {
               System.err.println(s"[mailbox] skipping unreadable file $name")
               None
-            } else if (limited) {
-              val (off, nid) =
-                enumerateBounded(p, conf, filter, limit)
-              Some(Enumerated(name, len, off, nid))
-            } else Some(Ranged(name, len))
+            } else if (limited)
+              Some(Enumerated(name, len, enumerateBounded(p, conf, filter, limit)))
+            else Some(Ranged(name, len))
         }
       } catch {
         case NonFatal(e) => // A20: log and skip unreadable files
@@ -596,13 +555,13 @@ object MailboxPlanner {
           rows += total
           remain -= total
         }
-      case Enumerated(file, _, offsets, nodes) if remain > 0 =>
+      case Enumerated(file, _, offsets) if remain > 0 =>
         val take = math.min(offsets.length.toLong, remain).toInt
         var i = 0
         while (i < take) {
           val end = math.min(i + opts.partitionSize, take)
           parts += EnumeratedPartition(parts.length, file,
-            offsets.slice(i, end), nodes.slice(i, end), mark())
+            offsets.slice(i, end), mark())
           i = end
         }
         rows += take
@@ -1015,116 +974,115 @@ class CountReader(rows: PartitionReader[InternalRow])
     rows.currentMetricsValues()
 }
 
-/** Streams lines of one partition's byte span through a Hadoop FS input
-  * stream (A19): seeks once, then reads sequentially in 64 KiB chunks
-  * scanned in-place for newlines — no per-byte stream calls on the hot
-  * path (this is the connector's innermost loop: every byte of the
-  * corpus passes through it). Yields the line's ≤160-byte prefix (for
-  * classification without allocation) plus, when `keepAll`, the full
-  * line bytes.
+/** The mailbox source's one byte→line loop (A19): the partition
+  * readers, bounded `read_limit` enumeration and the sidecar build all
+  * read `.mbx` lines through it. Seeks once to `startAt`, then reads the
+  * Hadoop FS stream sequentially in 64 KiB chunks scanned in place for
+  * newlines — no per-byte stream calls (every byte of the corpus passes
+  * through this loop). With `alignToNewline`, a start past 0 first
+  * skips to the next line: that partial line belongs to the previous
+  * byte range (Hadoop's LineRecordReader convention).
+  *
+  * Each [[next]] line exposes its offset, its first `headBytes` bytes
+  * decoded ([[head]]: 160 hold node_id, record_type and message_class,
+  * enough to classify the line without a parse; the sidecar keeps
+  * [[MailboxIndex.HeadBytes]] for the timestamps), whether the line ran
+  * past them ([[truncated]]), and, when asked for, its bytes ([[line]]).
   */
 private[source] final class LineStream(
-    file: String, startAt: Long, conf: Configuration,
-    alignToNewline: Boolean) {
+    in: FSDataInputStream,
+    startAt: Long = 0L,
+    alignToNewline: Boolean = false,
+    headBytes: Int = 160) {
 
-  private val path = LocalBuffer.resolvePath(file, conf)
-  private val fsIn = path.getFileSystem(conf).open(path)
-  if (startAt > 0) fsIn.seek(startAt)
-  private val buf    = new Array[Byte](1 << 16)
-  private var bufLen = 0
-  private var bufPos = 0
-  var pos: Long       = startAt
-  var bytesRead: Long = 0L
-  var lineStart: Long = startAt
+  if (startAt > 0) in.seek(startAt)
+  private val buf     = new Array[Byte](1 << 16)
+  private var bufLen  = 0
+  private var bufPos  = 0
+  private val headBuf = new Array[Byte](headBytes)
+
+  /** Offset of the next unread byte. */
+  var pos: Long = startAt
+  /** The current line: its offset, decoded head, whether it is longer
+    * than the head, and its bytes (null unless `next` kept them).
+    */
+  var lineStart: Long    = startAt
+  var head: String       = ""
+  var truncated: Boolean = false
+  var line: Array[Byte]  = _
 
   /** Refill the chunk buffer; false at EOF. */
   private def fill(): Boolean = {
-    var n = fsIn.read(buf)
-    while (n == 0) n = fsIn.read(buf)
+    var n = in.read(buf)
+    while (n == 0) n = in.read(buf)
     if (n < 0) false
     else { bufLen = n; bufPos = 0; true }
   }
 
-  /** Jump to a known exact record offset: one FS seek, dropping the read
-    * buffer — never re-reads the bytes in between (enumerated partitions
-    * carry exact line-start offsets from planning).
-    */
-  def seekTo(target: Long): Unit = {
-    fsIn.seek(target)
-    bufLen = 0
-    bufPos = 0
-    pos = target
-    lineStart = target
-  }
+  if (alignToNewline && startAt > 0) next(keepLine = false)
 
-  // a range partition's first (partial) line belongs to its predecessor
-  if (alignToNewline && startAt > 0) {
-    var skipped = 0L
-    var done    = false
-    while (!done) {
-      if (bufPos >= bufLen && !fill()) done = true
-      else {
-        var i = bufPos
-        while (i < bufLen && buf(i) != '\n') i += 1
-        skipped += i - bufPos
-        if (i < bufLen) { skipped += 1; bufPos = i + 1; done = true }
-        else bufPos = bufLen
-      }
-    }
-    bytesRead += skipped
-    pos = startAt + skipped
-  }
-
-  /** Next line's (prefix, fullBytes-or-null). Returns null at EOF.
-    * `lineStart` is the line's byte offset in the file.
+  /** Advance to the next line, keeping its bytes when `keepLine`. False
+    * at EOF.
     */
-  def next(keepAll: Boolean): (String, Array[Byte]) = {
+  def next(keepLine: Boolean): Boolean = {
     lineStart = pos
     var out: ByteArrayOutputStream = null
-    val head     = new Array[Byte](160)
     var headLen  = 0
-    var consumed = 0L
+    var lineLen  = 0L
+    var newline  = 0
     var sawBytes = false
-    var done     = false
-    while (!done) {
-      if (bufPos >= bufLen && !fill()) done = true
-      else {
-        sawBytes = true
-        var i = bufPos
-        while (i < bufLen && buf(i) != '\n') i += 1
-        val len = i - bufPos
-        if (len > 0) {
-          if (keepAll) {
-            if (out == null) out = new ByteArrayOutputStream(math.max(256, len))
-            out.write(buf, bufPos, len)
-          }
-          val copy = math.min(len, 160 - headLen)
-          if (copy > 0) {
-            System.arraycopy(buf, bufPos, head, headLen, copy)
-            headLen += copy
-          }
-          consumed += len
-        }
-        if (i < bufLen) { consumed += 1; bufPos = i + 1; done = true }
-        else bufPos = bufLen
+    while (newline == 0 && (bufPos < bufLen || fill())) {
+      sawBytes = true
+      var i = bufPos
+      while (i < bufLen && buf(i) != '\n') i += 1
+      val len = i - bufPos
+      if (keepLine && len > 0) {
+        if (out == null) out = new ByteArrayOutputStream(math.max(256, len))
+        out.write(buf, bufPos, len)
       }
+      val copy = math.min(len, headBytes - headLen)
+      if (copy > 0) {
+        System.arraycopy(buf, bufPos, headBuf, headLen, copy)
+        headLen += copy
+      }
+      lineLen += len
+      if (i < bufLen) newline = 1
+      bufPos = math.min(i + 1, bufLen)
     }
-    if (!sawBytes) return null
-    pos += consumed
-    bytesRead += consumed
-    (new String(head, 0, headLen, "UTF-8"),
-      if (!keepAll) null
+    if (!sawBytes) return false
+    pos += lineLen + newline
+    head = new String(headBuf, 0, headLen, UTF_8)
+    truncated = lineLen > headBytes
+    line =
+      if (!keepLine) null
       else if (out == null) Array.emptyByteArray
-      else out.toByteArray)
+      else out.toByteArray
+    true
   }
 
-  def close(): Unit = fsIn.close()
+  /** Bytes consumed since `startAt`, a skipped partial line included. */
+  def bytesRead: Long = pos - startAt
+
+  def close(): Unit = in.close()
 }
 
-/** Per-task reader (A15-A18): streams its byte span sequentially through
-  * the Hadoop FS, parses only projected fields, null-tolerant per field.
-  * An empty projection (count(*), see [[CountReader]]) keeps no line
-  * bytes and parses nothing: it only classifies record heads.
+/** Per-task reader (A15-A18) for sidecar-indexed, byte-range and
+  * enumerated partitions, with one record loop: the partition supplies
+  * only where it starts, when it stops and how many matching records it
+  * skips. Streams its span through one [[LineStream]] and decodes each
+  * record in one streaming JSON pass that reads only projected fields,
+  * nested arrays and structs included.
+  *
+  * A16, one rule: a value whose JSON token does not fit its column type
+  * — an object or array in a scalar column, a non-number in a numeric
+  * one, bad base64 — is NULL, and its whole subtree is skipped, so the
+  * fields after it keep their own values. A line that is not JSON is a
+  * row of NULLs. `attachments.bytes` is NULL unless
+  * `read_attachment_body`; `body`/`body_html` are cut to the UTF-16 byte
+  * budget; `pst_path`, `pst_name`, `__partition` and `__node_id` come
+  * from the partition. An empty projection (count(*), see
+  * [[CountReader]]) keeps no line bytes and decodes nothing: it only
+  * classifies record heads.
   */
 class MailboxPartitionReader(
     p: MailboxPartition,
@@ -1133,117 +1091,50 @@ class MailboxPartitionReader(
     filter: RecordFilter,
     conf: Configuration) extends PartitionReader[InternalRow] {
 
-  private lazy val mapper  = new ObjectMapper()
-  private lazy val factory = mapper.getFactory
+  private lazy val factory = new JsonFactory()
   private val keepLines    = readSchema.nonEmpty
 
-  private val (startAt, align) = p match {
-    case ip: IndexedPartition => (ip.startOffset, false)
-    case rp: RangePartition   => (rp.start, true)
-    // enumerated offsets are exact line starts — open at the first one
-    case ep: EnumeratedPartition => (ep.offsets.headOption.getOrElse(0L), false)
+  // where the partition starts, whether that start may fall inside a
+  // line, the matching records it skips, how many it takes, and the
+  // offset a record must start at or before (Hadoop boundary rule: the
+  // next range's align-skip discards a record starting past it)
+  private val (startAt, align, skip, take, end) = p match {
+    case ip: IndexedPartition =>
+      (ip.startOffset, false, ip.skipMatching, ip.takeMatching, Long.MaxValue)
+    case rp: RangePartition =>
+      (rp.start, true, 0L, Long.MaxValue, rp.start + rp.length)
+    // enumerated offsets are the partition's matching lines, in order
+    case ep: EnumeratedPartition =>
+      (ep.offsets.headOption.getOrElse(0L), false, 0L,
+        ep.offsets.length.toLong, Long.MaxValue)
   }
-  private val stream = new LineStream(p.file, startAt, conf, align)
+  private val stream = {
+    val path = LocalBuffer.resolvePath(p.file, conf)
+    new LineStream(path.getFileSystem(conf).open(path), startAt, align)
+  }
 
   private var rowsRead = 0L
+  private var skipped  = 0L
   private var current: InternalRow = _
-  private var currentNodeId: Long = -1L
-
-  // enumerated-partition cursor
-  private var enumIdx = -1
-  // indexed-partition cursors
-  private var skipped = 0L
-  private var taken   = 0L
 
   private val fileName = new Path(p.file).getName
   private val bodyBudget: Long =
     if (opts.bodySizeBytes <= 0) 0L else opts.bodySizeBytes
 
-  // fast path: if every projected field is a top-level scalar, extract
-  // values with the streaming parser and never build a JsonNode tree
-  // (~2-3x less allocation on analytic projections)
-  private val metaFields =
-    Set("pst_path", "pst_name", "__partition", "__node_id")
-  private val flatOnly: Boolean = readSchema.fields.forall { f =>
-    metaFields.contains(f.name) || (f.dataType match {
-      case _: ArrayType | _: StructType => false
-      case _                            => true
-    })
-  }
-  private val fieldIndex: Map[String, Int] =
-    readSchema.fieldNames.zipWithIndex.toMap
-
-  override def next(): Boolean = p match {
-    case ip: IndexedPartition =>
-      if (taken >= ip.takeMatching) false
-      else {
-        var emitted = false
-        var eof     = false
-        while (!emitted && !eof) {
-          val line = stream.next(keepAll = keepLines && skipped >= ip.skipMatching)
-          if (line == null) eof = true
-          else {
-            val prefix = line._1
-            if (prefix.startsWith("{\"node_id\":") &&
-                MailboxPlanner.lineMatches(prefix, filter)) {
-              if (skipped < ip.skipMatching) skipped += 1
-              else {
-                emit(line._2, MailboxPlanner.nodeIdOf(prefix))
-                taken += 1
-                emitted = true
-              }
-            }
-          }
-        }
-        emitted
-      }
-
-    case rp: RangePartition =>
-      val end = rp.start + rp.length
-      var emitted = false
-      var done    = false
-      while (!emitted && !done) {
-        // Hadoop boundary rule: a record belongs to this range iff it
-        // starts at pos <= end (the next range's align-skip discards it)
-        if (stream.pos > end) done = true
+  override def next(): Boolean = {
+    while (rowsRead < take && stream.pos <= end &&
+        stream.next(keepLine = keepLines && skipped >= skip)) {
+      val head = stream.head
+      if (MailboxPlanner.lineMatches(head, filter)) {
+        if (skipped < skip) skipped += 1
         else {
-          val line = stream.next(keepAll = keepLines)
-          if (line == null) done = true
-          else {
-            val prefix = line._1
-            if (prefix.startsWith("{\"node_id\":") &&
-                MailboxPlanner.lineMatches(prefix, filter)) {
-              emit(line._2, MailboxPlanner.nodeIdOf(prefix))
-              emitted = true
-            }
-          }
+          rowsRead += 1
+          current = projectedRow(stream.line, head)
+          return true
         }
       }
-      emitted
-
-    case ep: EnumeratedPartition =>
-      enumIdx += 1
-      if (enumIdx >= ep.offsets.length) false
-      else {
-        val target = ep.offsets(enumIdx)
-        // offsets are exact line starts from planning: seek, never
-        // re-read the bytes between enumerated records
-        if (target != stream.pos) stream.seekTo(target)
-        val line = stream.next(keepAll = keepLines)
-        if (line == null) false
-        else { emit(line._2, ep.nodeIds(enumIdx)); true }
-      }
-  }
-
-  private def emit(lineBytes: Array[Byte], nodeId: Long): Unit = {
-    currentNodeId = nodeId
-    rowsRead += 1
-    current =
-      if (!keepLines) InternalRow.empty
-      else try {
-        if (flatOnly) rowOfStreaming(lineBytes)
-        else rowOf(mapper.readTree(lineBytes))
-      } catch { case NonFatal(_) => nullRow() }
+    }
+    false
   }
 
   override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
@@ -1251,120 +1142,92 @@ class MailboxPartitionReader(
     MailboxMetrics.Task(MailboxMetrics.BytesRead, stream.bytesRead),
     MailboxMetrics.Task(MailboxMetrics.FilesRead, if (p.firstInFile) 1L else 0L))
 
-  /** Streaming extraction of projected top-level scalars. */
-  private def rowOfStreaming(line: Array[Byte]): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
+  /** The projected row of one record line with this head. */
+  private def projectedRow(line: Array[Byte], head: String): InternalRow =
+    if (!keepLines) InternalRow.empty
+    else {
+      val values =
+        try decode(line)
+        catch { case NonFatal(_) => new Array[Any](readSchema.length) }
+      def meta(name: String, v: => Any): Unit =
+        positions(readSchema).get(name).foreach(values(_) = v)
+      meta("pst_path", UTF8String.fromString(p.file))
+      meta("pst_name", UTF8String.fromString(fileName))
+      meta("__partition", p.index.toLong)
+      meta("__node_id", MailboxPlanner.nodeIdOf(head))
+      new GenericInternalRow(values)
+    }
+
+  private def decode(line: Array[Byte]): Array[Any] = {
     val values = new Array[Any](readSchema.length)
     val parser = factory.createParser(line)
-    try {
-      if (parser.nextToken() == JsonToken.START_OBJECT) {
-        var tok = parser.nextToken()
-        while (tok != JsonToken.END_OBJECT && tok != null) {
-          val name = parser.currentName()
-          parser.nextToken() // move onto the value
-          fieldIndex.get(name) match {
-            case Some(i) if !metaFields.contains(name) =>
-              values(i) =
-                try {
-                  if (parser.currentToken() == JsonToken.VALUE_NULL) null
-                  else scalarValue(readSchema.fields(i), parser)
-                } catch { case NonFatal(_) => null }
-            case _ => parser.skipChildren() // no-op for scalars
-          }
-          tok = parser.nextToken()
-        }
-      }
-    } finally parser.close()
-    fillMeta(values)
-    new GenericInternalRow(values)
+    try if (parser.nextToken() == JsonToken.START_OBJECT)
+      readFields(readSchema, parser, values)
+    finally parser.close()
+    values
+  }
+
+  // field positions by name, per struct type of the projection
+  private val structPositions =
+    new java.util.IdentityHashMap[StructType, Map[String, Int]]()
+  private def positions(st: StructType): Map[String, Int] =
+    structPositions.computeIfAbsent(st, _ => st.fieldNames.zipWithIndex.toMap)
+
+  /** Reads the object the parser stands on into `values` at `st`'s field
+    * positions; a key outside `st` is skipped whole.
+    */
+  private def readFields(st: StructType, parser: JsonParser,
+      values: Array[Any]): Unit = {
+    val at = positions(st)
+    while (parser.nextToken() == JsonToken.FIELD_NAME) {
+      val i = at.getOrElse(parser.currentName, -1)
+      parser.nextToken()
+      if (i < 0) parser.skipChildren()
+      else values(i) = valueOf(st(i).name, st(i).dataType, parser)
+    }
+  }
+
+  /** The value the parser stands on as `dt` (A16: NULL when its token
+    * does not fit, with its subtree skipped).
+    */
+  private def valueOf(name: String, dt: DataType, parser: JsonParser): Any = {
+    import JsonToken.{valueOf => _, _}
+    val tok = parser.currentToken()
+    dt match {
+      case st: StructType if tok == START_OBJECT =>
+        val values = new Array[Any](st.length)
+        readFields(st, parser, values)
+        new GenericInternalRow(values)
+      case ArrayType(et, _) if tok == START_ARRAY =>
+        val items = new ArrayBuffer[Any]()
+        while (parser.nextToken() != END_ARRAY) items += valueOf(name, et, parser)
+        new GenericArrayData(items.toArray)
+      case _ =>
+        parser.skipChildren()
+        try dt match {
+          case StringType if tok == VALUE_STRING =>
+            UTF8String.fromString(truncate(name, parser.getText))
+          case LongType if tok == VALUE_NUMBER_INT    => parser.getLongValue
+          case IntegerType if tok == VALUE_NUMBER_INT => parser.getIntValue
+          case ShortType if tok == VALUE_NUMBER_INT   => parser.getShortValue
+          case DoubleType if tok == VALUE_NUMBER_INT || tok == VALUE_NUMBER_FLOAT =>
+            parser.getDoubleValue
+          case BooleanType if tok == VALUE_TRUE || tok == VALUE_FALSE =>
+            tok == VALUE_TRUE
+          case TimestampType if tok == VALUE_NUMBER_INT =>
+            parser.getLongValue * 1000000L // TIMESTAMP_S → micros
+          case BinaryType if tok == VALUE_STRING =>
+            if (name == "bytes" && !opts.readAttachmentBody) null
+            else Base64.getDecoder.decode(parser.getText)
+          case _ => null // JSON null, or a token that does not fit
+        } catch { case NonFatal(_) => null } // out of range, bad base64
+    }
   }
 
   private def truncate(name: String, s: String): String =
     if (name == "body" || name == "body_html")
       MailboxText.truncateUtf16(s, bodyBudget)
     else s
-
-  private def scalarValue(
-      f: StructField, parser: com.fasterxml.jackson.core.JsonParser): Any =
-    f.dataType match {
-      case StringType =>
-        UTF8String.fromString(truncate(f.name, parser.getValueAsString))
-      case LongType      => parser.getValueAsLong
-      case IntegerType   => parser.getValueAsInt
-      case ShortType     => parser.getValueAsInt.toShort
-      case DoubleType    => parser.getValueAsDouble
-      case BooleanType   => parser.getValueAsBoolean
-      case TimestampType => parser.getValueAsLong * 1000000L
-      case BinaryType    => Base64.getDecoder.decode(parser.getValueAsString)
-      case _             => null
-    }
-
-  private def fillMeta(values: Array[Any]): Unit = {
-    fieldIndex.get("pst_path").foreach(i =>
-      values(i) = UTF8String.fromString(p.file))
-    fieldIndex.get("pst_name").foreach(i =>
-      values(i) = UTF8String.fromString(fileName))
-    fieldIndex.get("__partition").foreach(i => values(i) = p.index.toLong)
-    fieldIndex.get("__node_id").foreach(i => values(i) = currentNodeId)
-  }
-
-  private def nullRow(): InternalRow = {
-    val values = new Array[Any](readSchema.length)
-    fillMeta(values)
-    new GenericInternalRow(values)
-  }
-
-  private def rowOf(node: JsonNode): InternalRow = {
-    val values = new Array[Any](readSchema.length)
-    var i = 0
-    while (i < readSchema.length) {
-      val f = readSchema.fields(i)
-      // A16: any per-field failure degrades to NULL, never kills the row
-      values(i) =
-        try fieldValue(f, node)
-        catch { case NonFatal(_) => null }
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  private def fieldValue(f: StructField, node: JsonNode): Any = f.name match {
-    case "pst_path"    => UTF8String.fromString(p.file)
-    case "pst_name"    => UTF8String.fromString(fileName)
-    case "__partition" => p.index.toLong
-    case "__node_id"   => currentNodeId
-    case name =>
-      val v = node.get(name)
-      if (v == null || v.isNull) null
-      else convert(name, f.dataType, v)
-  }
-
-  private def convert(name: String, dt: DataType, v: JsonNode): Any = dt match {
-    case StringType =>
-      UTF8String.fromString(truncate(name, v.asText()))
-    case LongType      => v.asLong()
-    case IntegerType   => v.asInt()
-    case ShortType     => v.asInt().toShort
-    case DoubleType    => v.asDouble()
-    case BooleanType   => v.asBoolean()
-    case BinaryType =>
-      if (name == "bytes" && !opts.readAttachmentBody) null
-      else Base64.getDecoder.decode(v.asText())
-    case TimestampType => v.asLong() * 1000000L // TIMESTAMP_S → micros
-    case ArrayType(et, _) =>
-      val items = (0 until v.size()).map(j => convert(name, et, v.get(j)))
-      new GenericArrayData(items.toArray)
-    case st: StructType =>
-      val vals = st.fields.map { sf =>
-        val c = v.get(sf.name)
-        if (c == null || c.isNull) null
-        else
-          try convert(sf.name, sf.dataType, c)
-          catch { case NonFatal(_) => null }
-      }
-      new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-    case _ => null
-  }
 
   override def get(): InternalRow = current
   override def close(): Unit = stream.close()

@@ -3,7 +3,6 @@ package graft.source
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.metric.CustomTaskMetric
@@ -29,24 +28,13 @@ import graft.source.pst.{PstFile, PstReader}
   */
 object PstScan {
 
-  /** 4-byte magic probe (the analog of the reference failing the PST
-    * header check, A20). O(4) bytes.
+  /** Does a file head start with the 4-byte `!BDN` NDB magic? (the
+    * analog of the reference failing the PST header check, A20; the
+    * planner reads each unindexed file's head once).
     */
-  def isPst(file: Path, conf: Configuration): Boolean = {
-    val fs = file.getFileSystem(conf)
-    val in = fs.open(file)
-    try {
-      val head = new Array[Byte](4)
-      var got = 0
-      while (got < head.length) {
-        val n = in.read(head, got, head.length - got)
-        if (n < 0) return false
-        got += n
-      }
+  def isPst(head: Array[Byte]): Boolean =
+    head.length >= 4 &&
       head(0) == '!' && head(1) == 'B' && head(2) == 'D' && head(3) == 'N'
-    } catch { case NonFatal(_) => false }
-    finally in.close()
-  }
 
   /** Plan-time node enumeration: node ids of the mode's NID type, in
     * ascending order, from the NBT only.

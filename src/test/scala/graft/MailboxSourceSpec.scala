@@ -3,6 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -381,12 +382,46 @@ class MailboxSourceSpec extends AnyFunSuite with SessionSuite {
   }
 
   test("malformed field degrades to NULL, row survives (A16)") {
+    // a value whose token does not fit its column is NULL, and the fields
+    // after it keep their own values, on indexed and unindexed files, under
+    // a flat projection and one that adds a nested column
     val rdir = Files.createTempDirectory("mailbox_nulls").toFile
-    val good = MailboxGen.unittestLines
-    val tweaked = good.map(l =>
-      l.replace("\"message_flags\":1", "\"message_flags\":\"not-a-number\""))
-    MailboxGen.writeFile(new File(rdir, "t.mbx"), tweaked)
-    val df = Mailbox.messages(spark, new File(rdir, "t.mbx").getPath)
-    assert(df.count() === 12L)
+    def msg(nodeId: Long, fields: String) =
+      s"""{"node_id":$nodeId,"parent_node_id":32930,"record_type":"message",""" +
+        s""""message_class":"IPM.Note",$fields}"""
+    val lines = MailboxGen.unittestLines.map(l =>
+      l.replace("\"message_flags\":1", "\"message_flags\":\"not-a-number\"")) ++ Seq(
+      msg(9001, """"subject":{"message_size":999,"sender_name":"leak"},""" +
+        """"sender_name":"Hopper","message_size":5"""),
+      msg(9002, """"sender_name":["Hopper","Linus"],"message_size":6"""))
+    MailboxGen.writeFile(new File(rdir, "indexed.mbx"), lines)
+    MailboxGen.writeFile(new File(rdir, "plain.mbx"), lines, writeIndex = false)
+    assert(new File(rdir, "indexed.mbx.idx").isFile)
+    assert(!new File(rdir, "plain.mbx.idx").exists())
+
+    val flat = Seq("node_id", "subject", "sender_name", "message_size",
+      "message_flags")
+    for (file <- Seq("indexed.mbx", "plain.mbx");
+         cols <- Seq(flat, flat :+ "recipients")) {
+      val what = s"$file ${cols.mkString(",")}"
+      val rows = Mailbox.messages(spark, new File(rdir, file).getPath)
+        .select(cols.map(col): _*).collect()
+        .map(r => r.getLong(0) -> r).toMap
+      assert(rows.size === 14, what)
+      assert(rows.values.forall(_.isNullAt(4)), s"$what: message_flags")
+      val nested = rows(9001L)
+      assert(nested.isNullAt(1), s"$what: $nested")
+      assert(nested.getString(2) === "Hopper", s"$what: $nested")
+      assert(nested.getLong(3) === 5L, s"$what: $nested")
+      val listed = rows(9002L)
+      assert(listed.isNullAt(2), s"$what: $listed")
+      assert(listed.getLong(3) === 6L, s"$what: $listed")
+      // a valid row keeps its values
+      assert(rows(2097156L).getString(2) === "Hopper Cat", what)
+      assert(rows(2097156L).getLong(3) === 2098156L, what)
+      if (cols.contains("recipients"))
+        assert(rows(2097156L).getSeq[Row](5).map(_.getString(0)) ===
+          Seq("Linus Cat", "Grace Cat"), what)
+    }
   }
 }

@@ -1,8 +1,11 @@
 package graft
 
 import java.io.File
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -256,5 +259,33 @@ class MailboxStatsSpec extends AnyFunSuite with SessionSuite {
     assert(deliveryOfPrefix(
       """{"node_id":1,"message_delivery_time":-5,"a":1}""",
       truncated = true) == Some(Some(-5L)))
+  }
+
+  test("a fresh sidecar build reproduces the committed fixture sidecars") {
+    for (name <- Seq("unittest", "synth_a", "synth_b")) {
+      val file = new File(s"fixtures/mailbox/$name.mbx")
+      val p    = new Path(file.getAbsolutePath)
+      val ix   = MailboxIndex.build(p.getFileSystem(new Configuration()), p)
+      val committed = Files.readAllBytes(new File(s"${file.getPath}.idx").toPath)
+      assert(MailboxIndex.toJson(ix).getBytes(StandardCharsets.UTF_8)
+        .sameElements(committed), name)
+    }
+  }
+
+  test("a multi-block sidecar checkpoints every 512th line's byte offset") {
+    val lines = MailboxGen.syntheticLines(8, 2500, 0)
+    val dir   = Files.createTempDirectory("mailbox_blocks").toFile
+    val file  = new File(dir, "blocks.mbx")
+    MailboxGen.writeFile(file, lines, writeIndex = false)
+    val p  = new Path(file.getAbsolutePath)
+    val ix = MailboxIndex.build(p.getFileSystem(new Configuration()), p)
+    val starts = lines.scanLeft(0L)(_ + _.getBytes(StandardCharsets.UTF_8).length + 1)
+    assert(starts.last === file.length())
+    val expected = lines.indices.filter(_ % MailboxIndex.BlockLines == 0).map(starts(_))
+    assert(expected.length === 5)
+    assert(ix.blocks.map(_.offset).toSeq === expected)
+    assert(ix.blocks.map(_.lines).toSeq ===
+      Seq.fill(4)(MailboxIndex.BlockLines) :+ (lines.length - 4 * MailboxIndex.BlockLines))
+    assert(ix.lines === lines.length.toLong)
   }
 }

@@ -10,6 +10,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.source.{MailboxOptions, MailboxPlanner, RangePartition, RecordFilter}
+
 /** A19's remote RANDOM-ACCESS path: the seekable ranged-GET filesystem
   * (graft.source.RangedHttpFileSystem) against an in-JVM server that
   * implements HEAD + `Range` (206) — the I/O shape of the reference's
@@ -45,7 +47,8 @@ class RangedHttpReadSpec extends AnyFunSuite with SessionSuite {
   private val served = Map(
     "/unittest.pst"    -> "fixtures/mailbox/unittest.pst",
     "/synth_a.mbx"     -> "fixtures/mailbox/synth_a.mbx",
-    "/synth_a.mbx.idx" -> "fixtures/mailbox/synth_a.mbx.idx"
+    "/synth_a.mbx.idx" -> "fixtures/mailbox/synth_a.mbx.idx",
+    "/synth_b.mbx"     -> "fixtures/mailbox/synth_b.mbx" // served unindexed
   )
 
   private val RangeSpec = """bytes=(\d+)-(\d*)""".r
@@ -154,6 +157,18 @@ class RangedHttpReadSpec extends AnyFunSuite with SessionSuite {
     // the sidecar fast path survives: its bytes come from ranged reads
     // of the .idx, never a re-derivation over the data file
     assert(rs.exists(r => r.path == "/synth_a.mbx.idx" && r.method == "GET"))
+  }
+
+  test("planning an unindexed mbx reads the data file's head once") {
+    // one head read routes the file: not PST, mailbox-shaped, no sidecar
+    reset()
+    val opts = MailboxOptions(Map("path" -> s"http://127.0.0.1:$port/synth_b.mbx"))
+    val plan = MailboxPlanner.plan(opts, RecordFilter(opts.mode),
+      spark.sessionState.newHadoopConf())
+    assert(plan.partitions.nonEmpty &&
+      plan.partitions.forall(_.isInstanceOf[RangePartition]), plan.partitions)
+    val gets = snapshot().filter(r => r.path == "/synth_b.mbx" && r.method == "GET")
+    assert(gets.length === 1, gets)
   }
 
   test("remote equals local for PST contacts over ranged https") {

@@ -2,10 +2,16 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.SinglePartitionExchanges
@@ -52,5 +58,26 @@ class SessionsSpec extends AnyFunSuite with SessionSuite {
       }
     }
     assert(hits.isEmpty, s"build sessions with Sessions.local: $hits")
+  }
+
+  test("the huge-method codegen fallback reaches the log") {
+    val events = new ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("codegen-fallback", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        events.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(classOf[WholeStageCodegenExec].getName)
+      .asInstanceOf[Logger]
+    logger.addAppender(capture)
+    try withConf("spark.sql.codegen.hugeMethodLimit", "16") {
+      assert(spark.range(10).selectExpr("id * 2 AS x").collect().length === 10)
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(events.asScala.exists(_.contains("whole-stage codegen was disabled")),
+      events)
   }
 }
