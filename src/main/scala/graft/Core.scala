@@ -196,10 +196,20 @@ object Tables {
     * nanosecond long via the legacy conf — and plain µs timestamps,
     * which Spark reads natively (as TIMESTAMP_NTZ). This exposes the
     * file's physical schema either way; streaming readers need this
-    * form because their declared read schema must match the file.
+    * form because their declared read schema must match the file. The
+    * legacy conf is set only when the memoized footer says `ts` is
+    * TIMESTAMP(NANOS); a µs file leaves the session conf as it was.
     */
   def eventsRaw(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{
+      TimeUnit, TimestampLogicalTypeAnnotation}
+    val schema = parquetMeta(s, s"$d/events.parquet").fileMeta.getSchema
+    val nanos = schema.containsField("ts") &&
+      (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _                                 => false
+      })
+    if (nanos) s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     table(s, d, "events")
   }
 
@@ -315,4 +325,20 @@ object Exact {
     * DECIMAL(18,2))) AS DOUBLE)` in the oracle).
     */
   def dsum(c: Column): Column = sum(dec(c)).cast("double")
+}
+
+/** DuckDB SQL fragments shared by the oracles. They build DuckDB SQL
+  * only, so an oracle stays independent of the implementation it checks.
+  */
+object OracleSql {
+
+  /** The 8 hex digits of `expr` from 1-based position `start` as a
+    * BIGINT, by positional arithmetic (DuckDB has no conv()); equal to
+    * Spark's `conv(substring(…), 16, 10)` over the same md5 hex.
+    */
+  def hexToBigint(expr: String, start: Int = 1): String =
+    (0 until 8).map { k =>
+      val mult = 1L << (4 * (7 - k))
+      s"(strpos('0123456789abcdef', substr($expr, ${start + k}, 1)) - 1) * $mult"
+    }.mkString("(", " + ", ")")
 }

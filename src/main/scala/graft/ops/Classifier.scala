@@ -2,7 +2,7 @@ package graft.ops
 
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.{Q, Tables}
+import graft.{OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -514,16 +514,6 @@ object Classifier {
       Tables.documents(s, d).select(col("doc_id"), col("source")), s, d)
       .select("doc_id", "source", "ckey", "split")
 
-  /** hex(8 chars) → BIGINT without conv(): positional arithmetic (the
-    * qClusterSafeSplit construction, proven hash-identical to Spark's
-    * conv/substring/md5).
-    */
-  private def hexToLongSql(h: String): String =
-    (0 until 8).map { k =>
-      val mult = 1L << (4 * (7 - k))
-      s"(strpos('0123456789abcdef', substr($h, ${1 + k}, 1)) - 1) * $mult"
-    }.mkString("(", " + ", ")")
-
   /** The shared oracle split chain: LSH pairs → CC (recursive reach,
     * the q_dedup_clusters oracle form) → coalesced cluster key →
     * md5-bucketed 8/1/1 split. Requires WITH RECURSIVE.
@@ -546,7 +536,7 @@ object Classifier {
        |      ELSE 'test' END AS split
        |  FROM (SELECT d.doc_id, d.source, d.text,
        |      coalesce(c.component_id, d.doc_id) AS ckey,
-       |      ${hexToLongSql(
+       |      ${OracleSql.hexToBigint(
                  "substr(md5(CAST(coalesce(c.component_id, d.doc_id) " +
                    "AS VARCHAR)), 1, 8)")} % 10 AS b
        |    FROM documents d LEFT JOIN comp c USING (doc_id)))""".stripMargin

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,12 +21,6 @@ import org.apache.spark.sql.functions._
 object Corpus {
 
   private val SpanW = 5
-
-  /** DuckDB-side hex→int64 for the first 8 md5 hex digits (no conv()). */
-  private val hexToLong = (0 until 8).map { k =>
-    val mult = 1L << (4 * (7 - k))
-    s"(strpos('0123456789abcdef', substr(h, ${1 + k}, 1)) - 1) * $mult"
-  }.mkString("(", " + ", ")")
 
   /** q_span_dedup — C4-style repeated-span removal: each document is
     * segmented into consecutive 5-token spans; a span text that occurs
@@ -280,7 +274,7 @@ object Corpus {
          |FROM (SELECT source, n_chars, substr(md5(text), 1, 8) AS h
          |      FROM documents)
          |WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')
-         |   OR $hexToLong < 1717986918
+         |   OR ${OracleSql.hexToBigint("h")} < 1717986918
          |GROUP BY source
          |ORDER BY source""".stripMargin
     )
@@ -491,15 +485,10 @@ object Corpus {
         .orderBy("src_a", "src_b")
     },
     Some {
-      def hexToLong(expr: String, start: Int): String =
-        (0 until 8).map { k =>
-          val mult = 1L << (4 * (7 - k))
-          s"(strpos('0123456789abcdef', substr($expr, ${start + k}, 1)) - 1) * $mult"
-        }.mkString("(", " + ", ")")
       val hs = (0 until 8).map { j =>
         val dig = if (j < 4) "d0" else "d1"
         val st = (j % 4) * 8 + 1
-        s"CAST(min(${hexToLong(dig, st)}) AS BIGINT) AS h$j"
+        s"CAST(min(${OracleSql.hexToBigint(dig, st)}) AS BIGINT) AS h$j"
       }.mkString(",\n    ")
       val agreeSql = (0 until 8)
         .map(j => s"CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END")
@@ -567,15 +556,10 @@ object Corpus {
         .orderBy("source")
     },
     Some {
-      def hexToLong(expr: String, start: Int): String =
-        (0 until 8).map { k =>
-          val mult = 1L << (4 * (7 - k))
-          s"(strpos('0123456789abcdef', substr($expr, ${start + k}, 1)) - 1) * $mult"
-        }.mkString("(", " + ", ")")
       val hs = (0 until 8).map { j =>
         val dig = if (j < 4) "d0" else "d1"
         val st = (j % 4) * 8 + 1
-        s"CAST(min(${hexToLong(dig, st)}) AS BIGINT) AS h$j"
+        s"CAST(min(${OracleSql.hexToBigint(dig, st)}) AS BIGINT) AS h$j"
       }.mkString(",\n    ")
       s"""WITH vocab AS (
          |  SELECT DISTINCT source, token
@@ -1322,7 +1306,7 @@ object Corpus {
          |  FROM documents),
          |hs AS (SELECT doc_id, md5(tok) AS h FROM toks),
          |f AS (
-         |  SELECT doc_id, $hexToLong % 16 AS j, count(*) AS cnt
+         |  SELECT doc_id, ${OracleSql.hexToBigint("h")} % 16 AS j, count(*) AS cnt
          |  FROM hs GROUP BY 1, 2),
          |grid AS (
          |  SELECT c.cid, d.j
@@ -1726,14 +1710,9 @@ object Corpus {
         .orderBy(col("imp_ppm").desc, col("doc_id")).limit(20)
     },
     Some {
-      // hex→int64 positional arithmetic (DuckDB has no conv())
-      def hexToLong(h: String) = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr($h, ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
       s"""WITH toks AS (
          |  SELECT doc_id, lang, CAST(
-         |    ${hexToLong("substr(md5(token), 1, 8)")} % 1024 AS INT) AS bucket
+         |    ${OracleSql.hexToBigint("substr(md5(token), 1, 8)")} % 1024 AS INT) AS bucket
          |  FROM (SELECT doc_id, lang, unnest(list_filter(
          |    string_split_regex(text, '\\s+'), t -> t <> '')) AS token
          |    FROM documents)),

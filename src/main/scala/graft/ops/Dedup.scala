@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -106,16 +106,10 @@ object Dedup {
   }
 
   private[ops] val signaturesSql: String = {
-    // hex→int64 without conv(): 8-term positional arithmetic
-    def hexToLong(expr: String, start: Int): String =
-      (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr($expr, ${start + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
     val hs = (0 until nHashes).map { j =>
       val dig   = if (j < 4) "d0" else "d1"
       val start = (j % 4) * 8 + 1
-      s"CAST(min(${hexToLong(dig, start)}) AS BIGINT) AS h$j"
+      s"CAST(min(${OracleSql.hexToBigint(dig, start)}) AS BIGINT) AS h$j"
     }.mkString(",\n    ")
     s"""WITH e AS (
        |  SELECT doc_id, unnest($wordShinglesSql) AS g FROM documents),
@@ -1566,15 +1560,10 @@ object Dedup {
     // prefix rows carry the token's rank and the doc size so the
     // PPJoin positional/length filters (Xiao et al., WWW'08) can
     // reject candidates BEFORE the verification join
-    // pin the prefix rows: like bandPairs, they feed the bucket-size
-    // pre-pass AND both self-join sides below — without the pin the
-    // df/sz joins + per-doc rank window over the full shingle stream
-    // execute once PER OCCURRENCE (~3× in the static plan; the r14
-    // before-plan shows three copies of the Window pipeline)
     val prefix = ranked.filter(expr("rk <= sz div 2 + 1"))
       .select(col("doc_id"), lit(0).as("band"), col("tok").as("bv"),
         col("rk"), col("sz"))
-      .localCheckpoint()
+    // bandPairs pins its own input
     if (!withPpjoinFilters)
       return (toks, sz, bandPairs(prefix, BucketCap))
     // prefix-shingle buckets through the SAME giant-bucket triangle
@@ -1583,7 +1572,12 @@ object Dedup {
     // subset of the plain join's (every pruned pair provably fails
     // the threshold, so the RESULT is identical — spec-asserted
     // lossless vs brute force)
-    val cells = bandCells(prefix, BucketCap)
+    // pin the prefix rows: like bandPairs, they feed the bucket-size
+    // pre-pass AND both self-join sides below — without the pin the
+    // df/sz joins + per-doc rank window over the full shingle stream
+    // execute once PER OCCURRENCE (~3× in the static plan; the r14
+    // before-plan shows three copies of the Window pipeline)
+    val cells = bandCells(prefix.localCheckpoint(), BucketCap)
     val shared = cells.as("x").join(cells.as("y"),
         col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
           col("x.lo") === col("y.lo") && col("x.hi") === col("y.hi") &&

@@ -244,13 +244,8 @@ object Layout {
       .filter(!killPred)
     val nonEmpty = survivors.select(partCol).distinct()
       .collect().map(_.get(0)).toSet
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try survivors.write.partitionBy(partCol).mode("overwrite").parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    survivors.write.partitionBy(partCol).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(dir)
     val emptied = affected.filterNot(nonEmpty)
     if (emptied.nonEmpty) {
       import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -362,13 +357,8 @@ object Layout {
     val rewritten = survivors.unionByName(u).localCheckpoint()
     val nonEmpty = rewritten.select(partCol).distinct()
       .collect().map(_.get(0)).toSet
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try rewritten.write.partitionBy(partCol).mode("overwrite").parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    rewritten.write.partitionBy(partCol).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(dir)
     val emptied = affected.filterNot(nonEmpty)
     if (emptied.nonEmpty) {
       import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils

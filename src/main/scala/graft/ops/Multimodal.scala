@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{OracleSql, Q, Tables}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1410,17 +1410,13 @@ object Multimodal {
         .orderBy("split")
     },
     Some {
-      def hexToLong(h: String) = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr($h, ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
       s"""WITH $dhashSigsSql,
          |assigned AS (
          |  SELECT doc_id, v, sig,
          |    CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val'
          |      ELSE 'test' END AS split
          |  FROM (SELECT doc_id, v, sig,
-         |    ${hexToLong("substr(md5(sig), 1, 8)")} % 10 AS b
+         |    ${OracleSql.hexToBigint("substr(md5(sig), 1, 8)")} % 10 AS b
          |    FROM sigs)),
          |leaky AS (
          |  SELECT CAST(sum(CASE WHEN ns > 1 THEN 1 ELSE 0 END) AS BIGINT)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -292,18 +292,13 @@ object Ranking {
         .orderBy("doc_id")
     },
     Some {
-      // hex→int64 positional arithmetic (DuckDB has no conv())
-      def hexToLong(h: String) = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr($h, ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
       s"""WITH weights AS (
          |  SELECT CAST(i AS INT) AS bucket,
-         |    ${hexToLong("substr(md5('w-' || i), 1, 8)")} % 2001 - 1000 AS w
+         |    ${OracleSql.hexToBigint("substr(md5('w-' || i), 1, 8)")} % 2001 - 1000 AS w
          |  FROM range(1024) t(i)),
          |toks AS (
          |  SELECT doc_id, CAST(
-         |    ${hexToLong("substr(md5(token), 1, 8)")} % 1024 AS INT) AS bucket
+         |    ${OracleSql.hexToBigint("substr(md5(token), 1, 8)")} % 1024 AS INT) AS bucket
          |  FROM (SELECT doc_id, unnest(list_filter(
          |    string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS token
          |    FROM documents))

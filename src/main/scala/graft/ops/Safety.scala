@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -454,10 +454,6 @@ object Safety {
         .orderBy("event_type")
     },
     Some {
-      val hexToLong = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr(h, ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
       s"""WITH per AS (
          |  SELECT event_type, user_id, count(*) AS cnt
          |  FROM events GROUP BY 1, 2),
@@ -467,7 +463,7 @@ object Safety {
          |  FROM per GROUP BY event_type),
          |seeded AS (
          |  SELECT event_type, bounded_count,
-         |    (CAST($hexToLong AS DOUBLE) + 0.5) / 4294967296.0e0 AS u
+         |    (CAST(${OracleSql.hexToBigint("h")} AS DOUBLE) + 0.5) / 4294967296.0e0 AS u
          |  FROM (SELECT event_type, bounded_count,
          |          substr(md5('dp:' || event_type), 1, 8) AS h
          |        FROM bounded)),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{OracleSql, Q, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -107,14 +107,9 @@ object Sampling {
         .orderBy("doc_id")
     },
     Some {
-      // hex→int64 positional arithmetic (DuckDB has no conv())
-      val hexToLong = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr(h, ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
       s"""SELECT doc_id, u, p FROM (
          |  SELECT doc_id,
-         |    CAST($hexToLong AS DOUBLE) / 4294967296.0e0 AS u,
+         |    CAST(${OracleSql.hexToBigint("h")} AS DOUBLE) / 4294967296.0e0 AS u,
          |    least(1.0e0, CAST(n_chars AS DOUBLE) / 400.0e0) AS p
          |  FROM (SELECT doc_id, n_chars, substr(md5(text), 1, 8) AS h
          |        FROM documents))
@@ -262,13 +257,9 @@ object Sampling {
         .orderBy("source", "rank")
     },
     Some {
-      val hexToLong = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr(h, ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
       s"""WITH keyed AS (
          |  SELECT doc_id, source, n_chars,
-         |    CAST(floor(ln((CAST($hexToLong AS DOUBLE) + 0.5) / 4294967296.0e0)
+         |    CAST(floor(ln((CAST(${OracleSql.hexToBigint("h")} AS DOUBLE) + 0.5) / 4294967296.0e0)
          |        * 1000000.0e0 + 0.5e0) AS BIGINT) AS lnq
          |  FROM (SELECT doc_id, source, n_chars, substr(md5(text), 1, 8) AS h
          |        FROM documents WHERE n_chars > 0)),
@@ -322,12 +313,8 @@ object Sampling {
         .orderBy("epoch", "shard", "pos")
     },
     Some {
-      val hexToLong = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr(hh, ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
       s"""WITH keyed AS (
-         |  SELECT epoch, doc_id, CAST($hexToLong AS BIGINT) AS h
+         |  SELECT epoch, doc_id, CAST(${OracleSql.hexToBigint("hh")} AS BIGINT) AS h
          |  FROM (
          |    SELECT CAST(e.v AS INT) AS epoch, doc_id,
          |      substr(md5(CAST(e.v AS VARCHAR) || ':' ||
@@ -477,17 +464,13 @@ object Sampling {
         .orderBy("day")
     },
     Some {
-      val hexToLong = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr(md5('decay:' || CAST(event_id AS VARCHAR)), ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
       s"""WITH mx AS (SELECT max(epoch_us(ts)) AS mx FROM events),
          |w AS (
          |  SELECT ts, event_id,
          |    CAST(floor(exp(CAST(epoch_us(ts) - mx.mx AS DOUBLE)
          |      / 864000000000.0e0) * 1000000.0e0 + 0.5e0) AS BIGINT)
          |      AS p_ppm,
-         |    $hexToLong % 1000000 AS u_ppm
+         |    ${OracleSql.hexToBigint("md5('decay:' || CAST(event_id AS VARCHAR))")} % 1000000 AS u_ppm
          |  FROM events, mx)
          |SELECT date_trunc('day', ts) AS day, count(*) AS n_events,
          |  CAST(sum(p_ppm) AS BIGINT) // count(*) AS mean_p_ppm,

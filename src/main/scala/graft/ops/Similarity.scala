@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1451,15 +1451,11 @@ object Similarity {
         .orderBy("vec_id")
     },
     Some {
-      val hexToLong = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr(h, ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
       s"""WITH e AS (
          |  SELECT vec_id, $qvecSql AS qv FROM embeddings),
          |sgn AS (
          |  SELECT j, i,
-         |    CASE WHEN $hexToLong % 2 = 0 THEN 1 ELSE -1 END AS s
+         |    CASE WHEN ${OracleSql.hexToBigint("h")} % 2 = 0 THEN 1 ELSE -1 END AS s
          |  FROM (SELECT t1.range AS j, t2.range AS i,
          |          substr(md5('rp-' || t1.range || ':' || t2.range), 1, 8) AS h
          |        FROM range(0, 16) t1, range(0, 64) t2)),

@@ -34,6 +34,20 @@ object StreamingOps {
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else df.withColumn("ts", col("ts").cast("timestamp"))
 
+  /** `body` under the RocksDB state store provider; the session's
+    * previous provider is restored afterwards.
+    */
+  private def withRocksDb[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val pKey = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(pKey)
+    s.conf.set(pKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(v) => s.conf.set(pKey, v)
+      case None    => s.conf.unset(pKey)
+    }
+  }
+
   /** Shared production-shape scaffold: run a streaming DataFrame in
     * append mode to a throwaway checkpointed parquet sink (executor
     * tasks write, nothing materializes on the driver), then read the
@@ -684,11 +698,7 @@ object StreamingOps {
     (s, d) => {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val pKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(pKey)
-      s.conf.set(pKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withRocksDb(s) {
         val raw = Tables.eventsRaw(s, d)
         val stream = s.readStream
           .schema(raw.schema)
@@ -704,9 +714,6 @@ object StreamingOps {
           .toDF()
         runToParquetSink(s, "stream_ltv")(stream)
           .orderBy("user_id", "event_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(pKey, v)
-        case None    => s.conf.unset(pKey)
       }
     },
     Some(
@@ -1156,11 +1163,7 @@ object StreamingOps {
     (s, d) => {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val pKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(pKey)
-      s.conf.set(pKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withRocksDb(s) {
         val gapUs = 1800L * 1000000L
         val tmp = graft.Scratch.dir("stream_session_timer")
         java.nio.file.Files.createDirectories(tmp.resolve("in"))
@@ -1190,9 +1193,6 @@ object StreamingOps {
           .toDF()
         runToParquetSink(s, "stream_session_timer_out")(stream)
           .orderBy("user_id", "start_us")
-      } finally prev match {
-        case Some(v) => s.conf.set(pKey, v)
-        case None    => s.conf.unset(pKey)
       }
     },
     Some(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{OracleSql, Q, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -631,21 +631,17 @@ object TextOps {
     Some {
       val h1 = "substr(md5('fim1-' || doc_id), 1, 8)"
       val h2 = "substr(md5('fim2-' || doc_id), 1, 8)"
-      def hexToLong(h: String) = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr($h, ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
       s"""WITH toks AS (
          |  SELECT doc_id,
          |    list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS t
          |  FROM documents),
          |cut1 AS (
          |  SELECT doc_id, t, CAST(len(t) AS INT) AS n,
-         |    CAST(${hexToLong(h1)} % (len(t) - 2) + 1 AS INT) AS p1
+         |    CAST(${OracleSql.hexToBigint(h1)} % (len(t) - 2) + 1 AS INT) AS p1
          |  FROM toks WHERE len(t) >= 3),
          |cut2 AS (
          |  SELECT doc_id, t, n, p1,
-         |    CAST(${hexToLong(h2)} % (n - 1 - p1) + p1 + 1 AS INT) AS p2
+         |    CAST(${OracleSql.hexToBigint(h2)} % (n - 1 - p1) + p1 + 1 AS INT) AS p2
          |  FROM cut1),
          |parts AS (
          |  SELECT doc_id, n AS n_tok, p1, p2,

@@ -20,17 +20,20 @@ import org.apache.spark.sql.SparkSession
   * never the corpus — while keeping the reference's plan-time guarantees:
   * exact per-class cardinalities (A8), count(*) answered with zero
   * execution IO (A9), exact `read_limit` allocation (A6), and fixed-size
-  * row partitions (A4).
+  * row partitions (A4). The sidecar counts exactly the rows the readers
+  * emit: [[build]] classifies each line by the readers' own record rule
+  * ([[MailboxPlanner.recordOf]], same 160-byte head), and a line that is
+  * not a record counts nowhere.
   *
   * Format (one JSON document, v3):
   * {{{
   * {"v":3,"size":<bytes>,"fp":<crc>,"lines":<n>,
   *  "classes":["F","m:IPM.Note",...],        // "F" = folder records;
   *                                           // messages "m:"-namespaced
-  *  "totals":[16,5,...],                     // per-class line counts
+  *  "totals":[16,5,...],                     // per-class record counts
   *  "tsmin":[...],"tsmax":[...],             // per-class delivery-time
   *  "tsn":[...],"tsu":[...],                 //   min/max/non-null/unknown
-  *  "blocks":[[offset,lines,c0,c1,...],...]} // checkpoint every 512 lines
+  *  "blocks":[[offset,lines,c0,c1,...],...]} // checkpoint every 512 records
   * }}}
   * `fp` is the head/tail CRC content fingerprint checked (with `size`)
   * for sidecar freshness.
@@ -45,7 +48,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Block checkpoints let the planner cut partitions at exact matching-row
   * boundaries: a partition starts at the latest block at-or-before its
-  * first row and carries a skip count (< 512 lines of cheap prefix
+  * first row and carries a skip count (< 512 records of cheap prefix
   * re-classification — no JSON parse). Sidecar volume is ~50 bytes per
   * 512 lines (~0.01% of data at 1 KiB/line), the same order as parquet
   * footers.
@@ -59,23 +62,17 @@ object MailboxIndex {
   // back to range splits — never stale rows.
   val Version    = 3
   val BlockLines = 512
-  /** Record-head bytes retained per line: classification fields fit in
-    * 160, the stats (timestamp) fields in 384 — the MailboxGen layout
-    * contract.
+  /** Line-head bytes the build keeps for [[deliveryOfPrefix]]: the v3
+    * timestamp statistics read `message_delivery_time` from the first
+    * 384 bytes (the MailboxGen layout contract). Classification reads
+    * only the first [[MailboxPlanner.RecordHeadBytes]], as the readers.
     */
   val HeadBytes  = 384
   val FolderClass = "F"
   private val MsgPrefix = "m:"
 
-  /** Sidecar storage key for a record: folders → the "F" marker,
-    * messages → their namespaced class string.
-    */
-  def storageClass(prefix: String): String =
-    if (prefix.contains("\"record_type\":\"folder\"")) FolderClass
-    else MsgPrefix + classOfPrefix(prefix)
-
-  /** One block checkpoint: byte offset, line count, per-class line counts
-    * (indices into `classes`).
+  /** One block checkpoint: byte offset, record count, per-class record
+    * counts (indices into `classes`).
     */
   final case class Block(offset: Long, lines: Int, classCounts: Array[Int])
 
@@ -176,22 +173,6 @@ object MailboxIndex {
 
   // ── building ─────────────────────────────────────────────────────────
 
-  /** Extract a message record's class from its line prefix ("" when
-    * absent/null — the taxonomy buckets that into notes, like the
-    * reference's missing PR_MESSAGE_CLASS_A). The format contract
-    * (MailboxGen layout) puts node_id / record_type / message_class in
-    * the first 160 bytes, so classification never needs a full parse.
-    */
-  def classOfPrefix(prefix: String): String = {
-    val k = prefix.indexOf("\"message_class\":\"")
-    if (k < 0) ""
-    else {
-      val start = k + 17
-      val end   = prefix.indexOf('"', start)
-      if (end < 0) "" else prefix.substring(start, end)
-    }
-  }
-
   /** Delivery time from a record head. `truncated` = the head was cut
     * at [[HeadBytes]], so an absent key may still exist later in the
     * line. Returns:
@@ -225,9 +206,10 @@ object MailboxIndex {
   /** Build the index by scanning the file once (the indexing pass — run
     * distributed via [[indexAll]] for large corpora; planning afterwards
     * never re-reads data). Reads the lines through the source's one
-    * [[LineStream]], keeping a [[HeadBytes]] head per line. Throws if
-    * the first record is not mailbox-shaped (A20: such files fail the
-    * bind).
+    * [[LineStream]], keeping a [[HeadBytes]] head per line, and counts
+    * only the lines [[MailboxPlanner.recordOf]] calls records. Throws if
+    * the file fails [[MailboxPlanner.isMailbox]], the planner's own head
+    * check (A20: such files fail the bind).
     */
   def build(fs: FileSystem, file: Path): FileIndex = {
     val status = fs.getFileStatus(file)
@@ -263,16 +245,21 @@ object MailboxIndex {
       blockCounts = new ArrayBuffer[Int]()
     }
 
+    import MailboxPlanner.{recordOf, Folder, Message, NotRecord}
     val stream = new LineStream(fs.open(file), headBytes = HeadBytes)
     try {
-      while (stream.next(keepLine = false)) {
-        val prefix = stream.head
-        if (prefix.nonEmpty) {
-          if (lines == 0 && !prefix.startsWith(MailboxPlanner.RecordStart))
-            throw new IllegalArgumentException(s"not a mailbox dump: $file")
-          val c = idxOf(storageClass(prefix))
+      var more = stream.next(keepLine = false)
+      if (!MailboxPlanner.isMailbox(stream.head))
+        throw new IllegalArgumentException(s"not a mailbox dump: $file")
+      while (more) {
+        val c = recordOf(stream.head) match {
+          case Folder       => idxOf(FolderClass)
+          case Message(cls) => idxOf(MsgPrefix + cls)
+          case NotRecord    => -1
+        }
+        if (c >= 0) {
           totals(c) += 1
-          deliveryOfPrefix(prefix, stream.truncated) match {
+          deliveryOfPrefix(stream.headOf(HeadBytes), stream.truncated) match {
             case Some(Some(sec)) =>
               if (sec < tsMin(c)) tsMin(c) = sec
               if (sec > tsMax(c)) tsMax(c) = sec
@@ -286,6 +273,7 @@ object MailboxIndex {
           lines += 1
           if (blockLines >= BlockLines) flushBlock(stream.pos)
         }
+        more = stream.next(keepLine = false)
       }
     } finally stream.close()
     flushBlock(0L)

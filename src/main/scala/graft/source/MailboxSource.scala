@@ -274,27 +274,61 @@ object MailboxPlanner {
     */
   val RecordStart = "{\"node_id\":"
 
+  /** The line head the record rule reads: node_id, record_type and
+    * message_class sit in a line's first 160 bytes (the MailboxGen
+    * layout contract).
+    */
+  val RecordHeadBytes = 160
+
+  sealed trait LineKind
+  case object NotRecord extends LineKind
+  case object Folder extends LineKind
+  final case class Message(cls: String) extends LineKind
+
+  /** The source's one record rule, applied to a line's
+    * [[RecordHeadBytes]] head by the readers, bounded enumeration and
+    * the sidecar build alike: a record starts with [[RecordStart]], and
+    * is a folder or a message of the class its head names ("" for none).
+    */
+  def recordOf(head: String): LineKind =
+    if (!head.startsWith(RecordStart)) NotRecord
+    else if (head.contains("\"record_type\":\"folder\"")) Folder
+    else Message(classOfHead(head))
+
+  /** The class a message record's head names ("" when absent or null —
+    * the taxonomy buckets that into notes, like the reference's missing
+    * PR_MESSAGE_CLASS_A), read without a JSON parse.
+    */
+  private def classOfHead(head: String): String = {
+    val key = "\"message_class\":\""
+    val k   = head.indexOf(key)
+    val end = if (k < 0) -1 else head.indexOf('"', k + key.length)
+    if (end < 0) "" else head.substring(k + key.length, end)
+  }
+
   /** Is this line head a record that survives the plan-time record
     * filter? (A5 — the analog of the reference's planning-time
     * PR_MESSAGE_CLASS_A lookup.) The class string is extracted exactly
     * and classified through the typed_bag.hpp taxonomy — never a
     * substring/prefix match.
     */
-  def lineMatches(prefix: String, filter: RecordFilter): Boolean =
-    prefix.startsWith(RecordStart) && {
-      val isFolder = prefix.contains("\"record_type\":\"folder\"")
-      if (filter.wantFolder) isFolder
-      else !isFolder && filter.matchesClass(MailboxIndex.classOfPrefix(prefix))
+  def lineMatches(head: String, filter: RecordFilter): Boolean =
+    recordOf(head) match {
+      case Folder       => filter.wantFolder
+      case Message(cls) => !filter.wantFolder && filter.matchesClass(cls)
+      case NotRecord    => false
     }
 
-  def nodeIdOf(prefix: String): Long = {
-    val i = prefix.indexOf("\"node_id\":")
-    if (i < 0) -1L
-    else {
-      val rest = prefix.substring(i + 10).takeWhile(ch => ch.isDigit || ch == '-')
-      if (rest.isEmpty) -1L else rest.toLong
-    }
-  }
+  /** A20, the one file check of the planner's head probe and the
+    * sidecar build: a mailbox dump's first bytes are a record start (an
+    * empty file, or one opening with a blank or foreign line, is not).
+    */
+  def isMailbox(head: String): Boolean = head.startsWith(RecordStart)
+
+  /** The node id a record's head starts with; -1 when it names none. */
+  def nodeIdOf(head: String): Long =
+    head.drop(RecordStart.length).takeWhile(ch => ch.isDigit || ch == '-')
+      .toLongOption.getOrElse(-1L)
 
   /** Resolve a glob to (path, size) pairs, preserving non-local schemes.
     * Local paths stay scheme-less, and the matches of a relative local
@@ -349,8 +383,8 @@ object MailboxPlanner {
     SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
 
   /** The file's first bytes, read once per unindexed file to route it:
-    * the PST magic ([[PstScan.isPst]]) or a mailbox record start
-    * (A20 — the analog of the reference failing the PST header check
+    * the PST magic ([[PstScan.isPst]]) or a mailbox dump ([[isMailbox]];
+    * A20 — the analog of the reference failing the PST header check
     * and skipping the file). Fewer at EOF; empty when unreadable.
     */
   private def headOf(file: Path, conf: Configuration): Array[Byte] =
@@ -509,7 +543,7 @@ object MailboxPlanner {
                   PstScan.classifyBounded(name, conf, nids, filter, limit),
                   classified = true))
               } else Some(Pst(name, len, nids, classified = false))
-            } else if (!new String(head, UTF_8).startsWith(RecordStart)) {
+            } else if (!isMailbox(new String(head, UTF_8))) {
               System.err.println(s"[mailbox] skipping unreadable file $name")
               None
             } else if (limited)
@@ -983,28 +1017,30 @@ class CountReader(rows: PartitionReader[InternalRow])
   * skips to the next line: that partial line belongs to the previous
   * byte range (Hadoop's LineRecordReader convention).
   *
-  * Each [[next]] line exposes its offset, its first `headBytes` bytes
-  * decoded ([[head]]: 160 hold node_id, record_type and message_class,
-  * enough to classify the line without a parse; the sidecar keeps
-  * [[MailboxIndex.HeadBytes]] for the timestamps), whether the line ran
-  * past them ([[truncated]]), and, when asked for, its bytes ([[line]]).
+  * Each [[next]] line exposes its offset, its record head ([[head]]:
+  * the first [[MailboxPlanner.RecordHeadBytes]] bytes decoded, which
+  * every caller classifies with [[MailboxPlanner.recordOf]]), whether
+  * it ran past the `headBytes` kept ([[truncated]]), and, when asked
+  * for, its bytes ([[line]]). The sidecar build keeps
+  * [[MailboxIndex.HeadBytes]] and reads them with [[headOf]].
   */
 private[source] final class LineStream(
     in: FSDataInputStream,
     startAt: Long = 0L,
     alignToNewline: Boolean = false,
-    headBytes: Int = 160) {
+    headBytes: Int = MailboxPlanner.RecordHeadBytes) {
 
   if (startAt > 0) in.seek(startAt)
   private val buf     = new Array[Byte](1 << 16)
   private var bufLen  = 0
   private var bufPos  = 0
   private val headBuf = new Array[Byte](headBytes)
+  private var headLen = 0
 
   /** Offset of the next unread byte. */
   var pos: Long = startAt
-  /** The current line: its offset, decoded head, whether it is longer
-    * than the head, and its bytes (null unless `next` kept them).
+  /** The current line: its offset, record head, whether it is longer
+    * than the kept head, and its bytes (null unless `next` kept them).
     */
   var lineStart: Long    = startAt
   var head: String       = ""
@@ -1027,7 +1063,7 @@ private[source] final class LineStream(
   def next(keepLine: Boolean): Boolean = {
     lineStart = pos
     var out: ByteArrayOutputStream = null
-    var headLen  = 0
+    headLen = 0
     var lineLen  = 0L
     var newline  = 0
     var sawBytes = false
@@ -1051,7 +1087,7 @@ private[source] final class LineStream(
     }
     if (!sawBytes) return false
     pos += lineLen + newline
-    head = new String(headBuf, 0, headLen, UTF_8)
+    head = headOf(MailboxPlanner.RecordHeadBytes)
     truncated = lineLen > headBytes
     line =
       if (!keepLine) null
@@ -1059,6 +1095,9 @@ private[source] final class LineStream(
       else out.toByteArray
     true
   }
+
+  /** The current line's first `n` bytes (at most `headBytes`), decoded. */
+  def headOf(n: Int): String = new String(headBuf, 0, math.min(n, headLen), UTF_8)
 
   /** Bytes consumed since `startAt`, a skipped partial line included. */
   def bytesRead: Long = pos - startAt

@@ -9,7 +9,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.source.{Mailbox, MailboxGen, MailboxIndex}
+import graft.model.MailboxSchema.Mode
+import graft.source.{Mailbox, MailboxGen, MailboxIndex, MailboxOptions,
+  MailboxPlanner, RecordFilter}
 
 /** Statistics-backed MIN/MAX aggregate pushdown (v3 sidecars): the
   * fast path answers from per-class delivery-time stats with ONE static
@@ -259,6 +261,78 @@ class MailboxStatsSpec extends AnyFunSuite with SessionSuite {
     assert(deliveryOfPrefix(
       """{"node_id":1,"message_delivery_time":-5,"a":1}""",
       truncated = true) == Some(Some(-5L)))
+  }
+
+  /** `lines` written twice as `box.mbx`: with a sidecar under the first
+    * path returned, without one under the second.
+    */
+  private def twinBoxes(lines: Seq[String]): (String, String) = {
+    val dir     = Files.createTempDirectory("mbx-twins").toFile
+    val indexed = new File(dir, "indexed/box.mbx")
+    val plain   = new File(dir, "plain/box.mbx")
+    MailboxGen.writeFile(indexed, lines)
+    MailboxGen.writeFile(plain, lines, writeIndex = false)
+    assert(new File(indexed.getPath + ".idx").isFile)
+    (indexed.getPath, plain.getPath)
+  }
+
+  /** What a scan yields: its count(), its rows (all but `pst_path`, as
+    * sorted JSON) and its distinct node ids.
+    */
+  private def yields(df: DataFrame): (Long, Seq[String], Long) =
+    (df.count(), df.drop("pst_path").toJSON.collect().sorted.toSeq,
+      df.select("node_id").distinct().count())
+
+  test("an indexed box with a foreign line yields what the unindexed box does") {
+    val lines = MailboxGen.syntheticLines(2, 600, 0)
+    val (indexed, plain) =
+      twinBoxes((lines.take(300) :+ "garbage line") ++ lines.drop(300))
+    val opts = Map("partition_size" -> "100")
+    val got = yields(Mailbox.messages(spark, indexed, opts))
+    assert(got == yields(Mailbox.messages(spark, plain, opts)))
+    assert(got._1 == 600L && got._2.length == 600 && got._3 == 600L)
+  }
+
+  test("a record whose message_class sits past byte 160 yields the same " +
+    "rows indexed and unindexed") {
+    def task(id: Int, pad: String) =
+      s"""{"node_id":$id,"parent_node_id":1,"record_type":"message",""" +
+        s""""padding":"$pad","message_class":"IPM.Task","subject":"t$id",""" +
+        s""""message_delivery_time":${1000 + id}}"""
+    val lines = Seq(task(1, ""), task(2, "x" * 200), task(3, ""))
+    assert(lines(1).indexOf("message_class") > 160 &&
+      lines(1).indexOf("message_class") < MailboxIndex.HeadBytes)
+    val (indexed, plain) = twinBoxes(lines)
+    val got = yields(Mailbox.tasks(spark, indexed))
+    assert(got == yields(Mailbox.tasks(spark, plain)))
+    // the record head names no class: both read the record as a note
+    assert(got._1 == 2L && got._3 == 2L)
+    for (box <- Seq(indexed, plain)) {
+      val byClass = Mailbox.messages(spark, box)
+        .groupBy("message_class").agg(count(lit(1)).as("n"))
+      assert(!groupPushed(byClass), s"$box: the sidecar cannot name the class")
+      assert(byClass.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq ==
+        Seq("IPM.Task" -> 3L), box)
+    }
+  }
+
+  test("a file whose first line is blank is no mailbox dump to the build " +
+    "or the planner") {
+    val dir = Files.createTempDirectory("mbx-blank-head").toFile
+    for ((name, lines) <- Seq(
+        "blank.mbx" -> ("" +: MailboxGen.syntheticLines(1, 20, 0)),
+        "empty.mbx" -> Nil)) {
+      val file = new File(dir, name)
+      MailboxGen.writeFile(file, lines, writeIndex = false)
+      val p = new Path(file.getAbsolutePath)
+      val e = intercept[IllegalArgumentException](
+        MailboxIndex.build(p.getFileSystem(new Configuration()), p))
+      assert(e.getMessage.contains("not a mailbox dump"), name)
+      val plan = MailboxPlanner.plan(MailboxOptions(Map("path" -> file.getPath)),
+        RecordFilter(Mode.Messages), spark.sessionState.newHadoopConf())
+      assert(plan.partitions.isEmpty && plan.exactRows.contains(0L), name)
+      assert(Mailbox.messages(spark, file.getPath).count() == 0L, name)
+    }
   }
 
   test("a fresh sidecar build reproduces the committed fixture sidecars") {

@@ -63,8 +63,10 @@ class TablesMetaSpec extends AnyFunSuite with SessionSuite {
     }
   }
 
-  test("a TIMESTAMP(NANOS) column converts under the current nanosAsLong " +
-    "conf, not the one in force at the first footer read") {
+  /** A temp dir holding a one-row `events.parquet` whose `ts` is
+    * TIMESTAMP(NANOS) with the value 1700000000123456789.
+    */
+  private def nanosEventsDir(): Path = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
@@ -78,6 +80,12 @@ class TablesMetaSpec extends AnyFunSuite with SessionSuite {
     try w.write(new SimpleGroupFactory(schema).newGroup()
       .append("event_id", 1L).append("ts", 1700000000123456789L))
     finally w.close()
+    dir
+  }
+
+  test("a TIMESTAMP(NANOS) column converts under the current nanosAsLong " +
+    "conf, not the one in force at the first footer read") {
+    val dir  = nanosEventsDir()
     val path = s"$dir/events.parquet"
     withConf(NanosAsLong, None) {
       val viaFooter = scala.util.Try(Tables.table(spark, dir.toString, "events"))
@@ -89,6 +97,21 @@ class TablesMetaSpec extends AnyFunSuite with SessionSuite {
     withConf(NanosAsLong, Some("true")) {
       val raw = Tables.eventsRaw(spark, dir.toString)
       assert(raw.schema == inferred(path))
+      assert(raw.schema("ts").dataType == LongType)
+      assert(raw.select("ts").head().getLong(0) == 1700000000123456789L)
+    }
+  }
+
+  test("eventsRaw sets nanosAsLong only for a TIMESTAMP(NANOS) events file") {
+    val sf0001 = s"${new java.io.File(sf).getParent}/sf0.001"
+    for (flag <- Seq(None, Some("false"))) withConf(NanosAsLong, flag) {
+      val before = spark.conf.getOption(NanosAsLong)
+      assert(SparkEntry.queries("q_daily_uniques")(spark, sf0001).collect().nonEmpty)
+      assert(!Tables.tsIsRawNs(Tables.eventsRaw(spark, sf0001)))
+      assert(spark.conf.getOption(NanosAsLong) == before, s"set to $flag before")
+    }
+    withConf(NanosAsLong, None) {
+      val raw = Tables.eventsRaw(spark, nanosEventsDir().toString)
       assert(raw.schema("ts").dataType == LongType)
       assert(raw.select("ts").head().getLong(0) == 1700000000123456789L)
     }
