@@ -8,45 +8,7 @@ import java.nio.file.{Files, Paths}
   */
 object CatalogDump {
   def main(args: Array[String]): Unit = {
-    val groups: Seq[(String, Seq[Q])] = Seq(
-      "Relational core (Tier B)"       -> ops.Relational.all,
-      "Text analysis"                  -> ops.TextOps.all,
-      "Deduplication"                  -> ops.Dedup.all,
-      "Similarity search"              -> ops.Similarity.all,
-      "SQL analytics"                  -> ops.Analytics.all,
-      "Streaming"                      -> ops.StreamingOps.all,
-      "Mailbox connector (Tier A)"     -> ops.MailboxQueries.all,
-      "Real PST binary (Tier A)"       -> ops.PstQueries.all,
-      "Multimodal"                     -> ops.Multimodal.all,
-      "Custom expressions"             -> ops.CustomFnQueries.all,
-      "Temporal joins"                 -> ops.Temporal.all,
-      "Scalars & predicates"           -> ops.Scalars.all,
-      "Collections & subqueries"       -> ops.Collections.all,
-      "SQL-text entry points"          -> ops.SqlSurface.all,
-      "SQL-text entry points, pt 2"    -> ops.SqlSurface2.all,
-      "Statistics & ordered aggs"      -> ops.Stats.all,
-      "Composed operators"             -> ops.Advanced.all,
-      "Reshaping & sessions"           -> ops.Reshape.all,
-      "Reproducible sampling"          -> ops.Sampling.all,
-      "Histograms, cross join, mode"   -> ops.Extras.all,
-      "Event analytics"                -> ops.EventAnalytics.all,
-      "Data layout"                    -> ops.Layout.all,
-      "Relevance ranking"              -> ops.Ranking.all,
-      "Profiling & time series"        -> ops.Profiling.all,
-      "Corpus construction"            -> ops.Corpus.all,
-      "Curation pipeline"              -> ops.CuratePipeline.all,
-      "Tokenizer training (BPE)"       -> ops.Bpe.all,
-      "Tokenizer training (unigram LM)" -> ops.Unigram.all,
-      "Tokenizer training (WordPiece)" -> ops.Wordpiece.all,
-      "Production-vocab encoding"      -> ops.WordpieceXl.all,
-      "Trained quality classifier"     -> ops.Classifier.all,
-      "Safety (PII)"                   -> ops.Safety.all,
-      "Sketches"                       -> ops.Sketches.all,
-      "Graph analytics"                -> ops.Graph.all,
-      "Persisted model artifacts"      -> ops.ModelStore.all
-    )
-    require(groups.map(_._2.size).sum == SparkEntry.registry.size,
-      "CatalogDump groups are missing registry entries")
+    val groups   = SparkEntry.groups
     val total    = groups.map(_._2.size).sum
     val nOracle  = groups.flatMap(_._2).count(_.oracle.isDefined)
     val sb       = new StringBuilder

@@ -327,6 +327,22 @@ object Exact {
   def dsum(c: Column): Column = sum(dec(c)).cast("double")
 }
 
+/** The md5-prefix hash of the Spark side: the first 8 hex digits of an
+  * md5 as an unsigned 32-bit value, the repo's shared hash convention.
+  */
+object Hash {
+  import org.apache.spark.sql.functions.{conv, substring}
+
+  /** The 8 hex digits of `hex` from 1-based position `start`, as
+    * `conv(substring(hex, start, 8), 16, 10)` (a decimal STRING; callers
+    * cast it). It mirrors [[OracleSql.hexToBigint]], the DuckDB side of
+    * the same rule, and must not share code with it, so an oracle stays
+    * independent of the implementation it checks.
+    */
+  def hexToBigint(hex: Column, start: Int = 1): Column =
+    conv(substring(hex, start, 8), 16, 10)
+}
+
 /** DuckDB SQL fragments shared by the oracles. They build DuckDB SQL
   * only, so an oracle stays independent of the implementation it checks.
   */

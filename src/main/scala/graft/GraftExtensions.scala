@@ -81,8 +81,9 @@ object FuseDotProduct extends Rule[LogicalPlan] {
 /** SparkSessionExtensions entry point: injects graft's custom
   * expressions into every session built with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`) — the standing registration
-  * path, vs. GraftFunctions.register's per-session temp functions.
+  * `.withExtensions(new GraftExtensions)`), as `graft.Sessions.local`
+  * does for every session: the one registration path of the graft SQL
+  * functions ([[GraftFunctions.sqlFunctions]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

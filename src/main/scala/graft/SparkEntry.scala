@@ -2,23 +2,52 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see SURVEY.md §7. */
 object SparkEntry {
-  /** Full registry of implemented operators (SURVEY.md §2 + pipeline
-    * extensions). Order is the §7.2 build order.
+  /** The registry in titled groups, one per operator object: the
+    * sections of OPERATORS.md ([[CatalogDump]]). Order is the §7.2
+    * build order.
     */
-  def registry: Seq[Q] =
-    ops.Relational.all ++ ops.TextOps.all ++ ops.Dedup.all ++
-      ops.Similarity.all ++ ops.Analytics.all ++ ops.StreamingOps.all ++
-      ops.MailboxQueries.all ++ ops.PstQueries.all ++ ops.Multimodal.all ++
-      ops.CustomFnQueries.all ++ ops.Temporal.all ++ ops.Scalars.all ++
-      ops.Collections.all ++ ops.SqlSurface.all ++ ops.SqlSurface2.all ++
-      ops.Stats.all ++
-      ops.Advanced.all ++ ops.Reshape.all ++ ops.Sampling.all ++
-      ops.Extras.all ++ ops.EventAnalytics.all ++ ops.Layout.all ++
-      ops.Ranking.all ++ ops.Profiling.all ++ ops.Corpus.all ++
-      ops.CuratePipeline.all ++ ops.Bpe.all ++ ops.Unigram.all ++
-      ops.Wordpiece.all ++ ops.WordpieceXl.all ++ ops.Classifier.all ++
-      ops.Safety.all ++
-      ops.Sketches.all ++ ops.Graph.all ++ ops.ModelStore.all
+  def groups: Seq[(String, Seq[Q])] = Seq(
+    "Relational core (Tier B)"       -> ops.Relational.all,
+    "Text analysis"                  -> ops.TextOps.all,
+    "Deduplication"                  -> ops.Dedup.all,
+    "Similarity search"              -> ops.Similarity.all,
+    "SQL analytics"                  -> ops.Analytics.all,
+    "Streaming"                      -> ops.StreamingOps.all,
+    "Mailbox connector (Tier A)"     -> ops.MailboxQueries.all,
+    "Real PST binary (Tier A)"       -> ops.PstQueries.all,
+    "Multimodal"                     -> ops.Multimodal.all,
+    "Custom expressions"             -> ops.CustomFnQueries.all,
+    "Temporal joins"                 -> ops.Temporal.all,
+    "Scalars & predicates"           -> ops.Scalars.all,
+    "Collections & subqueries"       -> ops.Collections.all,
+    "SQL-text entry points"          -> ops.SqlSurface.all,
+    "SQL-text entry points, pt 2"    -> ops.SqlSurface2.all,
+    "Statistics & ordered aggs"      -> ops.Stats.all,
+    "Composed operators"             -> ops.Advanced.all,
+    "Reshaping & sessions"           -> ops.Reshape.all,
+    "Reproducible sampling"          -> ops.Sampling.all,
+    "Histograms, cross join, mode"   -> ops.Extras.all,
+    "Event analytics"                -> ops.EventAnalytics.all,
+    "Data layout"                    -> ops.Layout.all,
+    "Relevance ranking"              -> ops.Ranking.all,
+    "Profiling & time series"        -> ops.Profiling.all,
+    "Corpus construction"            -> ops.Corpus.all,
+    "Curation pipeline"              -> ops.CuratePipeline.all,
+    "Tokenizer training (BPE)"       -> ops.Bpe.all,
+    "Tokenizer training (unigram LM)" -> ops.Unigram.all,
+    "Tokenizer training (WordPiece)" -> ops.Wordpiece.all,
+    "Production-vocab encoding"      -> ops.WordpieceXl.all,
+    "Trained quality classifier"     -> ops.Classifier.all,
+    "Safety (PII)"                   -> ops.Safety.all,
+    "Sketches"                       -> ops.Sketches.all,
+    "Graph analytics"                -> ops.Graph.all,
+    "Persisted model artifacts"      -> ops.ModelStore.all
+  )
+
+  /** Full registry of implemented operators (SURVEY.md §2 + pipeline
+    * extensions), in [[groups]] order.
+    */
+  def registry: Seq[Q] = groups.flatMap(_._2)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

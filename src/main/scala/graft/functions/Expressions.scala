@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -44,6 +43,68 @@ case class FiletimeToTimestamp(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
+/** Static kernels behind [[HammingDistance]], [[DotProductQ]] and
+  * [[CountCharsInRanges]]: both their interpreted `nullSafeEval` and
+  * their generated code call these (the [[MinhashKernel]] pattern).
+  */
+object ScalarKernel {
+
+  /** Positions at which the UTF-16 renderings of `a` and `b` differ, or
+    * -1 when their lengths differ.
+    */
+  def hamming(a: UTF8String, b: UTF8String): Int = {
+    val sa = a.toString
+    val sb = b.toString
+    if (sa.length != sb.length) return -1
+    var d = 0
+    var i = 0
+    while (i < sa.length) { if (sa.charAt(i) != sb.charAt(i)) d += 1; i += 1 }
+    d
+  }
+
+  /** Whether [[dot]] has a value: equal lengths and no null element. */
+  def dotDefined(a: org.apache.spark.sql.catalyst.util.ArrayData,
+      b: org.apache.spark.sql.catalyst.util.ArrayData): Boolean = {
+    val n = a.numElements()
+    if (n != b.numElements()) return false
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** The dot product of two arrays [[dotDefined]] accepts. */
+  def dot(a: org.apache.spark.sql.catalyst.util.ArrayData,
+      b: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
+    val n = a.numElements()
+    var s = 0L
+    var i = 0
+    while (i < n) { s += a.getLong(i) * b.getLong(i); i += 1 }
+    s
+  }
+
+  /** Code points of `v` inside any inclusive range of `bounds`, a flat
+    * `[lo0, hi0, lo1, hi1, …]` array.
+    */
+  def countInRanges(v: UTF8String, bounds: Array[Int]): Int = {
+    val s = v.toString
+    var cnt = 0
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      i += Character.charCount(cp)
+      var k = 0
+      while (k < bounds.length) {
+        if (cp >= bounds(k) && cp <= bounds(k + 1)) { cnt += 1; k = bounds.length }
+        else k += 2
+      }
+    }
+    cnt
+  }
+}
+
 /** Hamming distance between two equal-length strings (e.g. SimHash bit
   * strings): the near-dup distance primitive, codegen'd.
   * Unequal lengths yield -1 (callers treat as "not comparable").
@@ -60,38 +121,12 @@ case class HammingDistance(left: Expression, right: Expression)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         "hamming_distance needs (STRING, STRING)")
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[UTF8String].toString
-    val b = r.asInstanceOf[UTF8String].toString
-    if (a.length != b.length) -1
-    else {
-      var d = 0
-      var i = 0
-      while (i < a.length) { if (a.charAt(i) != b.charAt(i)) d += 1; i += 1 }
-      d
-    }
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    ScalarKernel.hamming(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val sa = ctx.freshName("sa")
-      val sb = ctx.freshName("sb")
-      val i  = ctx.freshName("i")
-      val d  = ctx.freshName("d")
-      s"""
-         |String $sa = $a.toString();
-         |String $sb = $b.toString();
-         |if ($sa.length() != $sb.length()) {
-         |  ${ev.value} = -1;
-         |} else {
-         |  int $d = 0;
-         |  for (int $i = 0; $i < $sa.length(); $i++) {
-         |    if ($sa.charAt($i) != $sb.charAt($i)) $d++;
-         |  }
-         |  ${ev.value} = $d;
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.ScalarKernel.hamming($a, $b)")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(left = l, right = r)
@@ -128,37 +163,16 @@ case class DotProductQ(left: Expression, right: Expression)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      s += a.getLong(i) * b.getLong(i)
-      i += 1
-    }
-    s
+    if (ScalarKernel.dotDefined(a, b)) ScalarKernel.dot(a, b) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $s = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $s += $a.getLong($i) * $b.getLong($i);
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      |if (graft.functions.ScalarKernel.dotDefined($a, $b)) {
+      |  ${ev.value} = graft.functions.ScalarKernel.dot($a, $b);
+      |} else {
+      |  ${ev.isNull} = true;
+      |}""".stripMargin)
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(left = l, right = r)
@@ -177,9 +191,11 @@ case class DotProductQ(left: Expression, right: Expression)
 case class CountCharsInRanges(child: Expression, ranges: Seq[(Int, Int)])
     extends UnaryExpression {
 
-  // an empty ranges list would make doGenCode emit `if () cnt++;` —
-  // invalid Java that fails Janino and forces interpreted fallback
   require(ranges.nonEmpty, "CountCharsInRanges needs at least one range")
+
+  /** `ranges` as [[ScalarKernel.countInRanges]] takes them. */
+  @transient private lazy val bounds: Array[Int] =
+    ranges.flatMap { case (lo, hi) => Seq(lo, hi) }.toArray
 
   override def dataType: DataType = IntegerType
   override def checkInputDataTypes()
@@ -190,44 +206,14 @@ case class CountCharsInRanges(child: Expression, ranges: Seq[(Int, Int)])
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"chars_in_ranges needs STRING, got ${child.dataType.sql}")
 
-  override def nullSafeEval(v: Any): Any = {
-    val s = v.asInstanceOf[UTF8String].toString
-    var cnt = 0
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      i += Character.charCount(cp)
-      var k = 0
-      while (k < ranges.length) {
-        if (cp >= ranges(k)._1 && cp <= ranges(k)._2) { cnt += 1; k = ranges.length }
-        else k += 1
-      }
-    }
-    cnt
-  }
+  override def nullSafeEval(v: Any): Any =
+    ScalarKernel.countInRanges(v.asInstanceOf[UTF8String], bounds)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s   = ctx.freshName("s")
-      val i   = ctx.freshName("i")
-      val cp  = ctx.freshName("cp")
-      val cnt = ctx.freshName("cnt")
-      val cond = ranges
-        .map { case (lo, hi) =>
-          if (lo == hi) s"$cp == $lo" else s"($cp >= $lo && $cp <= $hi)"
-        }
-        .mkString(" || ")
-      s"""
-         |String $s = $c.toString();
-         |int $cnt = 0;
-         |for (int $i = 0; $i < $s.length(); ) {
-         |  int $cp = $s.codePointAt($i);
-         |  $i += java.lang.Character.charCount($cp);
-         |  if ($cond) $cnt++;
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val b = ctx.addReferenceObj("bounds", bounds, "int[]")
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.ScalarKernel.countInRanges($c, $b)")
+  }
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -627,7 +613,6 @@ case class GramRunStats(child: Expression, n: Int) extends UnaryExpression {
     copy(child = c)
 }
 
-/** Column-API and SQL-registry surface for the custom expressions. */
 /** Static kernel behind [[JaroWinkler]] — generated code calls it via
   * the class's static forwarder (the MinhashKernel pattern).
   *
@@ -716,6 +701,7 @@ case class JaroWinkler(left: Expression, right: Expression)
       l: Expression, r: Expression): Expression = copy(left = l, right = r)
 }
 
+/** Column-API and SQL-registry surface for the custom expressions. */
 object GraftFunctions {
 
   def filetime_to_timestamp(c: Column): Column =
@@ -811,10 +797,10 @@ object GraftFunctions {
       s"$fn expects a foldable integer literal argument, got $e")
   }
 
-  /** Every graft SQL function: (name, expression class, builder). Both
-    * registration paths read it: GraftExtensions injects it into every
-    * session it is installed in, [[register]] adds it to one session as
-    * temp functions. The parameterized kernels take literal arguments.
+  /** Every graft SQL function: (name, expression class, builder).
+    * GraftExtensions injects it into every session it is installed in,
+    * which `graft.Sessions.local` does for every session. The
+    * parameterized kernels take literal arguments.
     */
   val sqlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("filetime_to_timestamp", classOf[FiletimeToTimestamp],
@@ -838,14 +824,4 @@ object GraftFunctions {
     ("gram_run_stats", classOf[GramRunStats],
       e => GramRunStats(e.head, litInt(e(1), "gram_run_stats"))),
     ("jaro_winkler", classOf[JaroWinkler], e => JaroWinkler(e.head, e(1))))
-
-  /** Register every graft function for SQL use (temp-function path;
-    * GraftExtensions.injectFunction is the standing-session analog).
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    sqlFunctions.foreach { case (name, _, builder) =>
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Shared register arithmetic for [[HllSketchAgg]] — identical, by
   * construction, to the SQL formulation `q_hll_distinct` retains as its
   * DuckDB oracle (ops/Sketches.scala): p = 6 → m = 64 registers; the
-  * 32-bit hash is the first 8 hex chars of md5 (the repo's `h32`);
+  * 32-bit hash is the first 8 hex chars of md5 ([[graft.Hash]]);
   * bucket = top-6 bits, rank = leading-zero position of the remaining
   * 26 bits (27 for an all-zero remainder). The estimator keeps the same
   * deterministic numeric domain as the SQL: the indicator sum is an
@@ -91,7 +91,7 @@ object HllKernel {
   * (the reference's src/pst_extension.cpp:15-24 registers table
   * functions; DuckDB's own approx_count_distinct provides the HLL
   * aggregate there) — here registered via SparkSessionExtensions
-  * .injectFunction / a session temp function (GraftFunctions.register).
+  * .injectFunction.
   *
   * Value-identical to the q_hll_distinct register DAG by construction
   * (HllAggSpec asserts it, plus partition-count invariance of the

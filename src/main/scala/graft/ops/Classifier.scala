@@ -2,7 +2,7 @@ package graft.ops
 
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.{OracleSql, Q, Tables}
+import graft.{Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -495,7 +495,7 @@ object Classifier {
       joinType = "left")
       .withColumn("ckey", coalesce(col("component_id"), col("doc_id")))
       .withColumn("bucket",
-        (conv(substring(md5(col("ckey").cast("string")), 1, 8), 16, 10)
+        (Hash.hexToBigint(md5(col("ckey").cast("string")))
           .cast("long") % 10).cast("int"))
       .withColumn("split",
         when(col("bucket") < 8, "train")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSql, Q, Tables}
+import graft.{Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -259,7 +259,7 @@ object Corpus {
       val headSrc = Seq("src0", "src1", "src2", "src3", "src4")
       // floor(0.4 * 2^32) — tail sources keep u32 < this
       val tailThresh = 1717986918L
-      val u32 = conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long")
+      val u32 = Hash.hexToBigint(md5(col("text"))).cast("long")
       val kept = Tables.documents(s, d)
         .withColumn("u32", u32)
         .filter(col("source").isin(headSrc: _*) || col("u32") < tailThresh)
@@ -1214,7 +1214,7 @@ object Corpus {
         .select(col("doc_id"),
           explode(TextOps.wsTokens(lower(col("text")))).as("tok"))
         .select(col("doc_id"),
-          (conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long")
+          (Hash.hexToBigint(md5(col("tok"))).cast("long")
             % dims).as("j"))
         .groupBy("doc_id", "j").agg(count(lit(1)).as("cnt"))
         .cache()
@@ -1676,7 +1676,7 @@ object Corpus {
         .select(col("doc_id"), col("lang"),
           explode(TextOps.wsTokens(col("text"))).as("token"))
         .select(col("doc_id"), col("lang"),
-          (conv(substring(md5(col("token")), 1, 8), 16, 10)
+          (Hash.hexToBigint(md5(col("token")))
             .cast("long") % D).cast("int").as("bucket"))
       // ONE (bucket, lang) rollup — O(D × #langs) rows — pinned with
       // localCheckpoint, then corp and targ derive from the pinned

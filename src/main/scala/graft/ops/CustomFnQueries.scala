@@ -98,11 +98,11 @@ object CustomFnQueries {
     * kernels: `chars_in_ranges(text, 'a-zA-Z')` (character-class
     * literal parsed by the SQL builder into codepoint ranges),
     * `simhash16(tokens)`, and `hamming_distance(sig, zeros)` invoked
-    * by NAME from `spark.sql` — registered via both
-    * GraftExtensions.injectFunction and the session temp-function
-    * path, so a SQL-only user has full parity with the Column API
-    * (the reference's users only ever had SQL). The oracle retains
-    * the hex/regex formulations each kernel is proven against.
+    * by NAME from `spark.sql` — GraftExtensions.injectFunction
+    * registers them in every session, so a SQL-only user has full
+    * parity with the Column API (the reference's users only ever had
+    * SQL). The oracle retains the hex/regex formulations each kernel
+    * is proven against.
     *
     * 100 TB shape: all three are map-side whole-stage-codegen
     * expressions — the only exchange is the harness sort.
@@ -110,7 +110,6 @@ object CustomFnQueries {
   lazy val qSqlNativeFuncs: Q = Q(
     "q_sql_native_funcs",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d).createOrReplaceTempView("documents_nf")
       s.sql(
         """SELECT doc_id,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSql, Q, Tables}
+import graft.{Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1294,8 +1294,8 @@ object Dedup {
           explode(sequence(lit(1), lit(3))).as("i"), col("n"))
         .select(col("anchor"), lit("neg").as("role"),
           (col("i") + 1).as("rank"),
-          pmod(conv(substring(md5(concat_ws("-", lit("neg"),
-            col("anchor"), col("i"))), 1, 8), 16, 10).cast("long"),
+          pmod(Hash.hexToBigint(md5(concat_ws("-", lit("neg"),
+            col("anchor"), col("i")))).cast("long"),
             col("n")).as("pair_id"), col("pos_id"))
         .filter(col("pair_id") =!= col("anchor") &&
           col("pair_id") =!= col("pos_id"))
@@ -1319,10 +1319,7 @@ object Dedup {
          |  FROM pos, UNNEST(range(1, 4)) AS v(i)),
          |neg AS (
          |  SELECT anchor, 'neg' AS role, CAST(i + 1 AS INT) AS rank,
-         |    CAST(${(0 until 8).map { k =>
-                 val mult = 1L << (4 * (7 - k))
-                 s"(strpos('0123456789abcdef', substr(h, ${1 + k}, 1)) - 1) * $mult"
-               }.mkString("(", " + ", ")")} AS BIGINT)
+         |    CAST(${OracleSql.hexToBigint("h")} AS BIGINT)
          |      % (SELECT n FROM nd) AS pair_id,
          |    pos_id
          |  FROM negh)
@@ -1419,7 +1416,7 @@ object Dedup {
     val posSeq = when(lenT >= 4, sequence(lit(1), (lenT - 3).cast("int")))
       .otherwise(expr("CAST(array() AS ARRAY<INT>)"))
     val isBoundary = (i: Column) =>
-      conv(substring(md5(col("text").substr(i, lit(4))), 1, 8), 16, 10)
+      Hash.hexToBigint(md5(col("text").substr(i, lit(4))))
         .cast("long") % 64 === 0
     val ends = concat(
       filter(transform(filter(posSeq, isBoundary), i => i + 3),
@@ -1472,10 +1469,7 @@ object Dedup {
         .orderBy("source")
     },
     Some {
-      val h = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr(md5(substr(text, CAST(i AS INT), 4)), ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
+      val h = OracleSql.hexToBigint("md5(substr(text, CAST(i AS INT), 4))")
       s"""WITH base AS (
          |  SELECT doc_id, source, text, length(text) AS n
          |  FROM documents WHERE length(text) >= 1),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   *
   * The graph: nodes are the supplier keys (contiguous 0..N−1); each
   * node gets exactly 3 out-edges whose targets are md5-derived
-  * (`h32(src:e) mod N`, e ∈ 1..3) — both engines construct the exact
-  * same edge list from the same table, so structure is data-derived,
-  * not hardcoded.
+  * (md5-prefix hash of `src:e` mod N, e ∈ 1..3) — both engines
+  * construct the exact same edge list from the same table, so
+  * structure is data-derived, not hardcoded.
   *
   * Cross-engine exactness (PageRank is float-free): ranks are BIGINT
   * micro-units of a 10^12 total mass; the damping step is per-edge
@@ -34,18 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** md5-prefix uniform 32-bit hash (shared repo convention). */
-  private def h32(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private def h32Sql(expr: String): String = {
-    val terms = (0 until 8).map { k =>
-      val mult = 1L << (4 * (7 - k))
-      s"(strpos('0123456789abcdef', substr(md5($expr), ${1 + k}, 1)) - 1) * $mult"
-    }.mkString(" + ")
-    s"($terms)"
-  }
-
   /** Directed edge list: (src, dst), outdeg exactly 3, self-loops
     * possible by construction (they keep outdeg uniform).
     */
@@ -54,12 +42,13 @@ object Graph {
       .select(col("s_suppkey").as("src"),
         explode(sequence(lit(1), lit(3))).as("e"))
       .select(col("src"),
-        (h32(concat(col("src").cast("string"), lit(":"),
-          col("e").cast("string"))) % n).as("dst"))
+        (Hash.hexToBigint(md5(concat(col("src").cast("string"), lit(":"),
+          col("e").cast("string")))).cast("long") % n).as("dst"))
 
   private def edgesSql(n: String): String =
     s"""SELECT s_suppkey AS src,
-       |  ${h32Sql("CAST(s_suppkey AS VARCHAR) || ':' || CAST(v.e AS VARCHAR)")} % $n AS dst
+       |  ${OracleSql.hexToBigint(
+              "md5(CAST(s_suppkey AS VARCHAR) || ':' || CAST(v.e AS VARCHAR))")} % $n AS dst
        |FROM supplier, UNNEST(range(1, 4)) AS v(e)""".stripMargin
 
   private val Iters = 10

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSql, Q, Tables}
+import graft.{Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1394,7 +1394,7 @@ object Multimodal {
     (s, d) => {
       val assigned = dhashSigs(s, d)
         .withColumn("bucket",
-          (conv(substring(md5(col("sig")), 1, 8), 16, 10)
+          (Hash.hexToBigint(md5(col("sig")))
             .cast("long") % 10).cast("int"))
         .withColumn("split",
           when(col("bucket") < 8, "train")

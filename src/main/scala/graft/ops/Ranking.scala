@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSql, Q, Tables}
+import graft.{Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -273,13 +273,13 @@ object Ranking {
       val D = 1024
       val weights = s.range(D).select(
         col("id").cast("int").as("bucket"),
-        (conv(substring(md5(concat(lit("w-"), col("id"))), 1, 8), 16, 10)
+        (Hash.hexToBigint(md5(concat(lit("w-"), col("id"))))
           .cast("long") % 2001 - 1000).as("w"))
       val toks = Tables.documents(s, d)
         .select(col("doc_id"),
           explode(wsTokens(col("text"))).as("token"))
         .select(col("doc_id"),
-          (conv(substring(md5(col("token")), 1, 8), 16, 10)
+          (Hash.hexToBigint(md5(col("token")))
             .cast("long") % D).cast("int").as("bucket"))
       toks.join(broadcast(weights), "bucket")
         .groupBy("doc_id")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSql, Q, Tables}
+import graft.{Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -435,9 +435,8 @@ object Safety {
         .agg(count(lit(1)).as("cnt"))
       val bounded = per.groupBy("event_type")
         .agg(sum(least(col("cnt"), lit(cap.toLong))).as("bounded_count"))
-      val u = (conv(substring(md5(concat(lit("dp:"), col("event_type"))),
-        1, 8), 16, 10).cast("long").cast("double") + lit(0.5)) /
-        lit(4294967296.0)
+      val u = (Hash.hexToBigint(md5(concat(lit("dp:"), col("event_type"))))
+        .cast("long").cast("double") + lit(0.5)) / lit(4294967296.0)
       bounded
         .withColumn("u", u)
         // lnq in micro-units; |noise| = b * |ln(1-2|u-1/2|)|, b = 10

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSql, Q, Tables}
+import graft.{Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -96,7 +96,7 @@ object Sampling {
   val qImportanceSample = Q(
     "q_importance_sample",
     (s, d) => {
-      val u = conv(substring(md5(col("text")), 1, 8), 16, 10)
+      val u = Hash.hexToBigint(md5(col("text")))
         .cast("long").cast("double") / lit(4294967296.0)
       val p = least(lit(1.0), col("n_chars").cast("double") / lit(400.0))
       Tables.documents(s, d)
@@ -236,7 +236,7 @@ object Sampling {
     "q_weighted_reservoir",
     (s, d) => {
       // u in (0,1): (u32 + 0.5) / 2^32 — never 0, ln always defined
-      val u = (conv(substring(md5(col("text")), 1, 8), 16, 10)
+      val u = (Hash.hexToBigint(md5(col("text")))
         .cast("long").cast("double") + lit(0.5)) / lit(4294967296.0)
       // round-half-up like every other transcendental quantization in
       // the repo (floor(x*1e6+0.5)), not a truncating floor — less
@@ -301,9 +301,9 @@ object Sampling {
         .select(col("doc_id"))
         .crossJoin(broadcast(
           s.range(0, epochs).select(col("id").cast("int").as("epoch"))))
-        .withColumn("h", conv(substring(
-          md5(concat(col("epoch").cast("string"), lit(":"),
-            col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long"))
+        .withColumn("h", Hash.hexToBigint(md5(concat(
+          col("epoch").cast("string"), lit(":"),
+          col("doc_id").cast("string")))).cast("long"))
         .withColumn("shard", (col("h") % shards).cast("int"))
       keyed
         .withColumn("pos", row_number().over(
@@ -452,8 +452,8 @@ object Sampling {
           exp((col("us") - col("mx")).cast("double") / lit(tauUs)) *
             lit(1000000.0) + lit(0.5)).cast("long"))
         .withColumn("u_ppm",
-          conv(substring(md5(concat(lit("decay:"),
-            col("event_id").cast("string"))), 1, 8), 16, 10)
+          Hash.hexToBigint(md5(concat(lit("decay:"),
+            col("event_id").cast("string"))))
             .cast("long") % 1000000)
         .groupBy(date_trunc("day", col("ts")).cast("timestamp_ntz")
           .as("day"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,21 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  /** First-8-hex-chars of md5 as a uniform 32-bit value (Spark side). */
-  private def h32(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  /** Same hash in DuckDB SQL: positional hex→int64 arithmetic over
-    * `expr`'s md5 prefix (DuckDB has no conv()).
-    */
-  private def h32Sql(expr: String): String = {
-    val terms = (0 until 8).map { k =>
-      val mult = 1L << (4 * (7 - k))
-      s"(strpos('0123456789abcdef', substr(md5($expr), ${1 + k}, 1)) - 1) * $mult"
-    }.mkString(" + ")
-    s"($terms)"
-  }
-
   /** q_kmv_distinct — per-priority KMV distinct-customer estimates
     * plus the merged global sketch. k = 64; estimate = (k−1)·2^32 / m
     * where m is the k-th smallest distinct hash (floor division —
@@ -59,7 +44,8 @@ object Sketches {
       val k = 64
       val hashed = Tables.orders(s, d)
         .select(col("o_orderpriority").as("g"),
-          h32(col("o_custkey").cast("string")).as("h"))
+          Hash.hexToBigint(md5(col("o_custkey").cast("string")))
+            .cast("long").as("h"))
         .distinct()
       val topk = hashed
         .withColumn("rk", row_number().over(Window.partitionBy("g").orderBy("h")))
@@ -82,7 +68,7 @@ object Sketches {
         .orderBy("scope")
     },
     Some {
-      val h = h32Sql("CAST(o_custkey AS VARCHAR)")
+      val h = OracleSql.hexToBigint("md5(CAST(o_custkey AS VARCHAR))")
       """WITH hashed AS (
         |  SELECT DISTINCT o_orderpriority AS g, HEXPR AS h FROM orders),
         |topk AS (
@@ -126,7 +112,8 @@ object Sketches {
       val buckets = tokcnt
         .select(col("token"), col("c"), explode(sequence(lit(0), lit(3))).as("j"))
         .withColumn("b",
-          h32(concat(col("j").cast("string"), lit(":"), col("token"))) % 256)
+          Hash.hexToBigint(md5(concat(col("j").cast("string"), lit(":"),
+            col("token")))).cast("long") % 256)
       val counters = buckets.groupBy("j", "b").agg(sum(col("c")).as("tot"))
       buckets.join(broadcast(counters), Seq("j", "b"))
         .groupBy("token", "c")
@@ -137,7 +124,7 @@ object Sketches {
         .limit(20)
     },
     Some {
-      val h = h32Sql("CAST(j AS VARCHAR) || ':' || token")
+      val h = OracleSql.hexToBigint("md5(CAST(j AS VARCHAR) || ':' || token)")
       """WITH tokcnt AS (
         |  SELECT u.t AS token, count(*) AS c
         |  FROM (SELECT list_filter(string_split_regex(text, '\s+'),
@@ -173,7 +160,8 @@ object Sketches {
       val hashed = Tables.orders(s, d)
         .select(col("o_orderpriority").as("g"),
           col("o_custkey").as("key"),
-          h32(col("o_custkey").cast("string")).as("h"))
+          Hash.hexToBigint(md5(col("o_custkey").cast("string")))
+            .cast("long").as("h"))
         .distinct()
       val topk = hashed.select("g", "h").distinct()
         .withColumn("rk", row_number().over(Window.partitionBy("g").orderBy("h")))
@@ -203,7 +191,7 @@ object Sketches {
         .orderBy("g1", "g2")
     },
     Some {
-      val h = h32Sql("CAST(o_custkey AS VARCHAR)")
+      val h = OracleSql.hexToBigint("md5(CAST(o_custkey AS VARCHAR))")
       """WITH hashed AS (
         |  SELECT DISTINCT o_orderpriority AS g, o_custkey AS key,
         |    HEXPR AS h
@@ -253,7 +241,8 @@ object Sketches {
     (s, d) => {
       val m = 8192L
       def pos(key: Column, i: Int): Column =
-        h32(concat(key.cast("string"), lit(s":$i"))) % m
+        Hash.hexToBigint(md5(concat(key.cast("string"), lit(s":$i"))))
+          .cast("long") % m
       val custs = Tables.customer(s, d)
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey").as("key"))
@@ -287,7 +276,8 @@ object Sketches {
     },
     Some {
       def posSql(keyExpr: String, i: Int): String =
-        s"(${h32Sql(s"CAST($keyExpr AS VARCHAR) || ':$i'")} % 8192)"
+        s"(${OracleSql.hexToBigint(
+          s"md5(CAST($keyExpr AS VARCHAR) || ':$i')")} % 8192)"
       val bitsSel = (1 to 3)
         .map(i => s"SELECT ${posSql("key", i)} AS bit FROM custs")
         .mkString("\n  UNION\n  ")
@@ -484,7 +474,8 @@ object Sketches {
           "ELSE position('1' in lpad(bin(rem), 26, '0')) END"
       val hashed = Tables.orders(s, d)
         .select(col("o_orderpriority").as("g"),
-          h32(col("o_custkey").cast("string")).as("h"))
+          Hash.hexToBigint(md5(col("o_custkey").cast("string")))
+            .cast("long").as("h"))
         .distinct()
         .withColumn("bucket", expr("h div 67108864"))
         .withColumn("rem", expr("h % 67108864"))
@@ -544,7 +535,7 @@ object Sketches {
     * the DISTINCT here is semantics-neutral between the two.
     */
   private lazy val hllOracle: String = {
-      val h = h32Sql("CAST(o_custkey AS VARCHAR)")
+      val h = OracleSql.hexToBigint("md5(CAST(o_custkey AS VARCHAR))")
       """WITH hashed AS (
         |  SELECT g, h, h // 67108864 AS bucket, h % 67108864 AS rem
         |  FROM (SELECT DISTINCT o_orderpriority AS g, HEXPR AS h
@@ -807,7 +798,7 @@ object Sketches {
     * count-min ([[qCountMin]], min over unsigned rows — a one-sided
     * overestimate), the signed median is UNBIASED: colliding tokens
     * cancel in expectation, so err can be negative — the report keeps
-    * the sign. Both hash families are the repo's md5-prefix h32 with
+    * the sign. Both hash families are the repo's md5-prefix hash with
     * distinct salts ('b:'/'s:'), replayed verbatim by the oracle.
     *
     * 100 TB shape: the counter table is d×w = 1 280 cells total —
@@ -824,10 +815,12 @@ object Sketches {
       val buckets = tokcnt
         .select(col("token"), col("c"), explode(sequence(lit(0), lit(4))).as("j"))
         .withColumn("b",
-          h32(concat(lit("b:"), col("j").cast("string"), lit(":"), col("token"))) % 256)
+          Hash.hexToBigint(md5(concat(lit("b:"), col("j").cast("string"),
+            lit(":"), col("token")))).cast("long") % 256)
         .withColumn("sgn",
-          when(h32(concat(lit("s:"), col("j").cast("string"), lit(":"),
-            col("token"))) % 2 === 0, 1L).otherwise(-1L))
+          when(Hash.hexToBigint(md5(concat(lit("s:"), col("j").cast("string"),
+            lit(":"), col("token")))).cast("long") % 2 === 0, 1L)
+            .otherwise(-1L))
       val counters = buckets.groupBy("j", "b")
         .agg(sum(col("sgn") * col("c")).as("tot"))
       buckets.join(broadcast(counters), Seq("j", "b"))
@@ -840,8 +833,10 @@ object Sketches {
         .limit(20)
     },
     Some {
-      val hb = h32Sql("'b:' || CAST(v.j AS VARCHAR) || ':' || token")
-      val hs = h32Sql("'s:' || CAST(v.j AS VARCHAR) || ':' || token")
+      val hb = OracleSql.hexToBigint(
+        "md5('b:' || CAST(v.j AS VARCHAR) || ':' || token)")
+      val hs = OracleSql.hexToBigint(
+        "md5('s:' || CAST(v.j AS VARCHAR) || ':' || token)")
       s"""WITH tokcnt AS (
          |  SELECT u.t AS token, count(*) AS c
          |  FROM (SELECT list_filter(string_split_regex(text, '\\s+'),
@@ -896,8 +891,9 @@ object Sketches {
     "q_join_size_est",
     (s, d) => {
       val sign = (m: Int, j: Column, k: Column) =>
-        when(h32(concat(lit(s"$m:"), j.cast("string"), lit(":"),
-          k.cast("string"))) % 2 === 0, 1L).otherwise(-1L)
+        when(Hash.hexToBigint(md5(concat(lit(s"$m:"), j.cast("string"),
+          lit(":"), k.cast("string")))).cast("long") % 2 === 0, 1L)
+          .otherwise(-1L)
       val pk = Tables.part(s, d)
         .select(col("p_partkey").as("k"))
         .groupBy("k").agg(count(lit(1)).as("c"))
@@ -944,8 +940,8 @@ object Sketches {
     Some {
       def chain(m: Int): String = {
         val per = m / 4
-        val h = h32Sql(
-          s"'$m:' || CAST(v.j AS VARCHAR) || ':' || CAST(k AS VARCHAR)")
+        val h = OracleSql.hexToBigint(
+          s"md5('$m:' || CAST(v.j AS VARCHAR) || ':' || CAST(k AS VARCHAR))")
         val sgn = s"CASE WHEN $h % 2 = 0 THEN 1 ELSE -1 END"
         s"""c1_$m AS (
            |  SELECT CAST(v.j AS INT) AS j, SUM($sgn * c) AS ctr

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Exact, Q, Tables}
+import graft.{Exact, Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,6 +12,14 @@ import org.apache.spark.sql.functions._
   * bits.
   */
 object Stats {
+
+  /** Element ceil(p·n) (at least 1) of the sorted list column `vals`:
+    * the exact discrete quantile the oracles index the same way.
+    */
+  private def qAt(p: Double): Column =
+    element_at(
+      col("vals"),
+      greatest(ceil(size(col("vals")) * lit(p)), lit(1L)).cast("int"))
 
   /** q_listagg — ordered string aggregation: concat of sorted values
     * (DuckDB string_agg ORDER BY ≡ concat over a sorted collected list).
@@ -48,10 +56,6 @@ object Stats {
     "q_quantiles",
     (s, d) => {
       val sorted = sort_array(collect_list(col("o_totalprice")))
-      def qAt(p: Double): Column =
-        element_at(
-          col("vals"),
-          greatest(ceil(size(col("vals")) * lit(p)), lit(1L)).cast("int"))
       Tables
         .orders(s, d)
         .groupBy("o_orderstatus")
@@ -203,10 +207,6 @@ object Stats {
   val qApproxQuantiles = Q(
     "q_approx_quantiles",
     (s, d) => {
-      def qAt(p: Double): Column =
-        element_at(
-          col("vals"),
-          greatest(ceil(size(col("vals")) * lit(p)), lit(1L)).cast("int"))
       Tables
         .lineitem(s, d)
         .groupBy("l_returnflag")
@@ -272,10 +272,6 @@ object Stats {
   val qWinsorize = Q(
     "q_winsorize",
     (s, d) => {
-      def qAt(p: Double): Column =
-        element_at(
-          col("vals"),
-          greatest(ceil(size(col("vals")) * lit(p)), lit(1L)).cast("int"))
       val bounds = Tables.lineitem(s, d)
         .groupBy("l_returnflag")
         .agg(sort_array(collect_list(col("l_quantity"))).as("vals"))
@@ -641,8 +637,8 @@ object Stats {
         .select(col("o_orderkey"), col("cents"),
           explode(sequence(lit(0), lit(31))).as("r"))
         .withColumn("u",
-          conv(substring(md5(concat(col("o_orderkey").cast("string"),
-            lit(":"), col("r").cast("string"))), 1, 8), 16, 10)
+          Hash.hexToBigint(md5(concat(col("o_orderkey").cast("string"),
+            lit(":"), col("r").cast("string"))))
             .cast("long") % 1000000L)
         .withColumn("w",
           when(col("u") < t(0), 0L).when(col("u") < t(1), 1L)
@@ -698,10 +694,8 @@ object Stats {
         |  FROM cents)
         |SELECT mean_cents, ci_lo_cents, ci_hi_cents FROM pt, ci""".stripMargin
         .replace("HEXPR",
-          (0 until 8).map { k =>
-            val mult = 1L << (4 * (7 - k))
-            s"(strpos('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR) || ':' || CAST(v.r AS VARCHAR)), ${1 + k}, 1)) - 1) * $mult"
-          }.mkString("(", " + ", ")"))
+          OracleSql.hexToBigint(
+            "md5(CAST(o_orderkey AS VARCHAR) || ':' || CAST(v.r AS VARCHAR))"))
     )
   )
 
@@ -1544,27 +1538,14 @@ object Stats {
     )
   )
 
-  /** First-8-hex-chars of md5 as a uniform 32-bit value (the repo's
-    * shared hash convention — local copy, same as [[Sketches]]).
-    */
-  private def permH32(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private def permH32Sql(expr: String): String = {
-    val terms = (0 until 8).map { k =>
-      val mult = 1L << (4 * (7 - k))
-      s"(strpos('0123456789abcdef', substr(md5($expr), ${1 + k}, 1)) - 1) * $mult"
-    }.mkString(" + ")
-    s"($terms)"
-  }
-
   /** q_perm_test — derandomized two-sample randomization test: is the
     * en-vs-de difference in mean document length explainable by
     * chance? K = 64 pseudo-relabelings assign each doc to side A or B
-    * by the parity of h32(k:doc_id) (Fisher-style random relabeling —
-    * the sign-flip variant whose null distribution approximates the
-    * permutation null without needing fixed group sizes); the test
-    * statistic is the CROSS-MULTIPLIED mean gap |sumA·nB − sumB·nA|
+    * by the parity of the md5-prefix hash of `k:doc_id` (Fisher-style
+    * random relabeling — the sign-flip variant whose null distribution
+    * approximates the permutation null without needing fixed group
+    * sizes); the test statistic is the CROSS-MULTIPLIED mean gap
+    * |sumA·nB − sumB·nA|
     * (exact BIGINT — never a mean, so no float division diverges
     * between engines), and p_ppm = 10⁶·(1 + #{k: stat_k ≥ obs})/(K+1)
     * — the add-one Monte-Carlo estimator (Phipson & Smyth 2010), in
@@ -1594,8 +1575,8 @@ object Stats {
         .select(col("doc_id"), col("n_chars"),
           explode(sequence(lit(1), lit(64))).as("k"))
         .withColumn("side",
-          permH32(concat(col("k").cast("string"), lit(":"),
-            col("doc_id").cast("string"))) % 2)
+          Hash.hexToBigint(md5(concat(col("k").cast("string"), lit(":"),
+            col("doc_id").cast("string")))).cast("long") % 2)
         .groupBy("k")
         .agg(
           sum(when(col("side") === 0, col("n_chars"))).as("sa"),
@@ -1613,7 +1594,8 @@ object Stats {
           expr("(1 + n_ge) * 1000000 div 65").as("p_ppm"))
     },
     Some {
-      val h = permH32Sql("CAST(v.k AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)")
+      val h = OracleSql.hexToBigint(
+        "md5(CAST(v.k AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR))")
       s"""WITH xs AS (
          |  SELECT doc_id, lang, n_chars FROM documents
          |  WHERE lang IN ('en', 'de')),

@@ -2,7 +2,7 @@ package graft.ops
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.{Exact, Q, Tables}
+import graft.{Exact, Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming surface (builder-brief extension; the reference
@@ -417,7 +417,7 @@ object StreamingOps {
       val dsc   = if (j < 4) "ds0" else "ds1"
       val start = (j % 4) * 8 + 1
       array_min(transform(col(dsc),
-        m => conv(substring(m, start, 8), 16, 10).cast("long")))
+        m => Hash.hexToBigint(m, start).cast("long")))
         .as(s"h$j")
     }
     digs.select(col("doc_id") +: hs: _*)
@@ -1035,10 +1035,7 @@ object StreamingOps {
         .orderBy("day")
     },
     Some {
-      val h = (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), ${1 + k}, 1)) - 1) * $mult"
-      }.mkString("(", " + ", ")")
+      val h = OracleSql.hexToBigint("md5(CAST(user_id AS VARCHAR))")
       s"""WITH hashed AS (
          |  SELECT day, h, h // 67108864 AS bucket, h % 67108864 AS rem
          |  FROM (SELECT DISTINCT date_trunc('day', ts) AS day, $h AS h

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSql, Q, Tables}
+import graft.{Hash, OracleSql, Q, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -610,8 +610,8 @@ object TextOps {
         .withColumn("n", size(col("t")))
         .filter(col("n") >= 3)
       def u(tag: String) =
-        conv(substring(md5(concat(lit(tag), col("doc_id").cast("string"))),
-          1, 8), 16, 10).cast("long")
+        Hash.hexToBigint(md5(concat(lit(tag), col("doc_id").cast("string"))))
+          .cast("long")
       val p1 = (u("fim1-") % (col("n") - 2) + 1).cast("int")
       val withP1 = docs.withColumn("p1", p1)
       val p2 = (u("fim2-") % (col("n") - 1 - col("p1")) + col("p1") + 1)
@@ -905,9 +905,9 @@ object TextOps {
       val toks = wsTokens(col("text"))
       // ppm draw for 1-based position p of doc_id — identical text on
       // both engines (Spark lambda index is 0-based, DuckDB's 1-based)
-      def u(p: Column) = conv(substring(md5(
-        concat(col("doc_id").cast("string"), lit(":"), p.cast("string"))),
-        1, 8), 16, 10).cast("long") % 1000000L
+      def u(p: Column) = Hash.hexToBigint(md5(
+        concat(col("doc_id").cast("string"), lit(":"), p.cast("string"))))
+        .cast("long") % 1000000L
       val masked = transform(toks, (t, i) =>
         when(u(i + 1) < 150000L, lit("[MASK]")).otherwise(t))
       val dropped = filter(toks, (t, i) =>
@@ -923,10 +923,8 @@ object TextOps {
         .orderBy("doc_id")
     },
     Some {
-      val u = "(" + (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)), ${1 + k}, 1)) - 1) * $mult"
-      }.mkString(" + ") + ") % 1000000"
+      val u = OracleSql.hexToBigint(
+        "md5(CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR))") + " % 1000000"
       s"""WITH toks AS (
          |  SELECT doc_id,
          |    list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS t
@@ -976,9 +974,9 @@ object TextOps {
   val qSpanCorruption = Q(
     "q_span_corruption",
     (s, d) => {
-      def u(p: Column) = conv(substring(md5(
-        concat(col("doc_id").cast("string"), lit("#"), p.cast("string"))),
-        1, 8), 16, 10).cast("long")
+      def u(p: Column) = Hash.hexToBigint(md5(
+        concat(col("doc_id").cast("string"), lit("#"), p.cast("string"))))
+        .cast("long")
       // ONE md5 per token position: the start/length arrays both
       // derive from the same hash draw, so `us` materializes through
       // its own explode barrier first — the former shape inlined u(p)
@@ -1024,10 +1022,8 @@ object TextOps {
         .orderBy("doc_id")
     },
     Some {
-      val u = "(" + (0 until 8).map { k =>
-        val mult = 1L << (4 * (7 - k))
-        s"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || '#' || CAST(p AS VARCHAR)), ${1 + k}, 1)) - 1) * $mult"
-      }.mkString(" + ") + ")"
+      val u = OracleSql.hexToBigint(
+        "md5(CAST(doc_id AS VARCHAR) || '#' || CAST(p AS VARCHAR))")
       s"""WITH toks AS (
          |  SELECT doc_id,
          |    list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS t

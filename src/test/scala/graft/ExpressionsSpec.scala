@@ -75,7 +75,6 @@ class ExpressionsSpec extends AnyFunSuite with SessionSuite {
   }
 
   test("expressions are SQL-registered and codegen survives wholestage") {
-    GraftFunctions.register(spark)
     val row = spark
       .sql(s"""SELECT hamming_distance('1100', '1001') AS d,
               |  unix_micros(filetime_to_timestamp(${shift * 10L})) AS e
@@ -86,9 +85,9 @@ class ExpressionsSpec extends AnyFunSuite with SessionSuite {
   }
 
   test("dot_product_q matches the higher-order form incl. null semantics") {
-    GraftFunctions.register(spark)
-    // value, length-mismatch → NULL, null-element → NULL, both codegen
-    // (collect) and the HOF reference computed in the same query
+    // value, length-mismatch → NULL, null-element → NULL over literals:
+    // constant folding evaluates them, so this checks the interpreted
+    // path; the agreement test below runs the same cases through codegen
     val rows = spark.sql(
       """SELECT
         |  dot_product_q(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS v,
@@ -102,33 +101,32 @@ class ExpressionsSpec extends AnyFunSuite with SessionSuite {
     assert(rows.getLong(0) === 32L)
     assert(rows.getLong(0) === rows.getLong(1))
     assert(rows.isNullAt(2) && rows.isNullAt(3) && rows.isNullAt(4))
-    // interpreted path (eval) agrees with codegen
-    val e = graft.functions.DotProductQ(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Seq(2L, 3L), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType)),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Seq(5L, 7L), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType)))
-    assert(e.eval(null) === 31L)
   }
 
   test("dot_product_q equals the HOF form on random vectors (property)") {
-    GraftFunctions.register(spark)
     // elements within the 1e-6 quantization contract (|e| ≤ 2^21)
     val gen = Gen.listOfN(64, Gen.choose(-2097152L, 2097152L))
     val vecs = (0 until 60).flatMap(i =>
       gen.apply(Gen.Parameters.default, Seed(7L + i)))
     import spark.implicits._
-    val df = vecs.grouped(2).collect { case scala.collection.Seq(a, b) =>
-      (a, b)
-    }.toSeq.toDF("a", "b")
-    val rows = df.selectExpr(
-      "dot_product_q(a, b) AS fused",
-      """aggregate(zip_with(a, b, (x, y) -> x * y), 0L,
-        |  (acc, x) -> acc + x) AS hof""".stripMargin).collect()
+    val df = viaParquet(vecs.grouped(2).zipWithIndex.collect {
+      case (scala.collection.Seq(a, b), i) => (i, a, b)
+    }.toSeq.toDF("i", "a", "b"))
+    val fused = df.selectExpr("i", "dot_product_q(a, b) AS v")
+    assert(wholeStageExprs(fused).contains(classOf[graft.functions.DotProductQ]))
+    // the HOF reference with FuseDotProduct off, which would otherwise
+    // rewrite it into dot_product_q as well
+    val hof = withConf("spark.sql.optimizer.excludedRules",
+        FuseDotProduct.ruleName) {
+      val h = df.selectExpr("i",
+        """aggregate(zip_with(a, b, (x, y) -> x * y), 0L,
+          |  (acc, x) -> acc + x) AS v""".stripMargin)
+      assert(!wholeStageExprs(h).contains(classOf[graft.functions.DotProductQ]))
+      h.collect()
+    }
+    val rows = withConf("spark.sql.codegen.fallback", "false")(fused.collect())
     assert(rows.length === 30)
-    rows.foreach(r => assert(r.getLong(0) === r.getLong(1)))
+    assert(rows.sortBy(_.getInt(0)).toSeq === hof.sortBy(_.getInt(0)).toSeq)
   }
 
   test("chars_in_ranges equals the length(regexp_replace) idiom it replaces") {
@@ -263,60 +261,94 @@ class ExpressionsSpec extends AnyFunSuite with SessionSuite {
     assert(er.getString(2) === "0" * 16) // every bit votes -1 → '0'
   }
 
+  /** `df` written to parquet in a temp dir and read back: a relation
+    * that is neither local nor foldable. Over a local relation Spark's
+    * ConvertToLocalRelation evaluates a projection during optimization
+    * with an interpreted projection, so a query over `Seq(...).toDF`
+    * never runs generated code.
+    */
+  private def viaParquet(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("expr-spec")
+      .resolve("in").toString
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** The classes of the expressions inside whole-stage codegen stages of
+    * `df`'s executed plan.
+    */
+  private def wholeStageExprs(df: org.apache.spark.sql.DataFrame): Set[Class[_]] =
+    df.queryExecution.executedPlan.collect {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+    }.flatMap(_.child.collect { case p => p.expressions }.flatten)
+      .flatMap(_.collect { case e => e.getClass }).toSet
+
   test("interpreted eval agrees with codegen for every fused kernel") {
-    // codegen (DataFrame collect) vs the interpreted nullSafeEval path —
-    // the path Spark falls back to when a plan exceeds codegen limits;
-    // a divergence would corrupt results silently only on wide plans
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+    // codegen (a whole-stage projection over parquet, fallback off) vs
+    // the interpreted nullSafeEval path (eval over literals) — the path
+    // Spark falls back to when a plan exceeds codegen limits; a
+    // divergence would corrupt results silently only on wide plans
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import graft.functions._
     import spark.implicits._
 
     val gram  = "the quick 中文 brown 🎉 fox"
     val grams = Seq("the quick brown fox", "jumps over", "the lazy dog",
       "中文漢字", "", "aaaa")
     val toks = Seq("a", "b", "a", "b", "a", "c")
-
-    val cg = Seq(gram).toDF("g")
+    val ranges = Seq((0x61, 0x7a), (0x4e00, 0x9fff))
+    // hamming: equal and unequal lengths; dot product: a value, a length
+    // mismatch, a null element (winnow_stats needs ≥ 16 code points of g)
+    val in = viaParquet(Seq(
+      (0, gram, "0110", "1100", Seq(Option(2L), Option(3L)),
+        Seq(Option(5L), Option(7L))),
+      (1, "aaaa" * 5, "abc", "abcd", Seq(Option(1L), Option(2L)),
+        Seq(Option(1L))),
+      (2, "中文字 漢字 text 🎉 tail", "中文", "中字", Seq(Option(1L), None),
+        Seq(Option(1L), Option(1L)))
+    ).toDF("id", "g", "ha", "hb", "va", "vb")
       .withColumn("grams", typedLit(grams))
-      .withColumn("t", typedLit(toks))
-      .select(
-        GraftFunctions.minhash_slices(col("g")).as("mh"),
-        GraftFunctions.simhash16(col("grams")).as("sh"),
-        GraftFunctions.gram_run_stats(col("t"), 2).as("rs"),
-        GraftFunctions.chars_in_ranges(col("g"),
-          Seq((0x61, 0x7a), (0x4e00, 0x9fff))).as("cr"))
-      .collect()(0)
+      .withColumn("t", typedLit(toks)))
 
-    val mhE = graft.functions.MinhashSlices(Literal.create(gram, StringType))
-      .eval(null).asInstanceOf[ArrayData].toLongArray.toSeq
-    assert(mhE === cg.getSeq[Long](0), "minhash_slices eval vs codegen")
+    // each kernel over its input columns, given how to read a column
+    val kernels: Seq[(String, (String => Expression) => Expression)] = Seq(
+      "minhash_slices" -> (c => MinhashSlices(c("g"))),
+      "simhash16" -> (c => Simhash16(c("grams"))),
+      "gram_run_stats" -> (c => GramRunStats(c("t"), 2)),
+      "chars_in_ranges" -> (c => CountCharsInRanges(c("g"), ranges)),
+      "winnow_stats" -> (c => WinnowStats(c("g"))),
+      "hamming_distance" -> (c => HammingDistance(c("ha"), c("hb"))),
+      "dot_product_q" -> (c => DotProductQ(c("va"), c("vb"))))
 
-    val shE = graft.functions.Simhash16(
-      Literal.create(grams, ArrayType(StringType))).eval(null).toString
-    assert(shE === cg.getString(1), "simhash16 eval vs codegen")
-
-    val rsE = graft.functions.GramRunStats(
-      Literal.create(toks, ArrayType(StringType)), 2)
-      .eval(null).asInstanceOf[ArrayData].toLongArray.toSeq
-    assert(rsE === cg.getSeq[Long](2), "gram_run_stats eval vs codegen")
-
-    val crE = graft.functions.CountCharsInRanges(
-      Literal.create(gram, StringType), Seq((0x61, 0x7a), (0x4e00, 0x9fff)))
-      .eval(null)
-    assert(crE === cg.getInt(3), "chars_in_ranges eval vs codegen")
-
-    val wg = Seq(gram).toDF("g")
-      .select(GraftFunctions.winnow_stats(col("g")).as("ws"))
-      .select(col("ws.n_grams"), col("ws.n_fp"), col("ws.min_fp"))
-      .collect()(0)
-    val wsE = graft.functions.WinnowStats(Literal.create(gram, StringType))
-      .eval(null).asInstanceOf[
-        org.apache.spark.sql.catalyst.InternalRow]
-    assert(wsE.getLong(0) === wg.getLong(0), "winnow_stats n_grams")
-    assert(wsE.getLong(1) === wg.getLong(1), "winnow_stats n_fp")
-    assert(wsE.getUTF8String(2).toString === wg.getString(2),
-      "winnow_stats min_fp")
+    val df = in.select(col("*") +: kernels.map { case (name, k) =>
+      ColumnBridge.column(k(n => ColumnBridge.expression(col(n)))).as(name)
+    }: _*)
+    val fused = wholeStageExprs(df)
+    kernels.foreach { case (name, k) =>
+      val cls = k(n => ColumnBridge.expression(col(n))).getClass
+      assert(fused.contains(cls), s"$name is not in a whole-stage codegen stage")
+    }
+    val cg = withConf("spark.sql.codegen.fallback", "false")(df.collect())
+      .sortBy(_.getAs[Int]("id"))
+    assert(cg.length === 3)
+    cg.foreach { row =>
+      val literal = (n: String) =>
+        Literal.create(row.getAs[Any](n), in.schema(n).dataType)
+      kernels.foreach { case (name, k) =>
+        val e = k(literal)
+        val interpreted =
+          CatalystTypeConverters.convertToScala(e.eval(null), e.dataType)
+        assert(interpreted === row.getAs[Any](name),
+          s"$name eval vs codegen on row ${row.getAs[Int]("id")}")
+      }
+    }
+    // the new inputs reach every branch of their kernels
+    assert(cg.map(_.getAs[Int]("hamming_distance")).toSeq === Seq(2, -1, 1))
+    assert(cg.map(r => Option(r.getAs[Any]("dot_product_q"))).toSeq ===
+      Seq(Some(31L), None, None))
   }
 
   test("winnow_stats equals the array formulation it replaced (property)") {
@@ -370,13 +402,16 @@ class ExpressionsSpec extends AnyFunSuite with SessionSuite {
       ("ßü", "ßu", 0.7777777777777778),
       ("中文字", "中字文", 0.9222222222222223)
     )
-    val rows = vectors.map { case (a, b, _) => (a, b) }.toDF("a", "b")
-      .select(GraftFunctions.jaro_winkler(col("a"), col("b")).as("jw"))
-      .collect().map(_.getDouble(0))
+    val jw = viaParquet(vectors.zipWithIndex.map { case ((a, b, _), i) =>
+      (i, a, b) }.toDF("i", "a", "b"))
+      .select(col("i"), GraftFunctions.jaro_winkler(col("a"), col("b")))
+    assert(wholeStageExprs(jw).contains(classOf[graft.functions.JaroWinkler]))
+    val rows = withConf("spark.sql.codegen.fallback", "false")(jw.collect())
+      .sortBy(_.getInt(0)).map(_.getDouble(1))
     rows.zip(vectors).foreach { case (got, (a, b, want)) =>
       assert(math.abs(got - want) < 1e-12, s"('$a', '$b'): $got vs $want")
     }
-    // interpreted eval agrees with codegen (collect used codegen)
+    // interpreted eval agrees with the same values
     vectors.foreach { case (a, b, want) =>
       val e = graft.functions.JaroWinkler(
         org.apache.spark.sql.catalyst.expressions.Literal(a),
@@ -393,7 +428,6 @@ class ExpressionsSpec extends AnyFunSuite with SessionSuite {
 
   test("SQL surface of the parameterized kernels equals the Column API") {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     spark.range(0, 50)
       .selectExpr("concat('doc ', id, ' aaa#b\tx aaa aaa') AS text")
       .createOrReplaceTempView("kernel_sql_t")

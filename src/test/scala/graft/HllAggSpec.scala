@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftFunctions, HllKernel, HllSketchAgg}
+import graft.functions.{HllKernel, HllSketchAgg}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The native HLL aggregate ([[HllSketchAgg]], SQL name `graft_hll`):
@@ -88,7 +88,7 @@ class HllAggSpec extends AnyFunSuite with SessionSuite {
     assert(one === many)
   }
 
-  test("SQL surface: extensions hook and temp function; partial-agg plan") {
+  test("SQL surface: extensions hook; partial-agg plan") {
     Tables.orders(spark, sf).createOrReplaceTempView("orders_hll_t")
     // extensions-injected (Sessions.local installs GraftExtensions)
     val viaExt = spark
@@ -97,12 +97,6 @@ class HllAggSpec extends AnyFunSuite with SessionSuite {
     assert(plan.contains("ObjectHashAggregate"), plan)
     assert(plan.toLowerCase.contains("partial_graft_hll"), plan)
     val e1 = viaExt.head().getLong(0)
-    // temp-function path (GraftFunctions.register)
-    GraftFunctions.register(spark)
-    val e2 = spark
-      .sql("SELECT graft_hll(CAST(o_custkey AS STRING)) AS e FROM orders_hll_t")
-      .head().getLong(0)
-    assert(e1 === e2)
     val exact = Tables.orders(spark, sf)
       .select(countDistinct(col("o_custkey"))).head().getLong(0)
     // m=64 standard error ~13%; assert a loose sanity band
